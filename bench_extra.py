@@ -67,8 +67,10 @@ def write_plans(names, when="before"):
         df = qs[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
+        # binary literals print raw NUL bytes, which make the dump read
+        # as a binary file to diff and grep
         with open(f"plans/r06/{name}_{when}.txt", "w") as fh:
-            fh.write(plan)
+            fh.write(plan.replace("\0", ""))
         print(f"wrote plans/r06/{name}_{when}.txt", flush=True)
     spark.stop()
 

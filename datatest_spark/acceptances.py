@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from .caching import CacheHandle, evict_all
 from .differences import BaseDifference, Deviation, Extra, Invalid, Missing
-from .schema import DEVIATION, EXTRA, INVALID, MISSING
+from .schema import DEVIATION, EXTRA, INVALID, MISSING, local_frame
 
 __all__ = ["accepted", "BaseAcceptance"]
 
@@ -428,7 +428,8 @@ class AcceptedDifferences(BaseAcceptance):
 
         counts = collections.Counter((k, fp) for k, fp, _ in rows)
         unlimited = {(k, fp) for k, fp, u in rows if u}
-        allow = spark.createDataFrame(
+        allow = local_frame(
+            spark,
             [
                 (k, fp, n, (k, fp) in unlimited)
                 for (k, fp), n in counts.items()
@@ -468,8 +469,8 @@ class AcceptedDifferences(BaseAcceptance):
         )
         if class_rows:
             cls = F.broadcast(
-                spark.createDataFrame(
-                    class_rows, "cls_key string, cls_type string"
+                local_frame(
+                    spark, class_rows, "cls_key string, cls_type string"
                 )
             )
             v = v.join(

@@ -45,7 +45,7 @@ from pyspark.sql import types as T
 from .requirements import Rule, ValidationContext, finalize_cols
 from .schema import DEVIATION, INVALID, VIOLATION_SCHEMA
 
-__all__ = ["decode_batch", "decode_info", "AudioConsistencyRule",
+__all__ = ["decode_info", "AudioConsistencyRule",
            "audio_consistency", "pcm_snr_db", "audio_features",
            "AUDIO_FEATURES_SCHEMA", "spectral_signature",
            "spectral_signatures", "audio_neardup_pairs",
@@ -213,39 +213,6 @@ DECODE_INFO_SCHEMA = T.StructType(
 )
 
 
-def decode_batch(pdf: pd.DataFrame, expected_pcm_fn=None) -> pd.DataFrame:
-    """Decode one Arrow batch of clips → decode-info rows."""
-    import hashlib
-
-    out = []
-    has_part = "part_id" in pdf.columns
-    for row in pdf.itertuples(index=False):
-        clip_id = row.clip_id
-        part = str(getattr(row, "part_id")) if has_part else None
-        try:
-            codec, sr, pcm = decode_bytes(row.bytes)
-            dur_ms = int(round(1000.0 * len(pcm) / sr)) if sr else None
-            rms = float(np.sqrt(np.mean(pcm.astype(np.float64) ** 2))) if len(pcm) else 0.0
-            # zero-copy hash: a contiguous "<i2" view's buffer IS the
-            # bytes astype(...).tobytes() would have copied out
-            sha = hashlib.sha256(pcm).hexdigest()
-            snr = None
-            if expected_pcm_fn is not None:
-                ref = expected_pcm_fn(row)
-                if ref is not None:
-                    snr = pcm_snr_db(pcm, ref)
-            out.append(
-                (clip_id, True, None, codec, sr, dur_ms, len(pcm), rms, sha,
-                 row.sr_hz, row.dur_ms, row.codec, snr, part)
-            )
-        except ValueError as e:
-            out.append(
-                (clip_id, False, str(e), None, None, None, None, None, None,
-                 row.sr_hz, row.dur_ms, row.codec, None, part)
-            )
-    return pd.DataFrame(out, columns=[f.name for f in DECODE_INFO_SCHEMA.fields])
-
-
 def _binary_views(arr, n_rows):
     """Zero-copy per-row ``memoryview`` slices of a pyarrow
     Binary/String array (+ validity bools) — no per-row ``bytes``
@@ -306,7 +273,7 @@ def decode_info(df: DataFrame, with_snr: bool = False,
         cols.append("part_id")
 
     base_names = {f.name for f in DECODE_INFO_SCHEMA.fields}
-    carried = [c for c in (carry or [])
+    carried = [c for c in dict.fromkeys(carry or [])
                if c in df.columns and c not in cols and c not in base_names]
     out_schema = T.StructType(
         list(DECODE_INFO_SCHEMA.fields)
@@ -387,13 +354,6 @@ def decode_info(df: DataFrame, with_snr: bool = False,
             yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
     return df.select(*cols).mapInArrow(gen, out_schema)
-
-
-def _fixture_expected_pcm(row):
-    """Reference PCM for SNR checks: regenerates the fixture's seeded
-    sinusoid from clip_id (see fixtures.py — parameters are a pure
-    function of the clip index, so the oracle needs no second table)."""
-    return _fixture_expected_pcm_by_id(row.clip_id)
 
 
 def _fixture_expected_pcm_by_id(clip_id):

@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..schema import local_frame
+
 __all__ = [
     "EOW",
     "word_counts",
@@ -185,9 +187,7 @@ def bpe_train(df: DataFrame, column: str, num_merges: int = 200,
         (k, left, right, cnt)
         for k, (left, right, cnt) in enumerate(merges)
     ]
-    if not data:
-        return spark.createDataFrame([], MERGES_SCHEMA)
-    return spark.createDataFrame(data, MERGES_SCHEMA)
+    return local_frame(spark, data, MERGES_SCHEMA)
 
 
 def bpe_encode_word(word: str, ranks: dict) -> List[str]:

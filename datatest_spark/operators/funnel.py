@@ -54,6 +54,8 @@ from typing import Callable, Mapping, Optional
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..schema import local_frame
+
 __all__ = ["curation_funnel"]
 
 
@@ -192,5 +194,5 @@ def curation_funnel(df: DataFrame, eval_df: Optional[DataFrame] = None,
         n_out = int(agg_row[col] or 0)
         rows.append((name, prev, n_out))
         prev = n_out
-    return spark.createDataFrame(
-        rows, "stage string, rows_in long, rows_out long")
+    return local_frame(
+        spark, rows, "stage string, rows_in long, rows_out long")

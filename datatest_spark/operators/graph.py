@@ -46,6 +46,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schema import local_frame
+
 __all__ = ["connected_components", "dedup_clusters"]
 
 #: rounds after which non-convergence is a bug, not a big graph
@@ -118,11 +120,12 @@ def _fingerprint(edges: DataFrame) -> tuple:
     return row["n"], row["h"]
 
 
-def _union_find_labels(edge_rows) -> list:
+def _union_find_labels(edge_rows) -> dict:
     """Driver-side union-find with min-id labels — the small-graph
     physical strategy.  Path-halving + union-by-choosing-the-smaller
     root keeps the root the component MINIMUM, so labels are
-    bit-identical to the distributed loop's fixpoint."""
+    bit-identical to the distributed loop's fixpoint.  Returns the
+    labels as columns: ``{"node": [...], "component": [...]}``."""
     parent: dict = {}
 
     def find(x):
@@ -145,7 +148,8 @@ def _union_find_labels(edge_rows) -> list:
                 ra, rb = rb, ra
             parent[rb] = ra
 
-    return [(node, find(node)) for node in parent]
+    nodes = list(parent)
+    return {"node": nodes, "component": [find(n) for n in nodes]}
 
 
 def connected_components(pairs: DataFrame, src: str = "id_a",
@@ -193,7 +197,10 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
         # toLocalIterator: the iterator fetches partitions SEQUENTIALLY
         # (one mini-job each — dozens of scheduling round-trips for a
         # graph this small); the edge list is ≤ threshold rows by the
-        # measured gate, so a single collect is bounded and ~10x faster
+        # measured gate, so a single collect is bounded and ~10x faster.
+        # The labels go back the same way, as Arrow columns: a local
+        # relation the JVM holds, so the joins that read it start no
+        # Python worker
         pdf = edges.toPandas()
         labels = _union_find_labels(
             zip(pdf["a"].tolist(), pdf["b"].tolist())
@@ -205,7 +212,7 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
         out_schema = edges.select(
             F.col("a").alias("node"), F.col("a").alias("component")
         ).schema
-        out = spark.createDataFrame(labels, out_schema)
+        out = local_frame(spark, labels, out_schema)
         # the labels are driver-materialized — nothing downstream
         # reads the checkpointed edge cache; release it now instead of
         # pinning up to threshold-many cached rows per call

@@ -48,6 +48,7 @@ from typing import Mapping, Optional
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schema import local_frame
 from .split import split_bucket
 
 __all__ = ["bucket_int", "mixture_plan", "mixture_sample",
@@ -83,8 +84,8 @@ def _plan(df: DataFrame, strata_col: str,
     if any(w <= 0 for w in weights.values()):
         raise ValueError("weights must be positive; omit a stratum to "
                          "drop it")
-    wdf = spark.createDataFrame(
-        [(k, float(v)) for k, v in weights.items()],
+    wdf = local_frame(
+        spark, [(k, float(v)) for k, v in weights.items()],
         f"{strata_col} string, weight double")
     # size_col switches the budget unit from rows to a per-row size
     # (tokens, n_chars, dur_ms): the mixture real pipelines specify —

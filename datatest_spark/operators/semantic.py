@@ -55,6 +55,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..schema import local_frame
+
 __all__ = ["kmeans_assign", "semantic_dedup", "semantic_dedup_recall"]
 
 
@@ -279,5 +281,6 @@ def semantic_dedup_recall(df: DataFrame, column: str = "embedding",
                    .filter("is_dup").count())
         rows.append((int(k), n_exact, n_found,
                      (n_found / n_exact) if n_exact else None))
-    return spark.createDataFrame(
-        rows, "n_clusters int, n_exact long, n_found long, recall double")
+    return local_frame(
+        spark, rows,
+        "n_clusters int, n_exact long, n_found long, recall double")

@@ -13,6 +13,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..schema import local_frame
+
 __all__ = [
     "token_stats",
     "text_quality",
@@ -198,9 +200,7 @@ def unigram_logprob(df: DataFrame, column: str, id_col: str = "doc_id",
         counts.unpersist()
 
     denom = float(n_total + v_full + 1)
-    vocab = spark.createDataFrame(
-        vocab_rows or [(None, 0)], "tok string, c long"
-    ).where(F.col("tok").isNotNull())
+    vocab = local_frame(spark, vocab_rows, "tok string, c long")
 
     lp = F.log((F.coalesce(F.col("c"), F.lit(0)) + F.lit(1)).cast("double")
                / F.lit(denom))

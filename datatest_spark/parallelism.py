@@ -33,7 +33,9 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     sc = df.sparkSession.sparkContext
     target = int(min_parts) if min_parts else sc.defaultParallelism
     try:
-        cur = df.rdd.getNumPartitions()
+        # read the count on the JVM side: ``df.rdd`` would wrap the plan
+        # in a Python-row RDD only to ask it how many partitions it has
+        cur = df._jdf.rdd().getNumPartitions()
     except Exception:  # pragma: no cover - defensive (unresolvable plan)
         return df
     if cur >= target:

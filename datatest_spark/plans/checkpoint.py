@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..requirements import Rule
+from ..schema import local_frame
 from ..validation import Engine
 
 __all__ = ["run_checkpointed", "CheckpointedRun", "GLOBAL_PARTITION"]
@@ -251,7 +252,7 @@ def run_checkpointed(
                 now,
             )
         )
-    verdict_df = spark.createDataFrame(verdict_rows, VERDICT_SCHEMA)
+    verdict_df = local_frame(spark, verdict_rows, VERDICT_SCHEMA)
     verdict_df.write.mode("append").parquet(verdict_path)
 
     all_verdicts = spark.read.parquet(verdict_path).filter(

@@ -40,6 +40,7 @@ from .schema import (
     MISSING,
     VIOLATION_SCHEMA,
     finalize_violations,
+    local_frame,
     py_repr,
     repr_col,
     violation_struct,
@@ -518,7 +519,7 @@ def _literal_df(spark: SparkSession, values: Iterable[Any]) -> DataFrame:
             T.StructField("is_num", T.BooleanType(), False),
         ]
     )
-    return spark.createDataFrame(_literal_rows(values), schema)
+    return local_frame(spark, _literal_rows(values), schema)
 
 
 def _match_key_col(col: Column) -> Column:
@@ -889,7 +890,7 @@ class SequenceRule(Rule):
                 T.StructField("_in_req", T.BooleanType(), False),
             ]
         )
-        req = F.broadcast(ctx.spark.createDataFrame(rows, schema))
+        req = F.broadcast(local_frame(ctx.spark, rows, schema))
         j = actual.join(req, "_idx", "full_outer")
 
         both_num = F.col("_exp_is_num") & F.col("_actual_num").isNotNull()
@@ -1131,7 +1132,7 @@ class MappingRule(Rule):
                     T.StructField("_exp_is_num", T.BooleanType(), False),
                 ]
             )
-            req = F.broadcast(spark.createDataFrame(rows, schema))
+            req = F.broadcast(local_frame(spark, rows, schema))
             data = df.select(
                 repr_col(F.col(key)).alias("_key"),
                 F.col(column).alias("_actual"),
@@ -1183,7 +1184,8 @@ class MappingRule(Rule):
                 for k, v in self.requirement.items()
             ]
             all_req = F.broadcast(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     all_req_rows,
                     T.StructType(
                         [
@@ -1589,8 +1591,6 @@ class SchemaRule(Rule):
         return aliases.get(t, t)
 
     def plan(self, ctx: ValidationContext) -> DataFrame:
-        from .schema import empty_violations
-
         actual = {f.name: f.dataType.simpleString() for f in ctx.df.schema.fields}
         rows = []
         for col, want in self.required.items():
@@ -1606,9 +1606,7 @@ class SchemaRule(Rule):
                 if col not in self.required:
                     rows.append((self.rule_id, None, col, EXTRA,
                                  actual[col], None, None, None, None))
-        if not rows:
-            return empty_violations(ctx.spark)
-        return ctx.spark.createDataFrame(rows, VIOLATION_SCHEMA)
+        return local_frame(ctx.spark, rows, VIOLATION_SCHEMA)
 
 
 def schema_matches(required, exact=False, rule_id=None):

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from . import requirements as R
 from .requirements import Rule, ValidationContext
+from .schema import local_frame
 
 __all__ = [
     "sample_predicate",
@@ -262,8 +263,8 @@ def sampled_verdicts(
         vcounts = violations.groupBy("rule_id").agg(
             F.count(F.lit(1)).alias("violations")
         )
-        ids = spark.createDataFrame(
-            [(r.rule_id,) for r in plan_rules], "rule_id string"
+        ids = local_frame(
+            spark, [(r.rule_id,) for r in plan_rules], "rule_id string"
         )
         parts.append(
             ids.crossJoin(F.broadcast(n_df))

@@ -26,7 +26,7 @@ agree; see ``repr_col``.
 from __future__ import annotations
 
 import math
-from typing import Any, Optional
+from typing import Any, Mapping, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -41,6 +41,7 @@ __all__ = [
     "DEVIATION",
     "repr_col",
     "violation_struct",
+    "local_frame",
     "empty_violations",
     "finalize_violations",
 ]
@@ -135,8 +136,48 @@ def violation_struct(
     )
 
 
+def local_frame(
+    spark,
+    rows: Union[Sequence[Sequence[Any]], Mapping[str, Sequence[Any]]],
+    schema: Union[T.StructType, str],
+) -> DataFrame:
+    """A DataFrame over driver-held values, built as an Arrow table.
+
+    ``rows`` is either a sequence of row tuples in field order or a
+    mapping of field name to column values (a list, a numpy array or a
+    pandas Series); pass columns when the caller already holds them, so
+    no tuples are built only to be taken apart again.  ``schema`` is
+    required, as a ``StructType`` or a DDL string: it is never inferred
+    from the values.  Arrow converts each value to its field's type
+    (an int into a double field becomes a float; ``None`` becomes
+    null) and raises on a value it cannot convert, such as a string in
+    a numeric field, or a null in a non-nullable field.
+
+    The frame plans as a ``LocalTableScan``: the JVM holds the rows
+    and knows their size, so no action over it starts a Python worker.
+    ``createDataFrame`` over Python rows would plan a ``Scan
+    ExistingRDD`` over a parallelized Python RDD instead, which forks
+    Python workers on every action that reads it.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(rows, Mapping):
+        columns = [rows[name] for name in arrow_schema.names]
+    else:
+        columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def empty_violations(spark) -> DataFrame:
-    return spark.createDataFrame([], VIOLATION_SCHEMA)
+    return local_frame(spark, [], VIOLATION_SCHEMA)
 
 
 def finalize_violations(df: DataFrame) -> DataFrame:

@@ -356,6 +356,8 @@ def _apply_row_deletes(spark, plan: dict):
     """
     from pyspark.sql import functions as F
 
+    from ..schema import local_frame
+
     df = (
         spark.read.schema(plan["schema_ddl"]).parquet(*plan["files"])
         .withColumn("__dt_fp", _norm_fp(F.col("_metadata.file_path")))
@@ -363,8 +365,9 @@ def _apply_row_deletes(spark, plan: dict):
     )
     # per-row data-file sequence number: tiny (path → seq) broadcast
     # join — the file list is driver-scale by this module's stated scope
-    seq_df = spark.createDataFrame(
-        list(plan["data_seq"].items()), "__dt_fp string, __dt_dseq bigint")
+    seq_df = local_frame(
+        spark, list(plan["data_seq"].items()),
+        "__dt_fp string, __dt_dseq bigint")
     df = df.join(F.broadcast(seq_df), "__dt_fp", "left")
 
     if plan["position_deletes"]:
@@ -434,10 +437,12 @@ def read_iceberg(spark, table_path: str, snapshot_id: Optional[int] = None,
     applied as anti-joins (:func:`_apply_row_deletes`)."""
     from pyspark.sql import functions as F
 
+    from ..schema import local_frame
+
     plan = plan_files(table_path, snapshot_id=snapshot_id,
                       partition_filters=partition_filters)
     if not plan["files"]:
-        df = spark.createDataFrame([], plan["schema_ddl"])
+        df = local_frame(spark, [], plan["schema_ddl"])
     elif plan["position_deletes"] or plan["equality_deletes"]:
         df = _apply_row_deletes(spark, plan)
     else:
@@ -577,10 +582,12 @@ def read_iceberg_incremental(spark, table_path: str,
     validate-only-the-delta mode for snapshot-per-ingest-batch
     tables).  Schema comes from the table metadata, so an empty range
     still returns the correctly-typed empty frame."""
+    from ..schema import local_frame
+
     plan = incremental_files(table_path, from_snapshot_id,
                              to_snapshot_id, allow_deletes=allow_deletes)
     if not plan["files"]:
-        df = spark.createDataFrame([], plan["schema_ddl"])
+        df = local_frame(spark, [], plan["schema_ddl"])
     else:
         df = spark.read.schema(plan["schema_ddl"]).parquet(*plan["files"])
     return df.select(*columns) if columns else df
@@ -1069,6 +1076,8 @@ def validate_schema_evolution(spark, table_path: str):
     change, detail, compatible)``; empty (same schema) when the table
     never evolved.
     """
+    from ..schema import local_frame
+
     hist = schema_history(table_path)
     rows = []
     for prev, cur in zip(hist, hist[1:]):
@@ -1101,7 +1110,8 @@ def validate_schema_evolution(spark, table_path: str):
                              f"{'required' if ro else 'optional'}->"
                              f"{'required' if rn else 'optional'}",
                              ro and not rn))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "from_schema_id int, to_schema_id int, column string, "
         "change string, detail string, compatible boolean")

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .requirements import Rule, ValidationContext, finalize_cols
-from .schema import DEVIATION
+from .schema import DEVIATION, VIOLATION_SCHEMA, local_frame
 
 __all__ = [
     "profile",
@@ -788,7 +788,7 @@ class _BucketDriftRule(Rule):
         edges, props = self._edges_props()
         n_buckets = len(edges) + 1
         if n_buckets < 2:
-            return ctx.spark.createDataFrame([], "x string").select(
+            return local_frame(ctx.spark, [], "x string").select(
                 finalize_cols(self.rule_id, DEVIATION)
             ).limit(0)
 
@@ -805,7 +805,8 @@ class _BucketDriftRule(Rule):
             from .schema import empty_violations
 
             return empty_violations(ctx.spark)
-        return ctx.spark.createDataFrame(
+        return local_frame(
+            ctx.spark,
             [
                 (
                     self.rule_id,
@@ -819,9 +820,7 @@ class _BucketDriftRule(Rule):
                     None,
                 )
             ],
-            "rule_id string, key string, column string, diff_type string, "
-            "invalid string, expected string, deviation double, "
-            "expected_num double, partition_id string",
+            VIOLATION_SCHEMA,
         )
 
 
@@ -1065,7 +1064,8 @@ class ApproxUniqueRule(Rule):
             from .schema import empty_violations
 
             return empty_violations(ctx.spark)
-        return ctx.spark.createDataFrame(
+        return local_frame(
+            ctx.spark,
             [(
                 self.rule_id,
                 None,
@@ -1077,9 +1077,7 @@ class ApproxUniqueRule(Rule):
                 float(self.max_dup_rate),
                 None,
             )],
-            "rule_id string, key string, column string, diff_type string, "
-            "invalid string, expected string, deviation double, "
-            "expected_num double, partition_id string",
+            VIOLATION_SCHEMA,
         )
 
 

@@ -44,6 +44,7 @@ from .schema import (
     VIOLATION_SCHEMA,
     empty_violations,
     finalize_violations,
+    local_frame,
 )
 
 __all__ = [
@@ -378,7 +379,7 @@ def _local_to_df(data):
         return spark.createDataFrame(data), None, None
     if pd is not None and isinstance(data, pd.Series):
         if len(data) == 0:
-            return spark.createDataFrame([], "value string"), "value", None
+            return local_frame(spark, [], "value string"), "value", None
         return (
             spark.createDataFrame([(v,) for v in data], ["value"]),
             "value", None,
@@ -386,12 +387,12 @@ def _local_to_df(data):
     if isinstance(data, Mapping):
         rows = [(k, v) for k, v in data.items()]
         if not rows:
-            return (spark.createDataFrame([], "key string, value string"),
+            return (local_frame(spark, [], "key string, value string"),
                     "value", "key")
         return spark.createDataFrame(rows, ["key", "value"]), "value", "key"
     rows = [(v,) for v in data]
     if not rows:
-        return spark.createDataFrame([], "value string"), "value", None
+        return local_frame(spark, [], "value string"), "value", None
     return spark.createDataFrame(rows, ["value"]), "value", None
 
 

@@ -105,6 +105,10 @@ class TestDecodeInfo:
             ~F.col("got").eqNullSafe(F.col("transcript"))).count() == 0
         base = decode_info(audio_df)
         assert info.filter("not ok").count() == base.filter("not ok").count()
+        # a name carried twice is carried once, in first-seen order
+        dup = decode_info(audio_df, carry=["transcript", "transcript"])
+        assert dup.columns == base.columns + ["transcript"]
+        assert dup.filter("not ok").count() == base.filter("not ok").count()
 
 
 class TestAudioSuite:
