@@ -12,10 +12,11 @@ This module supplies the audio-specific constraint rules:
 * ``codec`` consistency with the container magic
 * decoded-PCM allclose vs a reference: SNR >= 30 dB (input_hint)
 
-All decoding runs inside ONE Arrow-batched pass (``mapInPandas``
-iterator form) so N audio rules cost a single decode per row — the
-Spark analogue of the reference evaluating many requirements over one
-data pass.  No per-row Python UDFs.
+All decoding runs inside ONE Arrow-batched pass (``mapInArrow`` over
+zero-copy payload views, through the one clip kernel ``_map_clips``) so
+N audio rules cost a single decode per row — the Spark analogue of the
+reference evaluating many requirements over one data pass.  No per-row
+Python UDFs.
 
 Codecs: ``pcm_s16le`` clips are real RIFF/WAV files parsed here from
 scratch (numpy header + frombuffer).  ``flac`` and ``opus`` clips use
@@ -34,10 +35,9 @@ from __future__ import annotations
 
 import math
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -218,10 +218,16 @@ def _binary_views(arr, n_rows):
     Binary/String array (+ validity bools) — no per-row ``bytes``
     objects, no payload copies.  Returns ``(views, valid)`` where
     ``views[i]`` is a memoryview into the Arrow data buffer and
-    ``valid`` is a bool ndarray (or None when there are no nulls)."""
+    ``valid`` is a bool ndarray (or None when there are no nulls).
+    Offsets are 64-bit when Spark sends large types
+    (``spark.sql.execution.arrow.useLargeVarTypes``)."""
+    import pyarrow as pa
+
     vbuf, obuf, dbuf = arr.buffers()
     off0 = arr.offset
-    offs = np.frombuffer(obuf, dtype=np.int32)[off0: off0 + n_rows + 1]
+    large = arr.type in (pa.large_binary(), pa.large_string())
+    width = np.int64 if large else np.int32
+    offs = np.frombuffer(obuf, dtype=width)[off0: off0 + n_rows + 1]
     data = memoryview(dbuf) if dbuf is not None else memoryview(b"")
     valid = None
     if arr.null_count:
@@ -233,21 +239,117 @@ def _binary_views(arr, n_rows):
     return views, valid
 
 
+def _map_clips(df: DataFrame, per_clip, out_schema: T.StructType, *,
+               carry=(), partition_col: Optional[str] = None) -> DataFrame:
+    """The one Arrow clip kernel: decode every clip of ``df`` once and
+    map it through ``per_clip`` in a single ``mapInArrow`` stage.
+
+    The stage reads only ``clip_id``, ``bytes``, the ``carry`` columns
+    and ``partition_col``, pruned before the Python stage so the Arrow
+    transfer ships no dead bytes.  Each payload is a zero-copy
+    ``memoryview`` of the Arrow data buffer (no per-row ``bytes``
+    copies), decoded by :func:`decode_bytes`; a null payload fails as
+    ``null bytes``.
+
+    Per-clip contract: ``per_clip(row, sr, pcm)`` gets ``row =
+    (clip_id, *carry)`` and returns the clip's computed fields — the
+    ``out_schema`` fields the kernel does not fill, in schema order —
+    as one tuple for one row, or as a list of tuples for any number of
+    rows (``[]`` emits none).  A ``ValueError`` raised by the decode or
+    by ``per_clip`` yields one ``ok=false`` row with null computed
+    fields instead of failing the task.
+
+    The kernel fills these fields itself:
+
+    * ``ok`` — the clip decoded and ``per_clip`` returned;
+    * ``error`` — the ``ValueError`` text, null on ``ok`` rows;
+    * ``dec_codec`` — the container codec, null on failure rows;
+    * ``clip_id``, ``partition_id`` and every carried name — the input
+      values, cast to the ``out_schema`` type, so failure rows keep
+      them too.  Those ``out_schema`` lacks (other than ``clip_id``)
+      are appended with their input type, once each, in first-seen
+      order.  These columns reference the input batch zero-copy when
+      every clip yields one row, and are repeated with ``take``
+      otherwise.
+
+    ``partition_col``, when not None, is read as the string
+    ``partition_id`` (NULL when ``df`` lacks it).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    given = {f.name: f.dataType for f in out_schema.fields}
+    row_names = [c for c in dict.fromkeys(["clip_id", *carry])
+                 if c != "bytes"]
+    inputs = {c: F.col(c) for c in row_names}
+    if partition_col is not None:
+        inputs["partition_id"] = (
+            F.col(partition_col) if partition_col in df.columns
+            else F.lit(None)).cast("string")
+    pruned = df.select(F.col("bytes"), *[
+        (e.cast(given[c]) if c in given else e).alias(c)
+        for c, e in inputs.items()])
+    pos = {c: i + 1 for i, c in enumerate(inputs)}
+    schema = T.StructType(list(out_schema.fields) + [
+        pruned.schema[c] for c in inputs
+        if c not in given and c != "clip_id"])
+    arrow_schema = to_arrow_schema(schema)
+    computed = [c for c in given
+                if c not in pos and c not in ("ok", "error", "dec_codec")]
+    nulls = (None,) * len(computed)
+
+    def gen(batches):
+        for b in batches:
+            n = b.num_rows
+            views, valid = _binary_views(b.column(0), n)
+            if valid is not None:
+                views = [v if ok else None for v, ok in zip(views, valid)]
+            rows = zip(*[b.column(pos[c]).to_pylist() for c in row_names])
+            out, src, errs, codecs = [], [], [], []
+            spread = False
+            for i, (row, view) in enumerate(zip(rows, views)):
+                err = None
+                try:
+                    codec, sr, pcm = decode_bytes(view)
+                    got = per_clip(row, sr, pcm)
+                except ValueError as e:
+                    got, codec, err = nulls, None, str(e)
+                errs.append(err)
+                codecs.append(codec)
+                if type(got) is list:
+                    spread = True
+                    out += got
+                    src += [i] * len(got)
+                else:
+                    out.append(got)
+                    src.append(i)
+            take = pa.array(src, pa.int64()) if spread else None
+            per_clip_cols = {"ok": [e is None for e in errs],
+                             "error": errs, "dec_codec": codecs}
+            values = dict(zip(computed,
+                              list(zip(*out)) or [()] * len(computed)))
+            arrays = []
+            for f in arrow_schema:
+                if f.name in values:
+                    arrays.append(pa.array(values[f.name], f.type))
+                    continue
+                arr = (b.column(pos[f.name]) if f.name in pos
+                       else pa.array(per_clip_cols[f.name], f.type))
+                arrays.append(arr if take is None else arr.take(take))
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+    return pruned.mapInArrow(gen, schema)
+
+
 def decode_info(df: DataFrame, with_snr: bool = False,
                 with_rms: bool = True,
-                carry: Optional[list] = None) -> DataFrame:
-    """One Arrow-native decode pass over the audio table.
-
-    Column-prunes to exactly the fields the decode needs before the
-    Python stage so the Arrow transfer ships no dead bytes, and runs as
-    ``mapInArrow`` with zero-copy payload access: each clip's container
-    bytes are a ``memoryview`` slice of the Arrow data buffer — no
-    pandas block conversion, no per-row ``bytes`` materialization
-    (guide §4.2: re-slice the contiguous binary buffer instead of
-    copying row by row).  Every row gets a ``pcm_sha256`` of the
-    decoded samples — the cheap content fingerprint the SNR fast path
-    joins against (hash-equal ⇒ SNR=∞) — hashed straight from the
-    PCM view's buffer.
+                carry: Optional[list] = None,
+                partition_col: Optional[str] = None) -> DataFrame:
+    """One Arrow-native decode pass over the audio table, on the clip
+    kernel (:func:`_map_clips`: column-pruned, zero-copy payload views).
+    Every row gets a ``pcm_sha256`` of the decoded samples — the cheap
+    content fingerprint the SNR fast path joins against (hash-equal ⇒
+    SNR=∞) — hashed straight from the PCM view's buffer.
 
     ``with_snr=True`` additionally computes the full SNR per row by
     regenerating the reference PCM — the slow path, used only as a
@@ -256,104 +358,41 @@ def decode_info(df: DataFrame, with_snr: bool = False,
     never read ``rms`` — the consistency-rule path — save one float64
     conversion + reduction per clip; the column is emitted as NULL).
 
-    ``carry`` passes extra input columns through the decode stage
-    ZERO-COPY (the output batch references the input batch's Arrow
-    arrays — no per-row work, no byte copies): consumers that need a
-    small raw column alongside the decode output (e.g. the suite's
-    transcript ref-match) can then read this one pass instead of
-    re-scanning the payload table with its full split fan-out.
+    The declared ``sr_hz``/``dur_ms``/``codec`` come through unchanged,
+    and ``partition_id`` is ``partition_col`` (default ``part_id``) as
+    a string.  ``carry`` passes extra input columns through the decode
+    stage ZERO-COPY (the output batch references the input batch's
+    Arrow arrays): consumers that need a small raw column alongside the
+    decode output (e.g. the suite's transcript ref-match) can then read
+    this one pass instead of re-scanning the payload table with its
+    full split fan-out.  Names that are not input columns or that
+    collide with a decode output are ignored.
     """
     import hashlib
 
-    import pyarrow as pa
+    base_names = set(DECODE_INFO_SCHEMA.fieldNames())
+    carried = [c for c in carry or []
+               if c in df.columns and c not in base_names]
 
-    cols = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec"]
-    has_part = "part_id" in df.columns
-    if has_part:
-        cols.append("part_id")
+    def per_clip(row, sr, pcm):
+        ns = len(pcm)
+        if not with_rms:
+            rms = None
+        elif ns:
+            rms = float(np.sqrt(np.mean(pcm.astype(np.float64) ** 2)))
+        else:
+            rms = 0.0
+        snr = None
+        if with_snr:
+            ref = _fixture_expected_pcm_by_id(row[0])
+            if ref is not None:
+                snr = pcm_snr_db(pcm, ref)
+        return (sr, int(round(1000.0 * ns / sr)), ns, rms,
+                hashlib.sha256(pcm).hexdigest(), snr)
 
-    base_names = {f.name for f in DECODE_INFO_SCHEMA.fields}
-    carried = [c for c in dict.fromkeys(carry or [])
-               if c in df.columns and c not in cols and c not in base_names]
-    out_schema = T.StructType(
-        list(DECODE_INFO_SCHEMA.fields)
-        + [df.schema[c] for c in carried]
-    )
-    cols = cols + carried
-
-    expected_fn = _fixture_expected_pcm_by_id if with_snr else None
-    out_names = [f.name for f in out_schema.fields]
-    out_types = [pa.string(), pa.bool_(), pa.string(), pa.string(),
-                 pa.int32(), pa.int32(), pa.int64(), pa.float64(),
-                 pa.string(), pa.int32(), pa.int32(), pa.string(),
-                 pa.float64(), pa.string()]
-
-    def gen(batches):
-        for b in batches:
-            names = b.schema.names
-            col = {nm: b.column(i) for i, nm in enumerate(names)}
-            n = b.num_rows
-            clip_ids = col["clip_id"].to_pylist()
-            srs = col["sr_hz"].to_pylist()
-            durs = col["dur_ms"].to_pylist()
-            codecs = col["codec"].to_pylist()
-            if has_part:
-                parts = [None if v is None else str(v)
-                         for v in col["part_id"].to_pylist()]
-            else:
-                parts = [None] * n
-            views, valid = _binary_views(col["bytes"], n)
-            rows = ([], [], [], [], [], [], [], [], [], [], [], [], [], [])
-            (o_cid, o_ok, o_err, o_codec, o_sr, o_dur, o_ns, o_rms,
-             o_sha, o_dsr, o_ddur, o_dcodec, o_snr, o_part) = rows
-            for i in range(n):
-                o_cid.append(clip_ids[i])
-                o_dsr.append(srs[i])
-                o_ddur.append(durs[i])
-                o_dcodec.append(codecs[i])
-                o_part.append(parts[i])
-                try:
-                    buf = (views[i]
-                           if valid is None or valid[i] else None)
-                    codec, sr, pcm = decode_bytes(buf)
-                    ns = len(pcm)
-                    o_ok.append(True)
-                    o_err.append(None)
-                    o_codec.append(codec)
-                    o_sr.append(sr)
-                    o_dur.append(int(round(1000.0 * ns / sr)))
-                    o_ns.append(ns)
-                    if with_rms:
-                        o_rms.append(
-                            float(np.sqrt(np.mean(
-                                pcm.astype(np.float64) ** 2)))
-                            if ns else 0.0)
-                    else:
-                        o_rms.append(None)
-                    o_sha.append(hashlib.sha256(pcm).hexdigest())
-                    snr = None
-                    if expected_fn is not None:
-                        ref = expected_fn(clip_ids[i])
-                        if ref is not None:
-                            snr = pcm_snr_db(pcm, ref)
-                    o_snr.append(snr)
-                except ValueError as e:
-                    o_ok.append(False)
-                    o_err.append(str(e))
-                    o_codec.append(None)
-                    o_sr.append(None)
-                    o_dur.append(None)
-                    o_ns.append(None)
-                    o_rms.append(None)
-                    o_sha.append(None)
-                    o_snr.append(None)
-            arrays = [pa.array(v, type=t) for v, t in zip(rows, out_types)]
-            # carried columns: reference the input batch's arrays
-            # as-is (zero-copy pass-through)
-            arrays.extend(col[c] for c in carried)
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.select(*cols).mapInArrow(gen, out_schema)
+    return _map_clips(df, per_clip, DECODE_INFO_SCHEMA,
+                      carry=["sr_hz", "dur_ms", "codec", *carried],
+                      partition_col=partition_col or "part_id")
 
 
 def _fixture_expected_pcm_by_id(clip_id):
@@ -453,22 +492,10 @@ def audio_features(df: DataFrame,
     executors at any table size; no shuffle anywhere.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                    out.append((row.clip_id, True, sr) +
-                               pcm_features(sr, pcm, silence_threshold))
-                except ValueError:
-                    out.append((row.clip_id, False, None, None, None,
-                                None, None, None, None, None, None))
-            yield pd.DataFrame(out, columns=cols)
+    def per_clip(row, sr, pcm):
+        return (sr,) + pcm_features(sr, pcm, silence_threshold)
 
-    return df.select("clip_id", "bytes").mapInPandas(
-        gen, AUDIO_FEATURES_SCHEMA)
+    return _map_clips(df, per_clip, AUDIO_FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -525,9 +552,9 @@ class TranscriptRateRule(Rule):
     def plan(self, ctx: ValidationContext) -> DataFrame:
         df = ctx.df
         rid = self.rule_id
-        has_part = "part_id" in df.columns
-        part_col = (F.col("part_id").cast("string") if has_part
-                    else F.lit(None).cast("string"))
+        part = ctx.partition_col or "part_id"
+        part_col = (F.col(part) if part in df.columns
+                    else F.lit(None)).cast("string")
         n_words = F.when(
             F.col("transcript").isNull()
             | (F.trim(F.col("transcript")) == F.lit("")),
@@ -545,31 +572,15 @@ class TranscriptRateRule(Rule):
         )
 
         if self.use_decoded:
-            pre = df.filter(n_words > 0).select(
-                "clip_id", "bytes", n_words.alias("n_words"),
-                part_col.alias("partition_id"),
-            )
+            def per_clip(row, sr, pcm):
+                dur_s = int(round(1000.0 * len(pcm) / sr)) / 1000.0
+                return (float(np.round(row[1] / dur_s, 6))
+                        if dur_s > 0 else None,)
 
-            def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                for pdf in batches:
-                    out = []
-                    for row in pdf.itertuples(index=False):
-                        try:
-                            _, sr, pcm = decode_bytes(row.bytes)
-                        except ValueError:
-                            out.append((row.clip_id, False,
-                                        int(row.n_words), None,
-                                        row.partition_id))
-                            continue
-                        dur_s = int(round(1000.0 * len(pcm) / sr)) / 1000.0
-                        wps = (float(np.round(row.n_words / dur_s, 6))
-                               if dur_s > 0 else None)
-                        out.append((row.clip_id, True, int(row.n_words),
-                                    wps, row.partition_id))
-                    yield pd.DataFrame(
-                        out, columns=[f.name for f in _RATE_SCHEMA.fields])
-
-            base = pre.mapInPandas(gen, _RATE_SCHEMA)
+            base = _map_clips(
+                df.filter(n_words > 0).withColumn("n_words", n_words),
+                per_clip, _RATE_SCHEMA, carry=["n_words"],
+                partition_col=part)
         else:
             base = df.filter(n_words > 0).select(
                 F.col("clip_id"), F.lit(True).alias("ok"),
@@ -675,30 +686,9 @@ def spectral_signatures(df: DataFrame) -> DataFrame:
     (column-pruned to ``(clip_id, bytes)``).  Undecodable clips come
     back ``ok=false`` with a null signature."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                    out.append((row.clip_id, True,
-                                spectral_signature(sr, pcm)))
-                except ValueError:
-                    out.append((row.clip_id, False, None))
-            # sig MUST be nullable Int64, not inferred: a batch holding
-            # one undecodable clip would otherwise coerce the column to
-            # float64 and silently destroy the low ~11 bits of every
-            # signature in the batch (53-bit mantissa < 64-bit sig)
-            yield pd.DataFrame(
-                {
-                    "clip_id": [r[0] for r in out],
-                    "ok": [r[1] for r in out],
-                    "sig": pd.array([r[2] for r in out], dtype="Int64"),
-                }
-            )
-
-    return df.select("clip_id", "bytes").mapInPandas(
-        gen, SPECTRAL_SIG_SCHEMA)
+    return _map_clips(
+        df, lambda row, sr, pcm: (spectral_signature(sr, pcm),),
+        SPECTRAL_SIG_SCHEMA)
 
 
 def spectral_embedding(sr: int, pcm: np.ndarray,
@@ -733,20 +723,9 @@ def spectral_embeddings(df: DataFrame) -> DataFrame:
     joins all run directly on this column.  Undecodable clips come
     back ``ok=false`` with a null embedding."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                    out.append((row.clip_id, True,
-                                spectral_embedding(sr, pcm)))
-                except ValueError:
-                    out.append((row.clip_id, False, None))
-            yield pd.DataFrame(out, columns=["clip_id", "ok", "embedding"])
-
-    return df.select("clip_id", "bytes").mapInPandas(
-        gen, SPECTRAL_EMB_SCHEMA)
+    return _map_clips(
+        df, lambda row, sr, pcm: (spectral_embedding(sr, pcm),),
+        SPECTRAL_EMB_SCHEMA)
 
 
 AUDIO_ANALYSIS_SCHEMA = T.StructType(
@@ -776,42 +755,17 @@ def audio_analysis(df: DataFrame,
     groups) run without touching ``bytes`` again.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nulls = (None,) * 9
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False) + nulls + (None, None))
-                    continue
-                if len(pcm) == 0:  # features degrade like pcm_features;
-                    # sig/embedding undefined on an empty spectrum
-                    out.append((row.clip_id, True, sr)
-                               + pcm_features(sr, pcm) + (None, None))
-                    continue
-                mag = np.abs(np.fft.rfft(pcm.astype(np.float64)))
-                feats = pcm_features(sr, pcm, silence_threshold, mag=mag)
-                en = band_energies(sr, pcm, mag2=mag ** 2)
-                out.append(
-                    (row.clip_id, True, sr) + feats
-                    + (spectral_signature(sr, pcm, en=en),
-                       spectral_embedding(sr, pcm, en=en))
-                )
-            names = [f.name for f in AUDIO_ANALYSIS_SCHEMA.fields]
-            data = {name: [r[i] for r in out]
-                    for i, name in enumerate(names)}
-            # nullable exact ints built from the RAW python values (see
-            # spectral_signatures: a row-wise DataFrame constructor
-            # coerces mixed None+int columns to float64 first, which
-            # destroys the low ~11 bits of a 64-bit sig)
-            for c in ("n_samples", "peak_abs", "zero_crossings", "sig"):
-                data[c] = pd.array(data[c], dtype="Int64")
-            yield pd.DataFrame(data)
+    def per_clip(row, sr, pcm):
+        if len(pcm) == 0:  # features degrade like pcm_features;
+            # sig/embedding undefined on an empty spectrum
+            return (sr,) + pcm_features(sr, pcm) + (None, None)
+        mag = np.abs(np.fft.rfft(pcm.astype(np.float64)))
+        feats = pcm_features(sr, pcm, silence_threshold, mag=mag)
+        en = band_energies(sr, pcm, mag2=mag ** 2)
+        return ((sr,) + feats + (spectral_signature(sr, pcm, en=en),
+                                 spectral_embedding(sr, pcm, en=en)))
 
-    return df.select("clip_id", "bytes").mapInPandas(
-        gen, AUDIO_ANALYSIS_SCHEMA)
+    return _map_clips(df, per_clip, AUDIO_ANALYSIS_SCHEMA)
 
 
 def audio_neardup_pairs(df: DataFrame, max_hamming: int = 3,
@@ -892,35 +846,10 @@ def audio_transcript_conflicts(df: DataFrame,
     # precondition (transcript functionally dependent on clip_id —
     # enforced separately by the uniqueness rule) the per-row label IS
     # the joined label, so the aggregate is unchanged.
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            # zip, not itertuples: a leading-underscore column name is
-            # renamed to a positional attribute by itertuples
-            for cid, buf, label in zip(pdf["clip_id"], pdf["bytes"],
-                                       pdf["_label"]):
-                try:
-                    _, sr, pcm = decode_bytes(buf)
-                    out.append((cid, True, spectral_signature(sr, pcm),
-                                label))
-                except ValueError:
-                    out.append((cid, False, None, label))
-            yield pd.DataFrame(
-                {
-                    "clip_id": [r[0] for r in out],
-                    "ok": [r[1] for r in out],
-                    "sig": pd.array([r[2] for r in out], dtype="Int64"),
-                    "_label": [r[3] for r in out],
-                }
-            )
-
-    schema = T.StructType(
-        list(SPECTRAL_SIG_SCHEMA.fields)
-        + [T.StructField("_label", T.StringType(), True)]
-    )
-    sigs = df.select(
-        "clip_id", "bytes", F.col(transcript_col).alias("_label")
-    ).mapInPandas(gen, schema).filter(F.col("ok"))
+    sigs = _map_clips(
+        df.select("clip_id", "bytes", F.col(transcript_col).alias("_label")),
+        lambda row, sr, pcm: (spectral_signature(sr, pcm),),
+        SPECTRAL_SIG_SCHEMA, carry=["_label"]).filter(F.col("ok"))
     return (
         sigs.groupBy("sig")
         .agg(
@@ -962,24 +891,25 @@ class AudioConsistencyRule(Rule):
         self.check_snr = check_snr
         self.min_snr_db = min_snr_db
         self.pcm_manifest = pcm_manifest
-        self._info = None  # memoized persisted decode output (hash path)
 
     def decode_frame(self, ctx: ValidationContext,
                      carry: Optional[list] = None) -> DataFrame:
         """The rule's persisted decode-info frame (hash path only),
-        built once per rule instance.  The suite reuses it as the
-        metadata source for every rule that never touches ``bytes`` —
-        one decode pass feeds the whole rule set instead of N
-        payload-table scans (it carries the declared sr_hz/dur_ms/codec
-        and clip_id through, ~100 B/row, far cheaper to re-read than
-        re-scanning the parquet with its 64 MB-split task fan-out).
+        built once per compile (memoized on ``ctx``).  The suite reuses
+        it as the metadata source for every rule that never touches
+        ``bytes`` — one decode pass feeds the whole rule set instead of
+        N payload-table scans (it carries the declared
+        sr_hz/dur_ms/codec and clip_id through, ~100 B/row, far cheaper
+        to re-read than re-scanning the parquet with its 64 MB-split
+        task fan-out).
         ``carry`` (first call only) threads extra small raw columns
         through the pass — see :func:`decode_info`."""
-        if self._info is None:
+        if self not in ctx.memo:
             from pyspark import StorageLevel
 
             info = decode_info(ctx.df, with_snr=False, with_rms=False,
-                               carry=carry)
+                               carry=carry,
+                               partition_col=ctx.partition_col)
             # Re-key the ~100 B/row decode output to session parallelism
             # before persisting: the decode stage keeps the payload
             # scan's full split fan-out (it runs as the map side of this
@@ -993,24 +923,23 @@ class AudioConsistencyRule(Rule):
             info = info.repartition(sc.defaultParallelism)
             info = info.persist(StorageLevel.MEMORY_AND_DISK)
             ctx.cached.append(info)
-            self._info = info
-        return self._info
+            ctx.memo[self] = info
+        return ctx.memo[self]
 
     def plan(self, ctx: ValidationContext) -> DataFrame:
         use_hash_path = self.check_snr and self.pcm_manifest is not None
         # with_rms=False: no consistency violation reads the RMS, so the
-        # decode pass skips one float64 conversion + reduction per clip
+        # decode pass skips one float64 conversion + reduction per clip.
+        # The hash path consumes `info` in several subtrees (violations
+        # + mismatch discovery + the suite's shared metadata rules);
+        # decode_frame persisted it — the decode runs exactly once per
+        # table regardless of fan-out.
         if use_hash_path:
             info = self.decode_frame(ctx)
         else:
             info = decode_info(ctx.df, with_snr=self.check_snr,
-                               with_rms=False)
-        if use_hash_path:
-            # the hash path consumes `info` in several subtrees
-            # (violations + mismatch discovery + the suite's shared
-            # metadata rules); decode_frame persisted it — the decode
-            # runs exactly once per table regardless of fan-out.
-            pass
+                               with_rms=False,
+                               partition_col=ctx.partition_col)
         rid = self.rule_id
         part = F.col("partition_id")
 
@@ -1099,6 +1028,7 @@ class AudioConsistencyRule(Rule):
             slow = decode_info(
                 ctx.df.join(F.broadcast(mismatched), "clip_id", "left_semi"),
                 with_snr=True, with_rms=False,
+                partition_col=ctx.partition_col,
             )
             snr_viol = slow.filter(
                 F.col("ok")
@@ -1210,7 +1140,7 @@ def segment_bytes(df: DataFrame, window_ms: int = 5000,
     :func:`segment_plan` grid over the clip's TRUE duration, re-encode
     every chunk as a normalized mono-int16 WAV.
 
-    One Arrow-batched decode pass (``mapInPandas`` over
+    One pass of the Arrow clip kernel (``mapInArrow`` over
     ``(clip_id, bytes)`` only — column-pruned like every audio
     operator); per-clip cost is the decode plus cheap array slices, and
     output order inside a clip is chunk_idx — no shuffle introduced.
@@ -1225,33 +1155,20 @@ def segment_bytes(df: DataFrame, window_ms: int = 5000,
         raise ValueError("window_ms and hop_ms must be positive")
     min_keep = int(min_ms)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in SEGMENT_BYTES_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False, None, None, None,
-                                None, None))
-                    continue
-                n = len(pcm)
-                win = max(1, window * sr // 1000)
-                # clamp: a tiny decoded sr must not floor the hop to 0
-                hop_n = max(1, hop * sr // 1000)
-                k = 0
-                while k * hop_n < n:
-                    seg = pcm[k * hop_n: k * hop_n + win]
-                    ms = len(seg) * 1000 // sr
-                    if ms >= min_keep:
-                        out.append((row.clip_id, True, k,
-                                    k * hop_n * 1000 // sr, ms, sr,
-                                    encode_wav(sr, seg)))
-                    k += 1
-            yield pd.DataFrame(out, columns=cols)
+    def per_clip(row, sr, pcm):
+        win = max(1, window * sr // 1000)
+        # clamp: a tiny decoded sr must not floor the hop to 0
+        hop_n = max(1, hop * sr // 1000)
+        out = []
+        for k in range(-(-len(pcm) // hop_n)):
+            seg = pcm[k * hop_n: k * hop_n + win]
+            ms = len(seg) * 1000 // sr
+            if ms >= min_keep:
+                out.append((k, k * hop_n * 1000 // sr, ms, sr,
+                            encode_wav(sr, seg)))
+        return out
 
-    return df.select("clip_id", "bytes").mapInPandas(gen, SEGMENT_BYTES_SCHEMA)
+    return _map_clips(df, per_clip, SEGMENT_BYTES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1339,34 +1256,18 @@ def trim_silence(df: DataFrame,
     if pad < 0:
         raise ValueError("pad_ms must be >= 0")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TRIM_SILENCE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False, None, None, None,
-                                None, None, None))
-                    continue
-                n = len(pcm)
-                orig_ms = n * 1000 // sr
-                bounds = _trim_bounds(pcm, thr, pad * sr // 1000)
-                if bounds is None:
-                    out.append((row.clip_id, True, sr, orig_ms, 0,
-                                orig_ms, 0, None))
-                    continue
-                lo, hi = bounds
-                seg = pcm[lo:hi]
-                out.append((row.clip_id, True, sr, orig_ms,
-                            len(seg) * 1000 // sr,
-                            lo * 1000 // sr,
-                            (n - hi) * 1000 // sr,
-                            encode_wav(sr, seg)))
-            yield pd.DataFrame(out, columns=cols)
+    def per_clip(row, sr, pcm):
+        n = len(pcm)
+        orig_ms = n * 1000 // sr
+        bounds = _trim_bounds(pcm, thr, pad * sr // 1000)
+        if bounds is None:
+            return (sr, orig_ms, 0, orig_ms, 0, None)
+        lo, hi = bounds
+        seg = pcm[lo:hi]
+        return (sr, orig_ms, len(seg) * 1000 // sr, lo * 1000 // sr,
+                (n - hi) * 1000 // sr, encode_wav(sr, seg))
 
-    return df.select("clip_id", "bytes").mapInPandas(gen, TRIM_SILENCE_SCHEMA)
+    return _map_clips(df, per_clip, TRIM_SILENCE_SCHEMA)
 
 
 NORMALIZE_SCHEMA = T.StructType(
@@ -1412,30 +1313,15 @@ def normalize_loudness(df: DataFrame, target_dbfs: float = -20.0,
     if max_gain < 0:
         raise ValueError("max_gain_db must be >= 0")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in NORMALIZE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False, None, None, None,
-                                None, None))
-                    continue
-                n = len(pcm)
-                gained = _apply_gain(pcm, target, max_gain, peak_guard)
-                if gained is None:
-                    out.append((row.clip_id, True, sr, n, None, None,
-                                None))
-                    continue
-                rms_dbfs, gain_db, scaled = gained
-                out.append((row.clip_id, True, sr, n,
-                            round(rms_dbfs, 6), round(gain_db, 6),
-                            encode_wav(sr, scaled)))
-            yield pd.DataFrame(out, columns=cols)
+    def per_clip(row, sr, pcm):
+        gained = _apply_gain(pcm, target, max_gain, peak_guard)
+        if gained is None:
+            return (sr, len(pcm), None, None, None)
+        rms_dbfs, gain_db, scaled = gained
+        return (sr, len(pcm), round(rms_dbfs, 6), round(gain_db, 6),
+                encode_wav(sr, scaled))
 
-    return df.select("clip_id", "bytes").mapInPandas(gen, NORMALIZE_SCHEMA)
+    return _map_clips(df, per_clip, NORMALIZE_SCHEMA)
 
 
 RESAMPLE_SCHEMA = T.StructType(
@@ -1498,23 +1384,11 @@ def resample_audio(df: DataFrame, target_sr: int = 16000) -> DataFrame:
     if tsr <= 0:
         raise ValueError("target_sr must be positive")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in RESAMPLE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False, None, None, None,
-                                None))
-                    continue
-                res = resample_pcm(pcm, sr, tsr)
-                out.append((row.clip_id, True, sr, tsr, len(res),
-                            encode_wav(tsr, res)))
-            yield pd.DataFrame(out, columns=cols)
+    def per_clip(row, sr, pcm):
+        res = resample_pcm(pcm, sr, tsr)
+        return (sr, tsr, len(res), encode_wav(tsr, res))
 
-    return df.select("clip_id", "bytes").mapInPandas(gen, RESAMPLE_SCHEMA)
+    return _map_clips(df, per_clip, RESAMPLE_SCHEMA)
 
 
 AUGMENT_SCHEMA = T.StructType(
@@ -1531,6 +1405,16 @@ AUGMENT_SCHEMA = T.StructType(
 
 #: the classic ASR 3-way speed-perturbation set (0.9x / 1.0x / 1.1x)
 SPEED_FACTORS = ((9, 10), (10, 10), (11, 10))
+
+
+def _salted_md5(salt: str, n_hex: int) -> Column:
+    """``int(md5(clip_id || salt).hexdigest()[:n_hex], 16)`` as a JVM
+    column (a null ``clip_id`` hashes as ``""``): the per-clip seed of
+    the augmentation ops, computed before the decode so that failure
+    rows carry it too."""
+    key = F.concat(F.coalesce(F.col("clip_id").cast("string"), F.lit("")),
+                   F.lit(salt))
+    return F.conv(F.substring(F.md5(key), 1, n_hex), 16, 10).cast("long")
 
 
 def augment_speed(df: DataFrame,
@@ -1557,33 +1441,22 @@ def augment_speed(df: DataFrame,
     training corpus), union three calls with single-factor lists —
     each stays one decode pass over the source.
     """
-    import hashlib
-
     fl = [(int(a), int(b)) for a, b in factors]
     if not fl or any(a <= 0 or b <= 0 for a, b in fl):
         raise ValueError("factors must be positive (num, den) rationals")
+    pick = (_salted_md5(salt, 4) % len(fl) + 1).cast("int")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUGMENT_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                key = (str(row.clip_id) if row.clip_id is not None
-                       else "") + salt
-                num, den = fl[int(hashlib.md5(key.encode("utf-8"))
-                                  .hexdigest()[:4], 16) % len(fl)]
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False, None, num, den,
-                                None, None))
-                    continue
-                res = resample_pcm(pcm, num, den)
-                out.append((row.clip_id, True, sr, num, den, len(res),
-                            encode_wav(sr, res)))
-            yield pd.DataFrame(out, columns=cols)
+    def per_clip(row, sr, pcm):
+        res = resample_pcm(pcm, row[1], row[2])
+        return (sr, len(res), encode_wav(sr, res))
 
-    return df.select("clip_id", "bytes").mapInPandas(gen, AUGMENT_SCHEMA)
+    return _map_clips(
+        df.withColumns({
+            "speed_num": F.element_at(F.array(*[F.lit(a) for a, _ in fl]),
+                                      pick),
+            "speed_den": F.element_at(F.array(*[F.lit(b) for _, b in fl]),
+                                      pick)}),
+        per_clip, AUGMENT_SCHEMA, carry=["speed_num", "speed_den"])
 
 
 PREPARE_SCHEMA = T.StructType(
@@ -1668,63 +1541,42 @@ def prepare_training_audio(df: DataFrame,
     if tsr is not None and tsr <= 0:
         raise ValueError("target_sr must be positive")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in PREPARE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False, None, None, None,
-                                None, None, None))
-                    continue
-                if tsr is not None and sr != tsr:
-                    pcm = resample_pcm(pcm, sr, tsr)
-                    sr = tsr
-                if vad:
-                    runs = vad_runs(sr, pcm, vad_frame_ms,
-                                    vad_threshold_dbfs, vad_max_gap_ms,
-                                    vad_min_speech_ms)
-                    if not runs:
-                        out.append((row.clip_id, True, None, None,
-                                    None, sr, None, None))
-                        continue
-                    seg = np.concatenate(
-                        [pcm[lo:hi] for lo, hi in runs])
-                else:
-                    bounds = _trim_bounds(pcm, thr, pad * sr // 1000)
-                    if bounds is None:
-                        out.append((row.clip_id, True, None, None,
-                                    None, sr, None, None))
-                        continue
-                    lo, hi = bounds
-                    seg = pcm[lo:hi]
-                gained = _apply_gain(seg, target, max_gain,
-                                     peak_guard)
-                if gained is None:  # unreachable when threshold >= 0
-                    out.append((row.clip_id, True, None, None, None,
-                                sr, None, None))
-                    continue
-                _, gain_db, proc = gained
-                m = len(proc)
-                g = round(gain_db, 6)
-                win = max(1, window * sr // 1000)
-                # a pathologically small decoded sr can floor the hop
-                # to 0 samples; clamp to 1 so the loop always advances
-                hop_n = max(1, hop * sr // 1000)
-                k = 0
-                while k * hop_n < m:
-                    chunk = proc[k * hop_n: k * hop_n + win]
-                    ms = len(chunk) * 1000 // sr
-                    if ms >= min_keep:
-                        out.append((row.clip_id, True, k,
-                                    k * hop_n * 1000 // sr, ms, sr, g,
-                                    encode_wav(sr, chunk)))
-                    k += 1
-            yield pd.DataFrame(out, columns=cols)
+    def per_clip(row, sr, pcm):
+        if tsr is not None and sr != tsr:
+            pcm = resample_pcm(pcm, sr, tsr)
+            sr = tsr
+        silent = [(None, None, None, sr, None, None)]
+        if vad:
+            runs = vad_runs(sr, pcm, vad_frame_ms, vad_threshold_dbfs,
+                            vad_max_gap_ms, vad_min_speech_ms)
+            if not runs:
+                return silent
+            seg = np.concatenate([pcm[lo:hi] for lo, hi in runs])
+        else:
+            bounds = _trim_bounds(pcm, thr, pad * sr // 1000)
+            if bounds is None:
+                return silent
+            lo, hi = bounds
+            seg = pcm[lo:hi]
+        gained = _apply_gain(seg, target, max_gain, peak_guard)
+        if gained is None:  # unreachable when threshold >= 0
+            return silent
+        _, gain_db, proc = gained
+        g = round(gain_db, 6)
+        win = max(1, window * sr // 1000)
+        # a pathologically small decoded sr can floor the hop to 0
+        # samples; clamp to 1 so the grid always advances
+        hop_n = max(1, hop * sr // 1000)
+        out = []
+        for k in range(-(-len(proc) // hop_n)):
+            chunk = proc[k * hop_n: k * hop_n + win]
+            ms = len(chunk) * 1000 // sr
+            if ms >= min_keep:
+                out.append((k, k * hop_n * 1000 // sr, ms, sr, g,
+                            encode_wav(sr, chunk)))
+        return out
 
-    return df.select("clip_id", "bytes").mapInPandas(gen, PREPARE_SCHEMA)
+    return _map_clips(df, per_clip, PREPARE_SCHEMA)
 
 
 NOISE_AUGMENT_SCHEMA = T.StructType(
@@ -1796,32 +1648,14 @@ def augment_noise(df: DataFrame, snr_db: float = 20.0,
     shuffle.  Scale shape: output rows == input rows, output bytes ≈
     input bytes — linear in executors at 10^12 clips.
     """
-    import hashlib
-
     target = float(snr_db)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in NOISE_AUGMENT_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                key = (str(row.clip_id) if row.clip_id is not None
-                       else "") + salt
-                seed = int(hashlib.md5(key.encode("utf-8"))
-                           .hexdigest()[:8], 16)
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False, None, seed, None,
-                                None, None))
-                    continue
-                mixed, achieved = mix_noise_pcm(pcm, seed, target)
-                out.append((row.clip_id, True, sr, seed, achieved,
-                            len(mixed), encode_wav(sr, mixed)))
-            yield pd.DataFrame(out, columns=cols)
+    def per_clip(row, sr, pcm):
+        mixed, achieved = mix_noise_pcm(pcm, row[1], target)
+        return (sr, achieved, len(mixed), encode_wav(sr, mixed))
 
-    return df.select("clip_id", "bytes").mapInPandas(
-        gen, NOISE_AUGMENT_SCHEMA)
+    return _map_clips(df.withColumn("noise_seed", _salted_md5(salt, 8)),
+                      per_clip, NOISE_AUGMENT_SCHEMA, carry=["noise_seed"])
 
 
 # ---------------------------------------------------------------------------
@@ -1964,39 +1798,16 @@ def fbank_features(df: DataFrame, frame_ms: float = 25.0,
     output rows == input rows; digest mode emits ~70 bytes/clip, so
     the certify pass over 10^12 clips is scan-bound, not sink-bound.
     """
-    schema = FBANK_FEATS_SCHEMA if with_feats else FBANK_SCHEMA
-    cols = [f.name for f in schema.fields]
+    def per_clip(row, sr, pcm):
+        logm = fbank(sr, pcm, frame_ms, hop_ms, n_mels)
+        rec = (sr, int(logm.shape[0]), n_mels) + _fbank_digest(logm)
+        if with_feats:
+            rec += ([[float(v) for v in fr]
+                     for fr in np.round(logm, 6) + 0.0],)
+        return rec
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    rec = (row.clip_id, False, None, None, None,
-                           None, None, None, None)
-                    out.append(rec + ((None,) if with_feats else ()))
-                    continue
-                logm = fbank(sr, pcm, frame_ms, hop_ms, n_mels)
-                mean, mn, mx, sha = _fbank_digest(logm)
-                rec = (row.clip_id, True, sr, int(logm.shape[0]),
-                       n_mels, mean, mn, mx, sha)
-                if with_feats:
-                    rec = rec + ([[float(v) for v in fr]
-                                  for fr in np.round(logm, 6) + 0.0],)
-                out.append(rec)
-            # build int columns as nullable Int64 UP FRONT: a batch
-            # holding one undecodable clip would otherwise coerce
-            # int+None to float64 and shear feat_sha's low ~11 bits
-            # (53-bit mantissa < 64-bit sha) before any astype ran
-            data = {c: [r[k] for r in out]
-                    for k, c in enumerate(cols)}
-            for c in ("n_frames", "feat_sha"):
-                data[c] = pd.array(data[c], dtype="Int64")
-            yield pd.DataFrame(data, columns=cols)
-
-    return df.select("clip_id", "bytes").mapInPandas(gen, schema)
+    return _map_clips(df, per_clip,
+                      FBANK_FEATS_SCHEMA if with_feats else FBANK_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -2127,48 +1938,26 @@ def feature_pipeline(df: DataFrame, *, n_mels: int = 40,
     ``(clip_id, bytes)`` projection, zero shuffle, ~70 output
     bytes/clip; every stage is numpy-vectorized per Arrow batch.
     """
-    import hashlib
-
-    cols = [f.name for f in PIPELINE_DIGEST_SCHEMA.fields]
     out_coeffs = (int(n_mfcc) if n_mfcc else int(n_mels)) \
         * (1 + int(deltas))
+    carry = ["_seed"] if augment else []
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False, None, None, None,
-                                None, None, None, None))
-                    continue
-                feats = fbank(sr, pcm, frame_ms, hop_ms, n_mels)
-                if augment:
-                    key = (str(row.clip_id)
-                           if row.clip_id is not None else "") + salt
-                    seed = int(hashlib.md5(key.encode("utf-8"))
-                               .hexdigest()[:8], 16)
-                    feats = spec_augment(feats, seed, freq_masks,
-                                         freq_width, time_masks,
-                                         time_pct)
-                if apply_cmvn:
-                    feats = cmvn(feats)
-                if n_mfcc:
-                    feats = feats @ dct_matrix(n_mfcc, n_mels).T
-                if deltas:
-                    feats = add_deltas(feats, order=deltas)
-                mean, mn, mx, sha = _fbank_digest(feats)
-                out.append((row.clip_id, True, sr,
-                            int(feats.shape[0]), out_coeffs,
-                            mean, mn, mx, sha))
-            data = {c: [r[k] for r in out] for k, c in enumerate(cols)}
-            for c in ("n_frames", "feat_sha"):
-                data[c] = pd.array(data[c], dtype="Int64")
-            yield pd.DataFrame(data, columns=cols)
+    def per_clip(row, sr, pcm):
+        feats = fbank(sr, pcm, frame_ms, hop_ms, n_mels)
+        if augment:
+            feats = spec_augment(feats, row[1], freq_masks, freq_width,
+                                 time_masks, time_pct)
+        if apply_cmvn:
+            feats = cmvn(feats)
+        if n_mfcc:
+            feats = feats @ dct_matrix(n_mfcc, n_mels).T
+        if deltas:
+            feats = add_deltas(feats, order=deltas)
+        return (sr, int(feats.shape[0]), out_coeffs) + _fbank_digest(feats)
 
-    return df.select("clip_id", "bytes").mapInPandas(
-        gen, PIPELINE_DIGEST_SCHEMA)
+    return _map_clips(df.withColumn("_seed", _salted_md5(salt, 8)),
+                      per_clip, PIPELINE_DIGEST_SCHEMA,
+                      carry=carry).drop(*carry)
 
 
 def delta_features(feats: np.ndarray, window: int = 2) -> np.ndarray:
@@ -2316,35 +2105,21 @@ def vad_segments(df: DataFrame, frame_ms: int = 20,
     direct hand-off to :func:`segment_bytes`-style training export.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in VAD_SEGMENTS_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False, None, None, None,
-                                None, None, None, None))
-                    continue
-                for k, (lo, hi) in enumerate(vad_runs(
-                        sr, pcm, frame_ms, threshold_dbfs, max_gap_ms,
-                        min_speech_ms)):
-                    seg = pcm[lo:hi]
-                    ssq = int(np.sum(seg.astype(np.int64) ** 2))
-                    energy = (10.0 * math.log10(
-                        ssq / (len(seg) * 32768.0 ** 2))
-                        if ssq > 0 else None)
-                    out.append((
-                        row.clip_id, True, k,
-                        lo * 1000 // sr, hi * 1000 // sr,
+    def per_clip(row, sr, pcm):
+        out = []
+        for k, (lo, hi) in enumerate(vad_runs(
+                sr, pcm, frame_ms, threshold_dbfs, max_gap_ms,
+                min_speech_ms)):
+            seg = pcm[lo:hi]
+            ssq = int(np.sum(seg.astype(np.int64) ** 2))
+            energy = (10.0 * math.log10(ssq / (len(seg) * 32768.0 ** 2))
+                      if ssq > 0 else None)
+            out.append((k, lo * 1000 // sr, hi * 1000 // sr,
                         (hi - lo) * 1000 // sr, energy, sr,
-                        encode_wav(sr, seg) if with_bytes else None,
-                    ))
-            yield pd.DataFrame(out, columns=cols)
+                        encode_wav(sr, seg) if with_bytes else None))
+        return out
 
-    return df.select("clip_id", "bytes").mapInPandas(
-        gen, VAD_SEGMENTS_SCHEMA)
+    return _map_clips(df, per_clip, VAD_SEGMENTS_SCHEMA)
 
 
 def vad_stats(df: DataFrame, frame_ms: int = 20,
@@ -2361,28 +2136,15 @@ def vad_stats(df: DataFrame, frame_ms: int = 20,
     output row per input row, so verdict joins stay 1:1.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in VAD_STATS_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False, None, None, None,
-                                None))
-                    continue
-                runs = vad_runs(sr, pcm, frame_ms, threshold_dbfs,
-                                max_gap_ms, min_speech_ms)
-                n = len(pcm)
-                sp = sum(hi - lo for lo, hi in runs)
-                out.append((row.clip_id, True, n * 1000 // sr,
-                            sp * 1000 // sr,
-                            (sp / n) if n else 0.0, len(runs)))
-            yield pd.DataFrame(out, columns=cols)
+    def per_clip(row, sr, pcm):
+        runs = vad_runs(sr, pcm, frame_ms, threshold_dbfs, max_gap_ms,
+                        min_speech_ms)
+        n = len(pcm)
+        sp = sum(hi - lo for lo, hi in runs)
+        return (n * 1000 // sr, sp * 1000 // sr, (sp / n) if n else 0.0,
+                len(runs))
 
-    return df.select("clip_id", "bytes").mapInPandas(
-        gen, VAD_STATS_SCHEMA)
+    return _map_clips(df, per_clip, VAD_STATS_SCHEMA)
 
 
 REMOVE_SILENCE_SCHEMA = T.StructType(
@@ -2420,34 +2182,18 @@ def remove_silence(df: DataFrame, frame_ms: int = 20,
     every materialization op: one Arrow decode pass, zero shuffle.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in REMOVE_SILENCE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                try:
-                    _, sr, pcm = decode_bytes(row.bytes)
-                except ValueError:
-                    out.append((row.clip_id, False, None, None, None,
-                                None, None, None))
-                    continue
-                n = len(pcm)
-                orig_ms = n * 1000 // sr
-                runs = vad_runs(sr, pcm, frame_ms, threshold_dbfs,
-                                max_gap_ms, min_speech_ms)
-                if not runs:
-                    out.append((row.clip_id, True, sr, orig_ms, 0,
-                                orig_ms, 0, None))
-                    continue
-                kept = np.concatenate([pcm[lo:hi] for lo, hi in runs])
-                dur = len(kept) * 1000 // sr
-                out.append((row.clip_id, True, sr, orig_ms, dur,
-                            orig_ms - dur, len(runs),
-                            encode_wav(sr, kept)))
-            yield pd.DataFrame(out, columns=cols)
+    def per_clip(row, sr, pcm):
+        orig_ms = len(pcm) * 1000 // sr
+        runs = vad_runs(sr, pcm, frame_ms, threshold_dbfs, max_gap_ms,
+                        min_speech_ms)
+        if not runs:
+            return (sr, orig_ms, 0, orig_ms, 0, None)
+        kept = np.concatenate([pcm[lo:hi] for lo, hi in runs])
+        dur = len(kept) * 1000 // sr
+        return (sr, orig_ms, dur, orig_ms - dur, len(runs),
+                encode_wav(sr, kept))
 
-    return df.select("clip_id", "bytes").mapInPandas(
-        gen, REMOVE_SILENCE_SCHEMA)
+    return _map_clips(df, per_clip, REMOVE_SILENCE_SCHEMA)
 
 
 DATASET_CARD_SCHEMA = T.StructType(
@@ -2491,68 +2237,41 @@ def dataset_card(df: DataFrame, clipped_above: float = 0.01,
 
     flags_schema = T.StructType(
         [
-            T.StructField("_codec", T.StringType(), True),
-            T.StructField("_decl_ms", T.LongType(), True),
-            T.StructField("_tr_null", T.IntegerType(), False),
-            T.StructField("_content", T.LongType(), False),
-            T.StructField("_ok", T.BooleanType(), False),
+            T.StructField("ok", T.BooleanType(), False),
             T.StructField("_dec_ms", T.LongType(), True),
             T.StructField("_clipped", T.IntegerType(), True),
             T.StructField("_near_silent", T.IntegerType(), True),
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in flags_schema.fields]
-        for pdf in batches:
-            out = []
-            # name=None: itertuples would positionalize the
-            # underscore-prefixed column names
-            for codec, decl_ms, tr_null, content, bts in pdf.itertuples(
-                    index=False, name=None):
-                base = (codec,
-                        None if pd.isna(decl_ms) else int(decl_ms),
-                        int(tr_null), int(content))
-                try:
-                    _, sr, pcm = decode_bytes(bts)
-                except ValueError:
-                    out.append(base + (False, None, None, None))
-                    continue
-                n = len(pcm)
-                if n == 0:
-                    out.append(base + (True, 0, None, None))
-                    continue
-                # same integer counting math as pcm_features, minus
-                # the rfft the card never uses (no centroid here —
-                # one FFT per clip would double the pass's compute)
-                a = np.abs(pcm.astype(np.int64))
-                clip_r = int((a >= 32767).sum()) / n
-                sil_r = int((a <= SILENCE_THRESHOLD).sum()) / n
-                out.append(base + (
-                    True, n * 1000 // sr,
-                    int(clip_r > float(clipped_above)),
-                    int(sil_r >= float(near_silent_above)),
-                ))
-            pdf_out = pd.DataFrame(out, columns=cols)
-            for c in ("_decl_ms", "_content", "_dec_ms",
-                      "_clipped", "_near_silent"):
-                pdf_out[c] = pd.array(pdf_out[c], dtype="Int64")
-            yield pdf_out
+    def per_clip(row, sr, pcm):
+        n = len(pcm)
+        if n == 0:
+            return (0, None, None)
+        # same integer counting math as pcm_features, minus the rfft
+        # the card never uses (no centroid here — one FFT per clip
+        # would double the pass's compute)
+        a = np.abs(pcm.astype(np.int64))
+        clip_r = int((a >= 32767).sum()) / n
+        sil_r = int((a <= SILENCE_THRESHOLD).sum()) / n
+        return (n * 1000 // sr, int(clip_r > float(clipped_above)),
+                int(sil_r >= float(near_silent_above)))
 
-    flags = df.select(
-        F.col("codec").alias("_codec"),
-        F.col("dur_ms").cast("long").alias("_decl_ms"),
-        F.col("transcript").isNull().cast("int").alias("_tr_null"),
-        F.xxhash64("bytes").alias("_content"),
-        "bytes",
-    ).mapInPandas(gen, flags_schema)
+    meta = {
+        "_codec": F.col("codec"),
+        "_decl_ms": F.col("dur_ms").cast("long"),
+        "_tr_null": F.col("transcript").isNull().cast("int"),
+        "_content": F.xxhash64("bytes"),
+    }
+    flags = _map_clips(df.withColumns(meta), per_clip, flags_schema,
+                       carry=list(meta))
 
     return (
         flags.rollup("_codec")
         .agg(
             F.grouping("_codec").alias("_is_total"),
             F.count(F.lit(1)).alias("n_clips"),
-            F.sum((~F.col("_ok")).cast("long")).alias("n_undecodable"),
+            F.sum((~F.col("ok")).cast("long")).alias("n_undecodable"),
             F.countDistinct("_content").alias("n_distinct_content"),
             F.sum("_decl_ms").alias("declared_ms"),
             F.sum("_dec_ms").alias("decoded_ms"),
@@ -2612,36 +2331,18 @@ class SpeechRatioRule(Rule):
         self.min_speech_ms = int(min_speech_ms)
 
     def plan(self, ctx: ValidationContext) -> DataFrame:
-        df = ctx.df
         rid = self.rule_id
-        has_part = "part_id" in df.columns
-        part_col = (F.col("part_id").cast("string") if has_part
-                    else F.lit(None).cast("string"))
-        pre = df.select("clip_id", "bytes",
-                        part_col.alias("partition_id"))
         fm, th = self.frame_ms, self.threshold_dbfs
         gap, msp = self.max_gap_ms, self.min_speech_ms
 
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cols = [f.name for f in _SPEECH_RATIO_SCHEMA.fields]
-            for pdf in batches:
-                out = []
-                for row in pdf.itertuples(index=False):
-                    try:
-                        _, sr, pcm = decode_bytes(row.bytes)
-                    except ValueError:
-                        out.append((row.clip_id, False, None,
-                                    row.partition_id))
-                        continue
-                    n = len(pcm)
-                    sp = sum(hi - lo for lo, hi in vad_runs(
-                        sr, pcm, fm, th, gap, msp))
-                    ratio = (float(np.round(sp / n, 6)) if n else None)
-                    out.append((row.clip_id, True, ratio,
-                                row.partition_id))
-                yield pd.DataFrame(out, columns=cols)
+        def per_clip(row, sr, pcm):
+            n = len(pcm)
+            sp = sum(hi - lo for lo, hi in vad_runs(sr, pcm, fm, th, gap,
+                                                    msp))
+            return (float(np.round(sp / n, 6)) if n else None,)
 
-        base = pre.mapInPandas(gen, _SPEECH_RATIO_SCHEMA)
+        base = _map_clips(ctx.df, per_clip, _SPEECH_RATIO_SCHEMA,
+                          partition_col=ctx.partition_col or "part_id")
         r = F.col("speech_ratio")
         viol = F.when(
             F.col("ok") & r.isNotNull() & (r < self.min_ratio),

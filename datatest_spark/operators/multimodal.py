@@ -1,8 +1,9 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/video are treated like the audio column in the main engine:
-``binary`` payloads flowing through Arrow-batched ``mapInPandas``
-stages, with typed metadata columns carried alongside.  The Spark-side
+``binary`` payloads flowing through Arrow-batched stages (``mapInArrow``
+for audio, via the audio clip kernel; ``mapInPandas`` here), with typed
+metadata columns carried alongside.  The Spark-side
 plumbing (schema, partition-preserving batch iteration, pruned Arrow
 transfer) is real and tested; the *decoders themselves* are stubbed
 because image/video libraries are not available in this container:
@@ -86,10 +87,11 @@ def extract_clip_features(df: DataFrame, binary_col: str = "bytes",
                           frame_ms: int = 100) -> DataFrame:
     """Audio feature extraction (REAL, not stubbed): per-frame RMS
     energy over decoded PCM — the audio analogue of frame-sampling a
-    video.  One Arrow pass; output is (id, array<float> frame_rms)."""
+    video.  One pass of the audio clip kernel; output is (clip_id,
+    ok, array<float> frame_rms), ``clip_id`` holding ``id_col``."""
     import numpy as np
 
-    from ..audio import decode_bytes
+    from ..audio import _map_clips
 
     schema = T.StructType(
         [
@@ -99,21 +101,17 @@ def extract_clip_features(df: DataFrame, binary_col: str = "bytes",
         ]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, buf in zip(pdf[id_col], pdf[binary_col]):
-                try:
-                    _, sr, pcm = decode_bytes(buf)
-                    hop = max(int(sr * frame_ms / 1000), 1)
-                    n_frames = max(len(pcm) // hop, 1)
-                    frames = pcm[: n_frames * hop].reshape(n_frames, hop)
-                    rms = np.sqrt(
-                        np.mean(frames.astype(np.float64) ** 2, axis=1)
-                    ).astype(np.float32)
-                    rows.append((rid, True, rms.tolist()))
-                except (ValueError, TypeError):
-                    rows.append((rid, False, None))
-            yield pd.DataFrame(rows, columns=["clip_id", "ok", "frame_rms"])
+    def per_clip(row, sr, pcm):
+        try:
+            hop = max(int(sr * frame_ms / 1000), 1)
+        except TypeError as e:  # a non-numeric frame_ms fails every clip
+            raise ValueError(str(e)) from e
+        n_frames = max(len(pcm) // hop, 1)
+        frames = pcm[: n_frames * hop].reshape(n_frames, hop)
+        rms = np.sqrt(np.mean(frames.astype(np.float64) ** 2, axis=1))
+        return (rms.astype(np.float32).tolist(),)
 
-    return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(gen, schema)
+    return _map_clips(
+        df.select(F.col(id_col).alias("clip_id"),
+                  F.col(binary_col).alias("bytes")),
+        per_clip, schema)

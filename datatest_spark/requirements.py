@@ -80,6 +80,10 @@ class ValidationContext:
         self.key_cols = list(key) if key else []
         self.partition_col = partition_col
         self.cached = []  # DataFrames persisted by rules; unpersist after the run
+        # compile-time results memoized per rule for this compile only
+        # (never on the rule: that would leak into Rule.fingerprint and
+        # across tables)
+        self.memo = {}
 
     def key_expr(self) -> Optional[Column]:
         if not self.key_cols:

@@ -732,11 +732,10 @@ class _BucketDriftRule(Rule):
 
     def _current_counts(self, ctx):
         """Bucket counts of the CURRENT table — the rule's one bounded
-        compile-time job.  Cached per ctx frame so ``prepare_jobs``
+        compile-time job.  Memoized on the ctx so ``prepare_jobs``
         (Engine-overlapped) and ``plan`` share a single job."""
-        cache = getattr(self, "_cur_cache", None)
-        if cache is not None and cache[0] is ctx.df:
-            return cache[1]
+        if self in ctx.memo:
+            return ctx.memo[self]
         edges = self._edges_only()
         if len(edges) < 1:
             got = None
@@ -748,7 +747,7 @@ class _BucketDriftRule(Rule):
                 for r in ctx.df.select(bucket.alias("_b"))
                 .where(c.isNotNull()).groupBy("_b").count().collect()
             }
-        self._cur_cache = (ctx.df, got)
+        ctx.memo[self] = got
         return got
 
     def prepare_jobs(self, ctx):
@@ -964,18 +963,17 @@ class OutlierRule(Rule):
 
     def _quartiles(self, ctx):
         """The rule's one bounded compile-time job (Q1/Q3 aggregate) —
-        cached per ctx frame so an Engine-overlapped ``prepare_jobs``
+        memoized on the ctx so an Engine-overlapped ``prepare_jobs``
         run and ``plan`` share a single job."""
-        cache = getattr(self, "_q_cache", None)
-        if cache is not None and cache[0] is ctx.df:
-            return cache[1]
+        if self in ctx.memo:
+            return ctx.memo[self]
         fn = "percentile_approx" if self.approx else "percentile"
         row = ctx.df.agg(
             F.expr(
                 f"{fn}(cast({self.column} as double), array(0.25, 0.75))"
             ).alias("q")
         ).first()
-        self._q_cache = (ctx.df, row["q"])
+        ctx.memo[self] = row["q"]
         return row["q"]
 
     def prepare_jobs(self, ctx):

@@ -159,6 +159,52 @@ class TestAudioSuite:
         snr_viol = res.violations.filter("rule_id = 'audio:snr'").count()
         assert snr_viol == 0
 
+    def test_custom_partition_col_attributes_like_part_id(
+            self, spark, audio_df, manifest_df):
+        # the hash path, the rate rule and the speech-ratio rule read
+        # the caller's partition column: renaming part_id to shard must
+        # leave every per-(rule, partition) count unchanged
+        from datatest_spark.audio import speech_ratio, transcript_rate
+
+        def counts(df, **kw):
+            res = validate_audio_table(
+                df, manifest=manifest_df, check_snr=True,
+                extra_rules=[transcript_rate(),
+                             speech_ratio(min_ratio=1.01)], **kw)
+            got = {(r["rule_id"], r["partition_id"]): r["count"]
+                   for r in res.violations
+                   .groupBy("rule_id", "partition_id").count().collect()}
+            res.unpersist()
+            return got
+
+        base = counts(audio_df)
+        assert base[("speech_ratio:ratio", "0")] > 0
+        assert base[("transcript_rate:wps", "0")] > 0
+        assert base[("audio:sr_hz", "1")] > 0  # from the shared decode
+        assert counts(audio_df.withColumnRenamed("part_id", "shard"),
+                      partition_col="shard") == base
+
+    def test_consistency_rule_reused_on_a_second_table(self, spark,
+                                                       manifest_df):
+        # one hash-path rule validated against two tables reports each
+        # table's own violations (its decode frame is per compile)
+        rule = AudioConsistencyRule(check_snr=True, pcm_manifest=manifest_df)
+        engine = Engine(spark)
+        for lo, hi in ((0, 600), (600, 1200)):
+            df = FX.audio_clips_df(spark, hi, parts=2).filter(
+                f"clip_id >= '{FX.clip_id_for(lo)}'")
+            fresh = AudioConsistencyRule(check_snr=True,
+                                         pcm_manifest=manifest_df)
+            got, want = (engine.validate(df, [r]) for r in (rule, fresh))
+            keys = [sorted((v["rule_id"], v["key"])
+                           for v in res.violations.collect())
+                    for res in (got, want)]
+            got.unpersist()
+            want.unpersist()
+            assert keys[0] == keys[1]
+            corrupt = next(i for i in range(lo, hi) if i % 500 == 11)
+            assert ("audio:decodable", FX.clip_id_for(corrupt)) in keys[0]
+
     def test_verdicts_shape(self, spark, audio_df, manifest_df):
         res = validate_audio_table(audio_df, manifest=manifest_df)
         vd = verdicts(res.violations)
@@ -261,7 +307,8 @@ class TestAudioFeatures:
         FX.audio_clips_df(spark, 50, parts=1).write.parquet(src)
         plan = audio_analysis(spark.read.parquet(src)) \
             ._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInPandas") == 1  # one decode stage
+        # one decode stage (the clip kernel plans it as MapInArrow)
+        assert plan.count("MapInPandas") + plan.count("MapInArrow") == 1
         assert "Exchange" not in plan
         assert "ReadSchema: struct<clip_id:string,bytes:binary>" in plan
 

@@ -45,6 +45,23 @@ class TestCheckpointedRun:
         assert second.processed_partitions == []
         assert sorted(second.skipped_partitions) == ["0", "1", "2", "3"]
 
+    def test_resume_skips_committed_with_compile_time_stat_rules(
+            self, spark, ckpt_dir):
+        # drift and outlier rules memoize their compile-time statistic
+        # jobs per compile, never on the rule, so a first run leaves
+        # the rule-set fingerprint unchanged and a resume skips every
+        # committed partition
+        from datatest_spark import stats
+
+        df = part_df(spark)
+        rules = [stats.drift_psi("v", [0.0, 5.0, 10.0, 20.0, 99.0]),
+                 stats.outliers("v")]
+        first = run_checkpointed(df, rules, "part_id", ckpt_dir)
+        assert sorted(first.processed_partitions) == ["0", "1", "2", "3"]
+        second = run_checkpointed(df, rules, "part_id", ckpt_dir)
+        assert second.processed_partitions == []
+        assert sorted(second.skipped_partitions) == ["0", "1", "2", "3"]
+
     def test_ruleset_change_invalidates(self, spark, ckpt_dir):
         df = part_df(spark)
         run_checkpointed(df, [R.interval("v", 0, 50)], "part_id", ckpt_dir)

@@ -216,14 +216,16 @@ class TestDriftRule:
         ]
         assert len(rules[0].prepare_jobs(
             ValidationContext(cur))) == 2  # baseline + current counts
-        rows = Engine(spark).validate(cur, rules).violations.collect()
+        ctx = ValidationContext(cur)
+        rows = Engine(spark)._compile_ctx(ctx, rules).collect()
         # psi vs identical baseline passes; js vs shifted fires once
         assert len(rows) == 1
         assert rows[0]["rule_id"] == "drift_2s_js:value"
-        # the overlapped prepare cached both sides on each rule
+        # the overlapped prepare cached the baseline side on each rule
+        # and the current-table counts in the compile's memo
         for r in rules:
             assert r._hist_props is not None
-            assert getattr(r, "_cur_cache", None) is not None
+            assert ctx.memo.get(r) is not None
 
     def test_outlier_rule_joins_the_overlap_wave(self, spark):
         # OutlierRule's quartile aggregate is also an overlappable
