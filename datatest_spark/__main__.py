@@ -255,6 +255,7 @@ def _cmd_validate(args) -> int:
         return 0 if n == 0 else 1
     finally:
         violations.unpersist()
+        result.unpersist()
 
 
 def _cmd_validate_incremental(spark, args) -> int:

@@ -74,13 +74,6 @@ __all__ = ["decode_info", "AudioConsistencyRule",
 # Container parsing (pure numpy — vectorized per Arrow batch)
 # ---------------------------------------------------------------------------
 
-_MAGIC_TO_CODEC = {
-    b"RIFF": "pcm_s16le",
-    b"fLaC": "flac",
-    b"Opus": "opus",  # synthetic container: b"OpusHead" prefix
-}
-
-
 def _parse_wav(buf: bytes):
     """Parse a RIFF/WAV (PCM16LE mono) buffer → (sr, pcm int16 array).
 
@@ -921,9 +914,8 @@ class AudioConsistencyRule(Rule):
             # §2.2: fewer, larger partitions for downstream reads).
             sc = ctx.df.sparkSession.sparkContext
             info = info.repartition(sc.defaultParallelism)
-            info = info.persist(StorageLevel.MEMORY_AND_DISK)
-            ctx.cached.append(info)
-            ctx.memo[self] = info
+            ctx.memo[self] = ctx.handle.register(
+                info.persist(StorageLevel.MEMORY_AND_DISK))
         return ctx.memo[self]
 
     def plan(self, ctx: ValidationContext) -> DataFrame:

@@ -1,37 +1,33 @@
-"""Per-call persist lifecycle for operator intermediates.
+"""The one lifecycle for persisted frames that outlive their call.
 
-Several operators (LSH dedup, whole-scope acceptance counting) persist
-an intermediate frame that must stay alive until the CALLER
-materializes the returned lazy result.  Earlier rounds used one
-module-global list evicted at the start of every call, which made
-*interleaved* calls evict each other's frames: an unmaterialized
-earlier result then silently recomputed its intermediate (correct but
-wasteful — and for plans that bake literals derived from the persisted
-partitioning, a correctness hazard).
+Operator calls (LSH dedup, ANN, contamination, shard planning,
+whole-scope acceptance counting) and validation compiles (the audio
+suite's shared decode frame, quarantine's persisted violations,
+sampled plan-rule verdicts) persist intermediates that must stay alive
+until the CALLER materializes the returned lazy result.  Each call
+gets its own :class:`CacheHandle`:
 
-This module gives every operator call its own :class:`CacheHandle`:
+* the call registers each frame it persists on its handle —
+  validation rules register on ``ValidationContext.handle``;
+* the handle is attached to the object the caller receives, its
+  OWNER: the returned frame of an operator, of ``Engine.compile`` and
+  of a ``ValidationResult`` (its ``violations``), or the
+  ``QuarantineResult`` object itself;
+* :func:`unpersist_result` frees exactly one owner's frames
+  (``ValidationResult.unpersist`` and ``QuarantineResult.unpersist``
+  call it); :func:`evict_all`, wrapped by each operator module's
+  ``unpersist_cached``, frees a whole registry for session cleanup.
 
-* the operator registers each persisted frame on its handle and
-  attaches the handle to the DataFrame it returns;
-* :func:`unpersist_result` frees exactly one result's intermediates;
-* :func:`evict_all` (wrapped by each operator module's
-  ``unpersist_cached``) frees everything, for session-level cleanup.
-
-Nothing is evicted while a result frame is still REACHABLE, so
-interleaved operator calls can both materialize without recompute.
-Storage stays bounded in long-lived sessions two ways:
-
-* **weakref auto-eviction** — :meth:`CacheHandle.attach` installs a
-  ``weakref.finalize`` on the returned result frame, so when the
-  caller drops their last reference to it (the common
-  ``op(df).collect()`` pattern) the intermediates unpersist
-  automatically at the next GC.  Callers who keep only a *derived*
-  frame (``op(df).filter(...)`` with the direct result discarded) may
-  see a correct-but-recomputed plan — operators that bake literals
-  from the persisted partitioning pin explicit partition counts so the
-  recompute reproduces the same partitioning.
-* explicit ``unpersist_result`` / ``unpersist_cached`` for immediate
-  deterministic cleanup.
+Nothing is evicted while an owner is still REACHABLE, so interleaved
+calls can all materialize without recompute.  When the caller drops
+the owner without freeing it (the common ``op(df).collect()``
+pattern), :meth:`CacheHandle.attach`'s ``weakref.finalize`` frees its
+frames at the next GC, so long-lived sessions and streaming queries
+stay bounded.  Callers who keep only a *derived* frame
+(``op(df).filter(...)`` with the owner discarded) may see a
+correct-but-recomputed plan — operators that bake literals from the
+persisted partitioning pin explicit partition counts so the recompute
+reproduces the same partitioning.
 
 (Persisted frames use MEMORY_AND_DISK, so the worst case between GCs
 is spilled disk, not OOM.)
@@ -50,34 +46,42 @@ _HANDLE_ATTR = "_datatest_cache_handle"
 
 
 class CacheHandle:
-    """The persisted intermediates of ONE operator call."""
+    """The persisted intermediates of ONE call.  The handle joins
+    *registry* with its first frame, so calls that persist nothing
+    leave no entry behind."""
 
     def __init__(self, registry: list):
         self._frames: List[DataFrame] = []
         self._registry = registry
-        registry.append(self)
+
+    def _track(self, frames) -> None:
+        if self not in self._registry:
+            self._registry.append(self)
+        self._frames.extend(frames)
 
     def register(self, frame: DataFrame) -> DataFrame:
         """Track an (already persisted) intermediate frame."""
-        self._frames.append(frame)
+        self._track([frame])
         return frame
 
-    def attach(self, result: DataFrame) -> DataFrame:
-        """Hand lifecycle ownership to the returned result frame.
+    def attach(self, owner):
+        """Hand lifecycle ownership to *owner* (the returned frame or
+        result object) and return it.
 
-        Also registers a GC backstop: when the result frame itself
-        becomes unreachable, this handle's intermediates unpersist
+        Also registers a GC backstop: when the owner becomes
+        unreachable, this handle's intermediates unpersist
         automatically (``weakref.finalize`` holds the handle, never
-        the frame, so it cannot keep the frame alive)."""
-        setattr(result, _HANDLE_ATTR, self)
-        weakref.finalize(result, CacheHandle.unpersist, self)
-        return result
+        the owner, so it cannot keep the owner alive)."""
+        setattr(owner, _HANDLE_ATTR, self)
+        weakref.finalize(owner, CacheHandle.unpersist, self)
+        return owner
 
     def absorb(self, other: "CacheHandle") -> None:
-        """Take over *other*'s frames (one result frame owning the
+        """Take over *other*'s frames (one owner holding the
         intermediates of several sub-operations, e.g. a composed
         acceptance with two stateful operands)."""
-        self._frames.extend(other._frames)
+        if other._frames:
+            self._track(other._frames)
         other._frames.clear()
         try:
             other._registry.remove(other)
@@ -101,10 +105,11 @@ class CacheHandle:
         return n
 
 
-def unpersist_result(result: DataFrame, blocking: bool = False) -> int:
-    """Evict the persisted intermediates backing *result* (a frame
-    returned by a dedup/acceptance operator).  No-op for frames without
-    a handle.  Returns #frames evicted."""
+def unpersist_result(result, blocking: bool = False) -> int:
+    """Evict the persisted intermediates owned by *result* (a frame
+    returned by an operator or ``Engine.compile``, a validation
+    result's ``violations``, or a ``QuarantineResult``).  No-op for
+    objects without a handle.  Returns #frames evicted."""
     handle = getattr(result, _HANDLE_ATTR, None)
     return handle.unpersist(blocking) if handle is not None else 0
 

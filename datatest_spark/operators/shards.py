@@ -75,7 +75,6 @@ def unpersist_cached(blocking: bool = False) -> int:
     return evict_all(_HANDLES, blocking)
 
 _BLOCK = 512
-_RECORD = 10240  # tarfile pads every archive to this record size
 _ORD = "__shard_ord"
 _PID = "__shard_pid"
 

@@ -31,6 +31,7 @@ from typing import List, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import unpersist_result
 from ..requirements import Rule
 from ..schema import local_frame
 from ..validation import Engine
@@ -136,52 +137,62 @@ def run_checkpointed(
     gated = work
     mandatory_failed_parts: List[str] = []
     mand_counts = {}
-    if mandatory:
-        mand_viol = engine.compile(
-            work, list(mandatory), partition_col=partition_col
-        )
-        mand_rows = (
-            mand_viol.withColumn(
-                "partition_id",
-                F.coalesce(F.col("partition_id"), F.lit(GLOBAL_PARTITION)),
+    # the compiled frames own what their rules persisted (the hash
+    # path's decode frame); free it once the violations are written
+    compiled = []
+    try:
+        if mandatory:
+            mand_viol = engine.compile(
+                work, list(mandatory), partition_col=partition_col
             )
-            .groupBy("partition_id")
-            .count()
-            .collect()
-        )
-        mand_counts = {r["partition_id"]: r["count"] for r in mand_rows}
-        mandatory_failed_parts = sorted(mand_counts)
-        if GLOBAL_PARTITION in mand_counts:
-            # a global mandatory rule failed — fail-fast everything
-            # (the distributed analogue of @mandatory stopping the run)
-            gated = work.limit(0)
-        elif mandatory_failed_parts:
-            # fail-fast: gated partitions skip the non-mandatory rules
-            gated = work.filter(
-                ~F.col(partition_col).cast("string").isin(mandatory_failed_parts)
+            compiled.append(mand_viol)
+            mand_rows = (
+                mand_viol.withColumn(
+                    "partition_id",
+                    F.coalesce(F.col("partition_id"), F.lit(GLOBAL_PARTITION)),
+                )
+                .groupBy("partition_id")
+                .count()
+                .collect()
             )
+            mand_counts = {r["partition_id"]: r["count"] for r in mand_rows}
+            mandatory_failed_parts = sorted(mand_counts)
+            if GLOBAL_PARTITION in mand_counts:
+                # a global mandatory rule failed — fail-fast everything
+                # (the distributed analogue of @mandatory stopping the run)
+                gated = work.limit(0)
+            elif mandatory_failed_parts:
+                # fail-fast: gated partitions skip the non-mandatory rules
+                gated = work.filter(
+                    ~F.col(partition_col).cast("string").isin(mandatory_failed_parts)
+                )
 
-    violations = engine.compile(gated, list(rules), partition_col=partition_col)
-    if mandatory:
-        violations = violations.unionByName(
-            engine.compile(work, list(mandatory), partition_col=partition_col)
+        violations = engine.compile(gated, list(rules),
+                                    partition_col=partition_col)
+        compiled.append(violations)
+        if mandatory:
+            violations = violations.unionByName(mand_viol)
+        # Aggregate-level violations (set/unique/subset extras, drift
+        # rows) have no single source partition and arrive with NULL
+        # partition_id.  They MUST still fail the run: bucket them under
+        # '__global__' so they are counted in a verdict row instead of
+        # silently dropped.
+        violations = violations.withColumn(
+            "partition_id",
+            F.coalesce(F.col("partition_id"), F.lit(GLOBAL_PARTITION)),
         )
-    # Aggregate-level violations (set/unique/subset extras, drift rows)
-    # have no single source partition and arrive with NULL partition_id.
-    # They MUST still fail the run: bucket them under '__global__' so
-    # they are counted in a verdict row instead of silently dropped.
-    violations = violations.withColumn(
-        "partition_id", F.coalesce(F.col("partition_id"), F.lit(GLOBAL_PARTITION))
-    )
 
-    # one job: write violations partitioned by partition_id
-    (
-        violations.withColumn("ruleset_hash", F.lit(rhash))
-        .withColumn("run_id", F.lit(run_id))
-        .write.mode("append")
-        .partitionBy("partition_id")
-        .parquet(violations_path)
-    )
+        # one job: write violations partitioned by partition_id
+        (
+            violations.withColumn("ruleset_hash", F.lit(rhash))
+            .withColumn("run_id", F.lit(run_id))
+            .write.mode("append")
+            .partitionBy("partition_id")
+            .parquet(violations_path)
+        )
+    finally:
+        for frame in compiled:
+            unpersist_result(frame)
 
     # verdict rows: counts per partition from the committed violations
     # (cast back: parquet partition-value inference may type "1" as int).

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .caching import CacheHandle
 from .predicates import Predicate, compile_predicate, tuple_expr
 from .schema import (
     DEVIATION,
@@ -65,6 +66,10 @@ __all__ = [
     "ValidationContext",
 ]
 
+# live validation handles: one per compile that persisted a frame,
+# until its owner is freed or collected
+_HANDLES: list = []
+
 
 class ValidationContext:
     """Execution context shared by all rules in one validate() call."""
@@ -79,7 +84,9 @@ class ValidationContext:
         self.spark = df.sparkSession
         self.key_cols = list(key) if key else []
         self.partition_col = partition_col
-        self.cached = []  # DataFrames persisted by rules; unpersist after the run
+        # frames rules persist for this compile; the compile's caller
+        # attaches the handle to what it returns (caching.py)
+        self.handle = CacheHandle(_HANDLES)
         # compile-time results memoized per rule for this compile only
         # (never on the rule: that would leak into Rule.fingerprint and
         # across tables)

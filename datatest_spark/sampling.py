@@ -249,17 +249,15 @@ def sampled_verdicts(
         ).select("rule_id", "sample_rows", F.col("violations").cast("long").alias("violations"))
         parts.append(stacked)
 
-    handle = None
+    plan_ctx = None
     if plan_rules:
         from .validation import Engine
 
-        cached_sample = sample.persist()
-        handle = cached_sample
-        n_df = cached_sample.agg(F.count(F.lit(1)).alias("sample_rows"))
-        violations = Engine(spark)._compile_ctx(
-            ValidationContext(cached_sample, key=list(key) if key else None),
-            plan_rules,
-        )
+        plan_ctx = ValidationContext(sample.persist(),
+                                     key=list(key) if key else None)
+        plan_ctx.handle.register(plan_ctx.df)
+        n_df = plan_ctx.df.agg(F.count(F.lit(1)).alias("sample_rows"))
+        violations = Engine(spark)._compile_ctx(plan_ctx, plan_rules)
         vcounts = violations.groupBy("rule_id").agg(
             F.count(F.lit(1)).alias("violations")
         )
@@ -292,12 +290,8 @@ def sampled_verdicts(
         out = out.withColumn("passed", F.col("violations") == 0)
     else:
         out = out.withColumn("passed", F.col("rate_upper") <= F.lit(float(max_rate)))
-    # the persisted plan-rule sample can unpersist as soon as the
-    # verdict materializes; tie it to a GC finalizer like caching.py
-    if handle is not None:
-        import weakref
-
-        from .validation import _unpersist_quiet
-
-        weakref.finalize(out, _unpersist_quiet, [handle])
+    # the persisted plan-rule sample (and any frame the plan rules
+    # persisted) belongs to the returned verdict frame
+    if plan_ctx is not None:
+        plan_ctx.handle.attach(out)
     return out

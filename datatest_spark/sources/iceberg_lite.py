@@ -778,102 +778,6 @@ def _ice_type(spark_type: str) -> str:
     return mapped
 
 
-#: primitive types whose per-file footer stats we record as manifest
-#: bounds (spec Appendix D single-value binary serialization)
-_BOUNDABLE = {"boolean", "int", "long", "float", "double", "string"}
-
-
-def _encode_bound(ice_t: str, v) -> bytes:
-    """Spec Appendix D single-value serialization for manifest
-    lower/upper bounds."""
-    import struct
-
-    if ice_t == "boolean":
-        return b"\x01" if v else b"\x00"
-    if ice_t == "int":
-        return struct.pack("<i", int(v))
-    if ice_t == "long":
-        return struct.pack("<q", int(v))
-    if ice_t == "float":
-        return struct.pack("<f", float(v))
-    if ice_t == "double":
-        return struct.pack("<d", float(v))
-    if ice_t == "string":
-        return v.encode("utf-8") if isinstance(v, str) else bytes(v)
-    raise ValueError(f"no bound encoding for {ice_t}")
-
-
-def _decode_bound(ice_t: str, b: bytes):
-    import struct
-
-    if ice_t == "boolean":
-        return b != b"\x00"
-    if ice_t == "int":
-        return struct.unpack("<i", b)[0]
-    if ice_t == "long":
-        return struct.unpack("<q", b)[0]
-    if ice_t == "float":
-        return struct.unpack("<f", b)[0]
-    if ice_t == "double":
-        return struct.unpack("<d", b)[0]
-    if ice_t == "string":
-        return b.decode("utf-8")
-    raise ValueError(f"no bound decoding for {ice_t}")
-
-
-def _footer_stats(pq_meta, by_name: Dict[str, int],
-                  schema_fields: Dict[int, str]) -> dict:
-    """Aggregate parquet footer statistics across row groups:
-    ``field-id -> {"nulls", "min", "max", "ok_nulls", "ok_bounds"}``.
-    A column's bound (or null count) is dropped when ANY row group
-    lacks usable stats — partial stats would be an unsound bound.
-    Parquet's bound truncation stays valid by construction (truncated
-    minima are prefixes ≤ the true min; maxima are rounded up)."""
-    agg: Dict[int, dict] = {}
-    for rg in range(pq_meta.num_row_groups):
-        rgm = pq_meta.row_group(rg)
-        for ci in range(rgm.num_columns):
-            col = rgm.column(ci)
-            name = col.path_in_schema
-            fid = by_name.get(name)
-            if fid is None or schema_fields.get(fid) not in _BOUNDABLE:
-                continue
-            a = agg.setdefault(fid, {"nulls": 0, "min": None, "max": None,
-                                     "ok_nulls": True, "ok_bounds": True})
-            s = col.statistics
-            if s is None or not s.has_null_count:
-                a["ok_nulls"] = False
-            else:
-                a["nulls"] += int(s.null_count)
-            if s is None or not s.has_min_max:
-                # all-null row groups legitimately carry no min/max;
-                # bounds over the remaining groups stay valid bounds
-                if s is not None and s.has_null_count and \
-                        int(s.null_count) == int(col.num_values):
-                    continue
-                a["ok_bounds"] = False
-            else:
-                mn, mx = s.min, s.max
-                a["min"] = mn if a["min"] is None else min(a["min"], mn)
-                a["max"] = mx if a["max"] is None else max(a["max"], mx)
-    return agg
-
-
-def _stats_fields(agg: dict, schema_fields: Dict[int, str]) -> dict:
-    """Manifest-entry stat maps (spec field-ids 110/125/128) from
-    aggregated footer stats."""
-    nvc = [{"key": fid, "value": a["nulls"]}
-           for fid, a in sorted(agg.items()) if a["ok_nulls"]]
-    lb = [{"key": fid, "value": _encode_bound(schema_fields[fid], a["min"])}
-          for fid, a in sorted(agg.items())
-          if a["ok_bounds"] and a["min"] is not None]
-    ub = [{"key": fid, "value": _encode_bound(schema_fields[fid], a["max"])}
-          for fid, a in sorted(agg.items())
-          if a["ok_bounds"] and a["max"] is not None]
-    return {"null_value_counts": nvc or None,
-            "lower_bounds": lb or None, "upper_bounds": ub or None}
-
-
 def _avro_prim(ice_t: str) -> Any:
     return {"boolean": "boolean", "int": "int", "long": "long",
             "float": "float", "double": "double", "string": "string",

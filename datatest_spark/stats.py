@@ -756,7 +756,7 @@ class _BucketDriftRule(Rule):
         — each is a small aggregate returning driver-side scalars."""
         return [lambda: self._current_counts(ctx)]
 
-    def _edges_props(self):
+    def _edges_props(self, ctx):
         """(interior edges, baseline bucket proportions) — from the
         explicit histogram when given, else derived from the baseline
         quantile grid."""
@@ -784,7 +784,7 @@ class _BucketDriftRule(Rule):
         return edges, props
 
     def plan(self, ctx: ValidationContext) -> DataFrame:
-        edges, props = self._edges_props()
+        edges, props = self._edges_props(ctx)
         n_buckets = len(edges) + 1
         if n_buckets < 2:
             return local_frame(ctx.spark, [], "x string").select(
@@ -864,8 +864,9 @@ class TwoSampleDriftRule(_BucketDriftRule):
     (:class:`DriftPSIRule` et al.), histogram/t-digest feeds
     (``from_histogram``/``from_tdigest``), and now table-vs-table.
     At 10^12 rows each side costs one scan + one ~n_buckets-row
-    shuffle; the baseline side's counts are computed once at plan time
-    (cache the rule, not the table, to amortize across runs).
+    shuffle; the baseline side's counts are computed once per compile
+    and memoized on the compile's context, never on the rule, so the
+    rule's fingerprint is the same before and after a run.
 
     ``baseline_column`` defaults to ``column`` (compare the same field
     across tables); set it to compare differently-named fields.
@@ -891,12 +892,13 @@ class TwoSampleDriftRule(_BucketDriftRule):
 
     def prepare_jobs(self, ctx):
         # The live-baseline proportion count and the current-table
-        # bucket count touch different tables and different cache
-        # attributes — independent jobs, overlappable by the Engine.
-        return [lambda: self._edges_props()] + super().prepare_jobs(ctx)
+        # bucket count touch different tables and different memo
+        # keys — independent jobs, overlappable by the Engine.
+        return [lambda: self._edges_props(ctx)] + super().prepare_jobs(ctx)
 
-    def _edges_props(self):
-        if self._hist_props is None:
+    def _edges_props(self, ctx):
+        key = (self, "baseline")
+        if key not in ctx.memo:
             c = F.col(self._baseline_column).cast("double")
             bucket = _bucket_index(c, self._hist_edges)
             got = {
@@ -906,8 +908,8 @@ class TwoSampleDriftRule(_BucketDriftRule):
             }
             n = sum(got.values()) or 1
             n_buckets = len(self._hist_edges) + 1
-            self._hist_props = [got.get(b, 0) / n for b in range(n_buckets)]
-        return list(self._hist_edges), list(self._hist_props)
+            ctx.memo[key] = [got.get(b, 0) / n for b in range(n_buckets)]
+        return list(self._hist_edges), list(ctx.memo[key])
 
 
 class DriftJSRule(_BucketDriftRule):

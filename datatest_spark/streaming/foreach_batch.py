@@ -16,6 +16,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import unpersist_result
 from ..requirements import Rule
 from ..validation import Engine
 
@@ -54,13 +55,16 @@ def validate_stream(
         violations = engine.compile(
             batch_df, list(rules), partition_col=partition_col
         )
-        (
-            violations.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(violations_path)
-        )
+        try:
+            (
+                violations.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(violations_path)
+            )
+        finally:
+            unpersist_result(violations)
 
     writer = (
         stream_df.writeStream.foreachBatch(process_batch)

@@ -168,10 +168,10 @@ def validate_audio_table(
     safe_cols = {"clip_id", "sr_hz", "dur_ms", "codec"} | (
         set(info.columns) - {f.name for f in DECODE_INFO_SCHEMA.fields}
     )
-    ref_cached = [r for r in ref_rules
-                  if r.on in safe_cols and r.column in safe_cols]
+    ref_on_info = [r for r in ref_rules
+                   if r.on in safe_cols and r.column in safe_cols]
     raw_rules = ([acr]
-                 + [r for r in ref_rules if r not in ref_cached]
+                 + [r for r in ref_rules if r not in ref_on_info]
                  + extra)
     meta_cols = ["clip_id", "sr_hz", "dur_ms", "codec"]
     if part:
@@ -182,9 +182,9 @@ def validate_audio_table(
     frags_meta = engine.compile(meta, meta_rules, partition_col=part)
     frags_raw = engine._compile_ctx(ctx, raw_rules)
     violations = frags_meta.unionByName(frags_raw)
-    if ref_cached:
+    if ref_on_info:
         ref_sel = []
-        for r in ref_cached:
+        for r in ref_on_info:
             for c in (r.on, r.column):
                 if c not in ref_sel:
                     ref_sel.append(c)
@@ -193,10 +193,10 @@ def validate_audio_table(
                                  F.col("partition_id").alias(part))
         else:
             refsrc = info.select(*ref_sel)
-        frags_ref = engine.compile(refsrc, ref_cached, partition_col=part)
+        frags_ref = engine.compile(refsrc, ref_on_info, partition_col=part)
         violations = violations.unionByName(frags_ref)
-    return ValidationResult(violations, "audio constraint suite",
-                            cached=ctx.cached)
+    return ValidationResult(ctx.handle.attach(violations),
+                            "audio constraint suite")
 
 
 def verdicts(violations: DataFrame) -> DataFrame:

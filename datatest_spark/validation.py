@@ -20,7 +20,6 @@ Re-expresses the reference's validation frontend
 
 from __future__ import annotations
 
-import weakref
 from functools import reduce
 from typing import Any, Mapping, Optional, Sequence, Union
 
@@ -28,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import requirements as R
+from .caching import unpersist_result
 from .differences import (
     BaseDifference,
     Deviation,
@@ -183,24 +183,23 @@ def _int_if_integral(x):
 
 class ValidationResult:
     """Lazy verdict: holds the violation DataFrame; nothing executes
-    until ``ok`` / ``differences()`` / ``raise_if_failed()``."""
+    until ``ok`` / ``differences()`` / ``raise_if_failed()``.
+
+    Intermediates persisted during rule compilation (the audio suite's
+    decode frame) live on the ``CacheHandle`` of ``violations``: they
+    are freed by :meth:`unpersist`, or at GC once ``violations`` is
+    unreachable (see :mod:`datatest_spark.caching`)."""
 
     def __init__(self, violations: DataFrame, description: str = None,
-                 grouped: bool = False, cached=None):
+                 grouped: bool = False):
         self.violations = violations
         self.description = description
         self.grouped = grouped
-        self._cached = cached or []
 
     def unpersist(self) -> None:
-        """Release intermediates persisted during rule compilation
-        (e.g. the decode-info cache) — call when done with the run."""
-        for df in self._cached:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        self._cached = []
+        """Release the intermediates persisted during rule compilation
+        — call when done with the run."""
+        unpersist_result(self.violations)
 
     @property
     def ok(self) -> bool:
@@ -247,7 +246,10 @@ class Engine:
     their bucket counts (stats.DriftPSIRule/DriftKSRule), OutlierRule
     computes exact quartiles, and the audio suite's hash fast path
     probes for digest mismatches.  Each is an aggregate returning a
-    handful of driver-side scalars, never row data."""
+    handful of driver-side scalars, never row data.
+
+    Frames a rule persists while compiling belong to the returned
+    violation frame; free them with ``caching.unpersist_result``."""
 
     def __init__(self, spark=None):
         self.spark = spark
@@ -262,7 +264,7 @@ class Engine:
         if isinstance(key, str):
             key = [key]
         ctx = ValidationContext(df, key=key, partition_col=partition_col)
-        return self._compile_ctx(ctx, rules)
+        return ctx.handle.attach(self._compile_ctx(ctx, rules))
 
     def _compile_ctx(self, ctx: ValidationContext, rules: Sequence[Rule]) -> DataFrame:
         # Overlap the bounded compile-time statistic jobs (drift bucket
@@ -318,14 +320,10 @@ class Engine:
         partition_col=None,
         description=None,
     ) -> ValidationResult:
-        if isinstance(key, str):
-            key = [key]
-        ctx = ValidationContext(df, key=key, partition_col=partition_col)
-        violations = self._compile_ctx(ctx, rules)
-        return ValidationResult(
-            violations, description, grouped=key is not None,
-            cached=ctx.cached,
-        )
+        violations = self.compile(df, rules, key=key,
+                                  partition_col=partition_col)
+        return ValidationResult(violations, description,
+                                grouped=key is not None)
 
 
 _ELEMENT_TYPES = (str, bytes, int, float, bool, complex, type(None))
@@ -463,14 +461,6 @@ def valid(df: DataFrame, requirement: Any = None, **kwargs) -> bool:
     return True
 
 
-def _unpersist_quiet(frames) -> None:
-    for df in frames:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
 class QuarantineResult:
     """Outcome of :func:`quarantine` — four lazy DataFrames:
 
@@ -481,28 +471,22 @@ class QuarantineResult:
       drift, whole-table counts, expected-but-absent values) — these
       implicate no specific row and quarantine nothing
 
-    Call :meth:`unpersist` when done (the violation frame is persisted
-    so the clean/quarantined splits don't recompute the rule plans —
-    decode passes included — once per consumer).
+    The violation frame is persisted so the clean/quarantined splits
+    don't recompute the rule plans — decode passes included — once per
+    consumer.  It and the compile's own intermediates live on a
+    ``CacheHandle`` owned by this result object: call :meth:`unpersist`
+    when done, or they are freed at GC once the result is unreachable.
     """
 
     def __init__(self, clean: DataFrame, quarantined: DataFrame,
-                 violations: DataFrame, unattributed: DataFrame,
-                 cached=None):
+                 violations: DataFrame, unattributed: DataFrame):
         self.clean = clean
         self.quarantined = quarantined
         self.violations = violations
         self.unattributed = unattributed
-        # GC backstop (same discipline as caching.CacheHandle): when
-        # the result object becomes unreachable, its persisted frames
-        # unpersist automatically — long-lived sessions stay bounded
-        # even if the caller forgets unpersist()
-        self._finalizer = weakref.finalize(
-            self, _unpersist_quiet, [violations, *(cached or [])]
-        )
 
     def unpersist(self) -> None:
-        self._finalizer()
+        unpersist_result(self)
 
 
 def quarantine(df: DataFrame, rules, key,
@@ -533,20 +517,19 @@ def quarantine(df: DataFrame, rules, key,
         key = [key]
     eng = engine or Engine(df.sparkSession)
     ctx = ValidationContext(df, key=key, partition_col=partition_col)
-    violations = eng._compile_ctx(ctx, rules).persist()
+    violations = ctx.handle.register(eng._compile_ctx(ctx, rules).persist())
     bad_keys = (
         violations.where(F.col("key").isNotNull())
         .select(F.col("key").alias("__qkey"))
         .distinct()
     )
     on = ctx.key_expr() == F.col("__qkey")
-    return QuarantineResult(
+    return ctx.handle.attach(QuarantineResult(
         clean=df.join(bad_keys, on, "left_anti"),
         quarantined=df.join(bad_keys, on, "left_semi"),
         violations=violations,
         unattributed=violations.where(F.col("key").isNull()),
-        cached=ctx.cached,
-    )
+    ))
 
 
 # --- validate.<method> style entry points (reference validation.py:370-663)

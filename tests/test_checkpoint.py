@@ -54,8 +54,10 @@ class TestCheckpointedRun:
         from datatest_spark import stats
 
         df = part_df(spark)
+        baseline = spark.createDataFrame([(v,) for v in range(40)], "v long")
         rules = [stats.drift_psi("v", [0.0, 5.0, 10.0, 20.0, 99.0]),
-                 stats.outliers("v")]
+                 stats.outliers("v"),
+                 stats.TwoSampleDriftRule("v", baseline, [5.0, 20.0])]
         first = run_checkpointed(df, rules, "part_id", ckpt_dir)
         assert sorted(first.processed_partitions) == ["0", "1", "2", "3"]
         second = run_checkpointed(df, rules, "part_id", ckpt_dir)

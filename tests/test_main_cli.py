@@ -33,6 +33,19 @@ def test_validate_exits_nonzero_on_violations(spark, audio_table, capsys):
     assert sum(v["n_violations"] for v in verdicts) > 0
 
 
+def test_validate_frees_the_decode_frame(spark, audio_table, capsys):
+    # the hash path persists a decode frame at compile time; the run
+    # leaves no persisted RDD behind
+    table, manifest = audio_table
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    rc = main(["validate", table, "--manifest", manifest, "--check-snr",
+               "--json", "--limit", "3"])
+    assert rc == 1
+    capsys.readouterr()
+    assert jsc.getPersistentRDDs().size() == before
+
+
 def test_validate_sample_gate_fails_fast(spark, audio_table, capsys):
     table, _ = audio_table
     # max-rate 0 -> any sampled violation fails before the full pass

@@ -221,11 +221,24 @@ class TestDriftRule:
         # psi vs identical baseline passes; js vs shifted fires once
         assert len(rows) == 1
         assert rows[0]["rule_id"] == "drift_2s_js:value"
-        # the overlapped prepare cached the baseline side on each rule
-        # and the current-table counts in the compile's memo
+        # the overlapped prepare memoized both sides in the compile's
+        # memo — the baseline proportions and the current-table counts
         for r in rules:
-            assert r._hist_props is not None
+            assert ctx.memo.get((r, "baseline")) is not None
             assert ctx.memo.get(r) is not None
+
+    def test_two_sample_fingerprint_unchanged_by_compile(self, spark):
+        # the live-baseline proportions are memoized per compile, so a
+        # reused rule hashes the same before and after its first run
+        from datatest_spark.plans.checkpoint import ruleset_hash
+        from datatest_spark.stats import TwoSampleDriftRule
+
+        base = df_from(spark, list(range(100)))
+        rule = TwoSampleDriftRule("value", base, [25.0, 50.0, 75.0])
+        before = ruleset_hash([rule])
+        Engine(spark).compile(df_from(spark, list(range(100))),
+                              [rule]).collect()
+        assert ruleset_hash([rule]) == before
 
     def test_outlier_rule_joins_the_overlap_wave(self, spark):
         # OutlierRule's quartile aggregate is also an overlappable

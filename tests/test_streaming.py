@@ -109,6 +109,35 @@ class TestStreamingAudio:
         assert got.where(F.col("partition_id").isNull()).count() == 0
 
 
+    def test_hash_path_suite_frees_each_batch_decode_frame(
+            self, spark, stream_dirs):
+        """Each micro-batch compiles the hash-path suite, which
+        persists a decode frame; every one is freed after the batch's
+        write, so nothing piles up across batches."""
+        import datatest_spark.fixtures as FX
+        from datatest_spark.suite import audio_rules
+
+        src, out, ckpt = stream_dirs
+        df = FX.audio_clips_df(spark, 400, parts=4)
+        for p in range(4):
+            (df.where(F.col("part_id") == p).coalesce(1)
+             .write.mode("append").parquet(src))
+        manifest = FX.reference_transcripts_df(spark, 400)
+        stream = (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1).parquet(src)
+        )
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        q = validate_stream(
+            stream, audio_rules(manifest=manifest, check_snr=True), out,
+            ckpt, partition_col="part_id",
+        )
+        q.awaitTermination(300)
+        assert spark.read.parquet(out).select("batch_id").distinct().count() > 1
+        assert jsc.getPersistentRDDs().size() == before
+
+
 class TestStreamingDedup:
     """All-of-history stateful dedup (streaming/stateful.py,
     applyInPandasWithState): one state cell per content hash."""
