@@ -13,7 +13,8 @@ This module supplies the audio-specific constraint rules:
 * decoded-PCM allclose vs a reference: SNR >= 30 dB (input_hint)
 
 All decoding runs inside ONE Arrow-batched pass (``mapInArrow`` over
-zero-copy payload views, through the one clip kernel ``_map_clips``) so
+zero-copy payload views, through the one payload kernel
+:func:`datatest_spark.payload._map_clips` with :func:`decode_bytes`) so
 N audio rules cost a single decode per row — the Spark analogue of the
 reference evaluating many requirements over one data pass.  No per-row
 Python UDFs.
@@ -42,8 +43,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .payload import _map_clips
 from .requirements import Rule, ValidationContext, finalize_cols
-from .schema import DEVIATION, INVALID, VIOLATION_SCHEMA
+from .schema import DEVIATION, INVALID, explode_violations
 
 __all__ = ["decode_info", "AudioConsistencyRule",
            "audio_consistency", "pcm_snr_db", "audio_features",
@@ -206,134 +208,6 @@ DECODE_INFO_SCHEMA = T.StructType(
 )
 
 
-def _binary_views(arr, n_rows):
-    """Zero-copy per-row ``memoryview`` slices of a pyarrow
-    Binary/String array (+ validity bools) — no per-row ``bytes``
-    objects, no payload copies.  Returns ``(views, valid)`` where
-    ``views[i]`` is a memoryview into the Arrow data buffer and
-    ``valid`` is a bool ndarray (or None when there are no nulls).
-    Offsets are 64-bit when Spark sends large types
-    (``spark.sql.execution.arrow.useLargeVarTypes``)."""
-    import pyarrow as pa
-
-    vbuf, obuf, dbuf = arr.buffers()
-    off0 = arr.offset
-    large = arr.type in (pa.large_binary(), pa.large_string())
-    width = np.int64 if large else np.int32
-    offs = np.frombuffer(obuf, dtype=width)[off0: off0 + n_rows + 1]
-    data = memoryview(dbuf) if dbuf is not None else memoryview(b"")
-    valid = None
-    if arr.null_count:
-        bits = np.unpackbits(
-            np.frombuffer(vbuf, dtype=np.uint8), bitorder="little"
-        )
-        valid = bits[off0: off0 + n_rows].astype(bool)
-    views = [data[offs[i]: offs[i + 1]] for i in range(n_rows)]
-    return views, valid
-
-
-def _map_clips(df: DataFrame, per_clip, out_schema: T.StructType, *,
-               carry=(), partition_col: Optional[str] = None) -> DataFrame:
-    """The one Arrow clip kernel: decode every clip of ``df`` once and
-    map it through ``per_clip`` in a single ``mapInArrow`` stage.
-
-    The stage reads only ``clip_id``, ``bytes``, the ``carry`` columns
-    and ``partition_col``, pruned before the Python stage so the Arrow
-    transfer ships no dead bytes.  Each payload is a zero-copy
-    ``memoryview`` of the Arrow data buffer (no per-row ``bytes``
-    copies), decoded by :func:`decode_bytes`; a null payload fails as
-    ``null bytes``.
-
-    Per-clip contract: ``per_clip(row, sr, pcm)`` gets ``row =
-    (clip_id, *carry)`` and returns the clip's computed fields — the
-    ``out_schema`` fields the kernel does not fill, in schema order —
-    as one tuple for one row, or as a list of tuples for any number of
-    rows (``[]`` emits none).  A ``ValueError`` raised by the decode or
-    by ``per_clip`` yields one ``ok=false`` row with null computed
-    fields instead of failing the task.
-
-    The kernel fills these fields itself:
-
-    * ``ok`` — the clip decoded and ``per_clip`` returned;
-    * ``error`` — the ``ValueError`` text, null on ``ok`` rows;
-    * ``dec_codec`` — the container codec, null on failure rows;
-    * ``clip_id``, ``partition_id`` and every carried name — the input
-      values, cast to the ``out_schema`` type, so failure rows keep
-      them too.  Those ``out_schema`` lacks (other than ``clip_id``)
-      are appended with their input type, once each, in first-seen
-      order.  These columns reference the input batch zero-copy when
-      every clip yields one row, and are repeated with ``take``
-      otherwise.
-
-    ``partition_col``, when not None, is read as the string
-    ``partition_id`` (NULL when ``df`` lacks it).
-    """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    given = {f.name: f.dataType for f in out_schema.fields}
-    row_names = [c for c in dict.fromkeys(["clip_id", *carry])
-                 if c != "bytes"]
-    inputs = {c: F.col(c) for c in row_names}
-    if partition_col is not None:
-        inputs["partition_id"] = (
-            F.col(partition_col) if partition_col in df.columns
-            else F.lit(None)).cast("string")
-    pruned = df.select(F.col("bytes"), *[
-        (e.cast(given[c]) if c in given else e).alias(c)
-        for c, e in inputs.items()])
-    pos = {c: i + 1 for i, c in enumerate(inputs)}
-    schema = T.StructType(list(out_schema.fields) + [
-        pruned.schema[c] for c in inputs
-        if c not in given and c != "clip_id"])
-    arrow_schema = to_arrow_schema(schema)
-    computed = [c for c in given
-                if c not in pos and c not in ("ok", "error", "dec_codec")]
-    nulls = (None,) * len(computed)
-
-    def gen(batches):
-        for b in batches:
-            n = b.num_rows
-            views, valid = _binary_views(b.column(0), n)
-            if valid is not None:
-                views = [v if ok else None for v, ok in zip(views, valid)]
-            rows = zip(*[b.column(pos[c]).to_pylist() for c in row_names])
-            out, src, errs, codecs = [], [], [], []
-            spread = False
-            for i, (row, view) in enumerate(zip(rows, views)):
-                err = None
-                try:
-                    codec, sr, pcm = decode_bytes(view)
-                    got = per_clip(row, sr, pcm)
-                except ValueError as e:
-                    got, codec, err = nulls, None, str(e)
-                errs.append(err)
-                codecs.append(codec)
-                if type(got) is list:
-                    spread = True
-                    out += got
-                    src += [i] * len(got)
-                else:
-                    out.append(got)
-                    src.append(i)
-            take = pa.array(src, pa.int64()) if spread else None
-            per_clip_cols = {"ok": [e is None for e in errs],
-                             "error": errs, "dec_codec": codecs}
-            values = dict(zip(computed,
-                              list(zip(*out)) or [()] * len(computed)))
-            arrays = []
-            for f in arrow_schema:
-                if f.name in values:
-                    arrays.append(pa.array(values[f.name], f.type))
-                    continue
-                arr = (b.column(pos[f.name]) if f.name in pos
-                       else pa.array(per_clip_cols[f.name], f.type))
-                arrays.append(arr if take is None else arr.take(take))
-            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-    return pruned.mapInArrow(gen, schema)
-
-
 def decode_info(df: DataFrame, with_snr: bool = False,
                 with_rms: bool = True,
                 carry: Optional[list] = None,
@@ -385,7 +259,8 @@ def decode_info(df: DataFrame, with_snr: bool = False,
 
     return _map_clips(df, per_clip, DECODE_INFO_SCHEMA,
                       carry=["sr_hz", "dur_ms", "codec", *carried],
-                      partition_col=partition_col or "part_id")
+                      partition_col=partition_col or "part_id",
+                      decode=decode_bytes)
 
 
 def _fixture_expected_pcm_by_id(clip_id):
@@ -488,7 +363,7 @@ def audio_features(df: DataFrame,
     def per_clip(row, sr, pcm):
         return (sr,) + pcm_features(sr, pcm, silence_threshold)
 
-    return _map_clips(df, per_clip, AUDIO_FEATURES_SCHEMA)
+    return _map_clips(df, per_clip, AUDIO_FEATURES_SCHEMA, decode=decode_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -573,7 +448,7 @@ class TranscriptRateRule(Rule):
             base = _map_clips(
                 df.filter(n_words > 0).withColumn("n_words", n_words),
                 per_clip, _RATE_SCHEMA, carry=["n_words"],
-                partition_col=part)
+                partition_col=part, decode=decode_bytes)
         else:
             base = df.filter(n_words > 0).select(
                 F.col("clip_id"), F.lit(True).alias("ok"),
@@ -608,10 +483,7 @@ class TranscriptRateRule(Rule):
                 )),
             ),
         ]
-        arr = F.array(*checks)
-        rate_viol = (base.select(F.explode(arr).alias("_v"))
-                     .where(F.col("_v").isNotNull()).select("_v.*"))
-        return empty.unionByName(rate_viol)
+        return empty.unionByName(explode_violations(base, checks))
 
 
 def transcript_rate(min_wps: float = 1.0, max_wps: float = 8.0,
@@ -681,7 +553,7 @@ def spectral_signatures(df: DataFrame) -> DataFrame:
 
     return _map_clips(
         df, lambda row, sr, pcm: (spectral_signature(sr, pcm),),
-        SPECTRAL_SIG_SCHEMA)
+        SPECTRAL_SIG_SCHEMA, decode=decode_bytes)
 
 
 def spectral_embedding(sr: int, pcm: np.ndarray,
@@ -718,7 +590,7 @@ def spectral_embeddings(df: DataFrame) -> DataFrame:
 
     return _map_clips(
         df, lambda row, sr, pcm: (spectral_embedding(sr, pcm),),
-        SPECTRAL_EMB_SCHEMA)
+        SPECTRAL_EMB_SCHEMA, decode=decode_bytes)
 
 
 AUDIO_ANALYSIS_SCHEMA = T.StructType(
@@ -758,7 +630,7 @@ def audio_analysis(df: DataFrame,
         return ((sr,) + feats + (spectral_signature(sr, pcm, en=en),
                                  spectral_embedding(sr, pcm, en=en)))
 
-    return _map_clips(df, per_clip, AUDIO_ANALYSIS_SCHEMA)
+    return _map_clips(df, per_clip, AUDIO_ANALYSIS_SCHEMA, decode=decode_bytes)
 
 
 def audio_neardup_pairs(df: DataFrame, max_hamming: int = 3,
@@ -842,7 +714,8 @@ def audio_transcript_conflicts(df: DataFrame,
     sigs = _map_clips(
         df.select("clip_id", "bytes", F.col(transcript_col).alias("_label")),
         lambda row, sr, pcm: (spectral_signature(sr, pcm),),
-        SPECTRAL_SIG_SCHEMA, carry=["_label"]).filter(F.col("ok"))
+        SPECTRAL_SIG_SCHEMA, carry=["_label"],
+        decode=decode_bytes).filter(F.col("ok"))
     return (
         sigs.groupBy("sig")
         .agg(
@@ -993,9 +866,7 @@ class AudioConsistencyRule(Rule):
                 )
             )
 
-        arr = F.array(*checks)
-        out = (info.select(F.explode(arr).alias("_v"))
-               .where(F.col("_v").isNotNull()).select("_v.*"))
+        out = explode_violations(info, checks)
 
         if use_hash_path:
             manifest = self.pcm_manifest.select(
@@ -1160,7 +1031,7 @@ def segment_bytes(df: DataFrame, window_ms: int = 5000,
                             encode_wav(sr, seg)))
         return out
 
-    return _map_clips(df, per_clip, SEGMENT_BYTES_SCHEMA)
+    return _map_clips(df, per_clip, SEGMENT_BYTES_SCHEMA, decode=decode_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -1259,7 +1130,7 @@ def trim_silence(df: DataFrame,
         return (sr, orig_ms, len(seg) * 1000 // sr, lo * 1000 // sr,
                 (n - hi) * 1000 // sr, encode_wav(sr, seg))
 
-    return _map_clips(df, per_clip, TRIM_SILENCE_SCHEMA)
+    return _map_clips(df, per_clip, TRIM_SILENCE_SCHEMA, decode=decode_bytes)
 
 
 NORMALIZE_SCHEMA = T.StructType(
@@ -1313,7 +1184,7 @@ def normalize_loudness(df: DataFrame, target_dbfs: float = -20.0,
         return (sr, len(pcm), round(rms_dbfs, 6), round(gain_db, 6),
                 encode_wav(sr, scaled))
 
-    return _map_clips(df, per_clip, NORMALIZE_SCHEMA)
+    return _map_clips(df, per_clip, NORMALIZE_SCHEMA, decode=decode_bytes)
 
 
 RESAMPLE_SCHEMA = T.StructType(
@@ -1380,7 +1251,7 @@ def resample_audio(df: DataFrame, target_sr: int = 16000) -> DataFrame:
         res = resample_pcm(pcm, sr, tsr)
         return (sr, tsr, len(res), encode_wav(tsr, res))
 
-    return _map_clips(df, per_clip, RESAMPLE_SCHEMA)
+    return _map_clips(df, per_clip, RESAMPLE_SCHEMA, decode=decode_bytes)
 
 
 AUGMENT_SCHEMA = T.StructType(
@@ -1448,7 +1319,8 @@ def augment_speed(df: DataFrame,
                                       pick),
             "speed_den": F.element_at(F.array(*[F.lit(b) for _, b in fl]),
                                       pick)}),
-        per_clip, AUGMENT_SCHEMA, carry=["speed_num", "speed_den"])
+        per_clip, AUGMENT_SCHEMA, carry=["speed_num", "speed_den"],
+        decode=decode_bytes)
 
 
 PREPARE_SCHEMA = T.StructType(
@@ -1568,7 +1440,7 @@ def prepare_training_audio(df: DataFrame,
                             encode_wav(sr, chunk)))
         return out
 
-    return _map_clips(df, per_clip, PREPARE_SCHEMA)
+    return _map_clips(df, per_clip, PREPARE_SCHEMA, decode=decode_bytes)
 
 
 NOISE_AUGMENT_SCHEMA = T.StructType(
@@ -1647,7 +1519,8 @@ def augment_noise(df: DataFrame, snr_db: float = 20.0,
         return (sr, achieved, len(mixed), encode_wav(sr, mixed))
 
     return _map_clips(df.withColumn("noise_seed", _salted_md5(salt, 8)),
-                      per_clip, NOISE_AUGMENT_SCHEMA, carry=["noise_seed"])
+                      per_clip, NOISE_AUGMENT_SCHEMA, carry=["noise_seed"],
+                      decode=decode_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -1799,7 +1672,8 @@ def fbank_features(df: DataFrame, frame_ms: float = 25.0,
         return rec
 
     return _map_clips(df, per_clip,
-                      FBANK_FEATS_SCHEMA if with_feats else FBANK_SCHEMA)
+                      FBANK_FEATS_SCHEMA if with_feats else FBANK_SCHEMA,
+                      decode=decode_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -1949,7 +1823,7 @@ def feature_pipeline(df: DataFrame, *, n_mels: int = 40,
 
     return _map_clips(df.withColumn("_seed", _salted_md5(salt, 8)),
                       per_clip, PIPELINE_DIGEST_SCHEMA,
-                      carry=carry).drop(*carry)
+                      carry=carry, decode=decode_bytes).drop(*carry)
 
 
 def delta_features(feats: np.ndarray, window: int = 2) -> np.ndarray:
@@ -2111,7 +1985,7 @@ def vad_segments(df: DataFrame, frame_ms: int = 20,
                         encode_wav(sr, seg) if with_bytes else None))
         return out
 
-    return _map_clips(df, per_clip, VAD_SEGMENTS_SCHEMA)
+    return _map_clips(df, per_clip, VAD_SEGMENTS_SCHEMA, decode=decode_bytes)
 
 
 def vad_stats(df: DataFrame, frame_ms: int = 20,
@@ -2136,7 +2010,7 @@ def vad_stats(df: DataFrame, frame_ms: int = 20,
         return (n * 1000 // sr, sp * 1000 // sr, (sp / n) if n else 0.0,
                 len(runs))
 
-    return _map_clips(df, per_clip, VAD_STATS_SCHEMA)
+    return _map_clips(df, per_clip, VAD_STATS_SCHEMA, decode=decode_bytes)
 
 
 REMOVE_SILENCE_SCHEMA = T.StructType(
@@ -2185,7 +2059,7 @@ def remove_silence(df: DataFrame, frame_ms: int = 20,
         return (sr, orig_ms, dur, orig_ms - dur, len(runs),
                 encode_wav(sr, kept))
 
-    return _map_clips(df, per_clip, REMOVE_SILENCE_SCHEMA)
+    return _map_clips(df, per_clip, REMOVE_SILENCE_SCHEMA, decode=decode_bytes)
 
 
 DATASET_CARD_SCHEMA = T.StructType(
@@ -2256,7 +2130,7 @@ def dataset_card(df: DataFrame, clipped_above: float = 0.01,
         "_content": F.xxhash64("bytes"),
     }
     flags = _map_clips(df.withColumns(meta), per_clip, flags_schema,
-                       carry=list(meta))
+                       carry=list(meta), decode=decode_bytes)
 
     return (
         flags.rollup("_codec")
@@ -2334,7 +2208,8 @@ class SpeechRatioRule(Rule):
             return (float(np.round(sp / n, 6)) if n else None,)
 
         base = _map_clips(ctx.df, per_clip, _SPEECH_RATIO_SCHEMA,
-                          partition_col=ctx.partition_col or "part_id")
+                          partition_col=ctx.partition_col or "part_id",
+                          decode=decode_bytes)
         r = F.col("speech_ratio")
         viol = F.when(
             F.col("ok") & r.isNotNull() & (r < self.min_ratio),
@@ -2347,9 +2222,7 @@ class SpeechRatioRule(Rule):
                 partition_id=F.col("partition_id"),
             )),
         )
-        arr = F.array(viol)
-        return (base.select(F.explode(arr).alias("_v"))
-                .where(F.col("_v").isNotNull()).select("_v.*"))
+        return explode_violations(base, [viol])
 
 
 def speech_ratio(min_ratio: float = 0.3, **kw) -> SpeechRatioRule:

@@ -29,13 +29,22 @@ correct-but-recomputed plan — operators that bake literals from the
 persisted partitioning pin explicit partition counts so the recompute
 reproduces the same partitioning.
 
+Spark's CacheManager keeps ONE cache entry for semantically equal
+plans, so two live calls over the same input (two audio-suite results
+over one table) share their persisted frames.  A handle therefore
+frees a frame only when no other live handle holds a frame with an
+equal plan: live registrations are counted per plan
+``semanticHash()``.  A hash collision can only keep a cache longer.
+
 (Persisted frames use MEMORY_AND_DISK, so the worst case between GCs
 is spilled disk, not OOM.)
 """
 
 from __future__ import annotations
 
+import threading
 import weakref
+from collections import Counter
 from typing import List
 
 from pyspark.sql import DataFrame
@@ -43,6 +52,12 @@ from pyspark.sql import DataFrame
 __all__ = ["CacheHandle", "unpersist_result", "evict_all"]
 
 _HANDLE_ATTR = "_datatest_cache_handle"
+
+# live registrations per plan semanticHash(), over every handle; an
+# RLock because a GC finalizer may free a handle while this thread
+# holds the lock
+_LIVE: Counter = Counter()
+_LIVE_LOCK = threading.RLock()
 
 
 class CacheHandle:
@@ -61,6 +76,9 @@ class CacheHandle:
 
     def register(self, frame: DataFrame) -> DataFrame:
         """Track an (already persisted) intermediate frame."""
+        plan = frame.semanticHash()
+        with _LIVE_LOCK:
+            _LIVE[plan] += 1
         self._track([frame])
         return frame
 
@@ -93,8 +111,16 @@ class CacheHandle:
         any time — an unmaterialized result simply recomputes."""
         n = 0
         while self._frames:
+            frame = self._frames.pop()
             try:
-                self._frames.pop().unpersist(blocking)
+                plan = frame.semanticHash()
+                with _LIVE_LOCK:
+                    _LIVE[plan] -= 1
+                    last = _LIVE[plan] <= 0
+                    if last:
+                        del _LIVE[plan]
+                if last:
+                    frame.unpersist(blocking)
             except Exception:  # session already stopped — nothing to free
                 pass
             n += 1

@@ -222,9 +222,9 @@ class TranscriptFidelityRule(Rule):
     def plan(self, ctx: ValidationContext) -> DataFrame:
         df = ctx.df
         rid = self.rule_id
-        has_part = "part_id" in df.columns
-        part_col = (F.col("part_id").cast("string") if has_part
-                    else F.lit(None).cast("string"))
+        part = ctx.partition_col or "part_id"
+        part_col = (F.col(part) if part in df.columns
+                    else F.lit(None)).cast("string")
         h = df.select(
             F.col(self.id_col), F.col(self.hyp_col).alias("__hyp"),
             part_col.alias("__part"),

@@ -1,8 +1,9 @@
 """Image operators: real from-scratch decode for uncompressed formats.
 
 Mirrors the audio column's design (datatest_spark/audio.py): payloads
-are opaque ``binary`` columns; decode/feature stages are Arrow-batched
-``mapInPandas`` with pure-numpy codecs — nothing here needs an image
+are opaque ``binary`` columns; every decode/feature stage is one pass
+of the Arrow payload kernel (:mod:`datatest_spark.payload`,
+``mapInArrow``) with pure-numpy codecs — nothing here needs an image
 library.  Two REAL formats are implemented from their public specs:
 
 * **PPM (P6)** — ``P6\\n<w> <h>\\n255\\n`` + raw RGB rows.
@@ -21,7 +22,7 @@ perceptual fingerprint (9x8 grayscale, adjacent-column gradient sign)
 different container yields the SAME dHash, so format-crossing
 near-dup detection is a plain groupBy on the hash.
 
-Scale shape: decode runs where the data lives (mapInPandas, no
+Scale shape: decode runs where the data lives (mapInArrow, no
 shuffle); only (id, small-fixed-width features) leave the stage —
 payload bytes never cross a shuffle boundary.
 """
@@ -29,13 +30,14 @@ payload bytes never cross a shuffle boundary.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..payload import _map_clips, _map_id_payloads
 
 __all__ = [
     "encode_ppm",
@@ -202,65 +204,31 @@ def dhash64(arr: np.ndarray) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Spark stages
+# Spark stages: passes of the payload kernel (datatest_spark/payload.py)
 # ---------------------------------------------------------------------------
 
-def _decode_schema(df: DataFrame, id_col: str) -> T.StructType:
-    # the id field inherits the caller's id dtype (string clip ids,
-    # long surrogate keys — both appear in real tables)
-    return T.StructType(
-        [
-            T.StructField("id", df.schema[id_col].dataType, True),
-            T.StructField("ok", T.BooleanType(), False),
-            T.StructField("codec", T.StringType(), True),
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("height", T.IntegerType(), True),
-            T.StructField("payload_sha256", T.StringType(), True),
-        ]
-    )
+_INT, _DOUBLE, _STRING = T.IntegerType(), T.DoubleType(), T.StringType()
 
 
-def _feature_schema(df: DataFrame, id_col: str) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("id", df.schema[id_col].dataType, True),
-            T.StructField("ok", T.BooleanType(), False),
-            T.StructField("codec", T.StringType(), True),
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("height", T.IntegerType(), True),
-            T.StructField("mean_r", T.DoubleType(), True),
-            T.StructField("mean_g", T.DoubleType(), True),
-            T.StructField("mean_b", T.DoubleType(), True),
-            T.StructField("dhash", T.LongType(), True),
-        ]
-    )
+def _fields(*pairs):
+    return [T.StructField(name, dtype, True) for name, dtype in pairs]
 
 
 def decode_images(df: DataFrame, binary_col: str,
                   id_col: str = "id") -> DataFrame:
     """Decode header+pixels per batch → (id, ok, codec, w, h, sha256).
     Undecodable payloads yield ok=false rows (never a job failure)."""
-    schema = _decode_schema(df, id_col)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, buf in zip(pdf["id"], pdf[binary_col]):
-                try:
-                    codec, arr = decode_image_bytes(buf)
-                    rows.append(
-                        (rid, True, codec, arr.shape[1], arr.shape[0],
-                         hashlib.sha256(bytes(buf)).hexdigest())
-                    )
-                except ValueError:
-                    rows.append((rid, False, None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+    def decode(view):
+        codec, arr = decode_image_bytes(view)
+        return codec, arr, hashlib.sha256(view).hexdigest()
 
-    return df.select(F.col(id_col).alias("id"), F.col(binary_col)).mapInPandas(
-        gen, schema
-    )
+    return _map_id_payloads(
+        df, binary_col, id_col,
+        lambda row, arr, sha: (arr.shape[1], arr.shape[0], sha),
+        _fields(("dec_codec", _STRING), ("width", _INT), ("height", _INT),
+                ("payload_sha256", _STRING)),
+        decode=decode)
 
 
 def image_features(df: DataFrame, binary_col: str,
@@ -268,35 +236,18 @@ def image_features(df: DataFrame, binary_col: str,
     """Decode + per-channel means + dHash fingerprint, one Arrow pass.
     ``groupBy("dhash")`` on the output = cross-format exact/near-dup
     image groups (dHash ignores the container byte-stream)."""
-    schema = _feature_schema(df, id_col)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, buf in zip(pdf["id"], pdf[binary_col]):
-                try:
-                    codec, arr = decode_image_bytes(buf)
-                    means = arr.reshape(-1, 3).mean(axis=0)
-                    rows.append(
-                        (rid, True, codec, arr.shape[1], arr.shape[0],
-                         float(means[0]), float(means[1]), float(means[2]),
-                         dhash64(arr))
-                    )
-                except ValueError:
-                    rows.append(
-                        (rid, False, None, None, None, None, None, None, None)
-                    )
-            out = pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
-            # mixed None + >2^53 ints in an object column would coerce
-            # to float64 and truncate; nullable Int64 keeps all 64 bits
-            out["dhash"] = pd.array([r[8] for r in rows], dtype="Int64")
-            yield out
+    def per_clip(row, arr):
+        r, g, b = arr.reshape(-1, 3).mean(axis=0)
+        return (arr.shape[1], arr.shape[0], float(r), float(g), float(b),
+                dhash64(arr))
 
-    return df.select(F.col(id_col).alias("id"), F.col(binary_col)).mapInPandas(
-        gen, schema
-    )
+    return _map_id_payloads(
+        df, binary_col, id_col, per_clip,
+        _fields(("dec_codec", _STRING), ("width", _INT), ("height", _INT),
+                ("mean_r", _DOUBLE), ("mean_g", _DOUBLE),
+                ("mean_b", _DOUBLE), ("dhash", T.LongType())),
+        decode=decode_image_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -316,9 +267,9 @@ class ImageConsistencyRule(_Rule):
     * decoded width  != decl_width  → DEVIATION (``image:width``)
     * decoded height != decl_height → DEVIATION (``image:height``)
 
-    Plan shape: column-pruned Arrow decode (payload never shuffles),
-    checks assembled as one nullable-struct array over the decode
-    output, filtered + exploded JVM-side.
+    Plan shape: one column-pruned pass of the payload kernel (payload
+    never shuffles), checks assembled as one nullable-struct array over
+    the decode output, filtered + exploded JVM-side.
     """
 
     kind = "plan"
@@ -335,52 +286,27 @@ class ImageConsistencyRule(_Rule):
 
     def plan(self, ctx) -> DataFrame:
         from ..requirements import finalize_cols
-        from ..schema import DEVIATION, INVALID
+        from ..schema import DEVIATION, INVALID, explode_violations
 
         df = ctx.df
-        part_src = (
-            F.col(ctx.partition_col).cast("string")
-            if ctx.partition_col and ctx.partition_col in df.columns
-            else F.lit(None).cast("string")
-        )
-        pruned = df.select(
-            F.col(self.id_col).alias("id"),
-            F.col(self.binary_col),
-            F.col(self.decl_width_col).alias("_dw"),
-            F.col(self.decl_height_col).alias("_dh"),
-            part_src.alias("_part"),
-        )
-
-        info_schema = T.StructType(
-            [
-                T.StructField("id", df.schema[self.id_col].dataType, True),
+        # a partition column the table lacks is left out of the select,
+        # and the kernel reads the missing "_part" as a NULL partition_id
+        info = _map_clips(
+            df.select(
+                F.col(self.id_col).alias("clip_id"),
+                F.col(self.binary_col).alias("bytes"),
+                F.col(self.decl_width_col).alias("_dw"),
+                F.col(self.decl_height_col).alias("_dh"),
+                *[F.col(c).alias("_part") for c in [ctx.partition_col]
+                  if c in df.columns]),
+            lambda row, arr: (arr.shape[1], arr.shape[0]),
+            T.StructType([
+                T.StructField("clip_id", df.schema[self.id_col].dataType),
                 T.StructField("ok", T.BooleanType(), False),
-                T.StructField("width", T.IntegerType(), True),
-                T.StructField("height", T.IntegerType(), True),
-                T.StructField("_dw", T.IntegerType(), True),
-                T.StructField("_dh", T.IntegerType(), True),
-                T.StructField("_part", T.StringType(), True),
-            ]
-        )
-        bcol = self.binary_col
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for rid, buf, dw, dh, part in zip(
-                    pdf["id"], pdf[bcol], pdf["_dw"], pdf["_dh"], pdf["_part"]
-                ):
-                    try:
-                        _codec, arr = decode_image_bytes(buf)
-                        rows.append((rid, True, arr.shape[1], arr.shape[0],
-                                     dw, dh, part))
-                    except ValueError:
-                        rows.append((rid, False, None, None, dw, dh, part))
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in info_schema.fields]
-                )
-
-        info = pruned.mapInPandas(gen, info_schema)
+                *_fields(("width", _INT), ("height", _INT),
+                         ("_dw", _INT), ("_dh", _INT))]),
+            decode=decode_image_bytes, carry=["_dw", "_dh"],
+            partition_col="_part")
         rid = self.rule_id
 
         def v(rule, diff_type, column, invalid, expected,
@@ -388,10 +314,10 @@ class ImageConsistencyRule(_Rule):
             return F.struct(
                 *finalize_cols(
                     rule, diff_type,
-                    key=F.col("id"), column=column,
+                    key=F.col("clip_id"), column=column,
                     invalid=invalid, expected=expected,
                     deviation=deviation, expected_num=expected_num,
-                    partition_id=F.col("_part"),
+                    partition_id=F.col("partition_id"),
                 )
             )
 
@@ -417,6 +343,4 @@ class ImageConsistencyRule(_Rule):
                   expected_num=F.col("height").cast("double")),
             ),
         ]
-        arr = F.array(*checks)
-        return (info.select(F.explode(arr).alias("_v"))
-                .where(F.col("_v").isNotNull()).select("_v.*"))
+        return explode_violations(info, checks)

@@ -1,12 +1,13 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/video are treated like the audio column in the main engine:
-``binary`` payloads flowing through Arrow-batched stages (``mapInArrow``
-for audio, via the audio clip kernel; ``mapInPandas`` here), with typed
-metadata columns carried alongside.  The Spark-side
-plumbing (schema, partition-preserving batch iteration, pruned Arrow
-transfer) is real and tested; the *decoders themselves* are stubbed
-because image/video libraries are not available in this container:
+``binary`` payloads flowing through the one Arrow payload kernel
+(:func:`datatest_spark.payload._map_clips`, one ``mapInArrow`` stage
+per operator), with typed metadata columns carried alongside.  The
+Spark-side plumbing (schema, partition-preserving batch iteration,
+pruned Arrow transfer) is real and tested; the *decoders themselves*
+are stubbed because image/video libraries are not available in this
+container:
 
 * audio → fully real (datatest_spark.audio decodes WAV from scratch)
 * image → REAL for uncompressed formats (operators/image.py parses
@@ -23,18 +24,18 @@ because image/video libraries are not available in this container:
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..payload import _map_clips
 
 __all__ = ["decode_stub", "extract_clip_features"]
 
 DECODE_STUB_SCHEMA = T.StructType(
     [
-        T.StructField("id", T.LongType(), True),
+        T.StructField("clip_id", T.LongType(), True),
         T.StructField("ok", T.BooleanType(), False),
         T.StructField("width", T.IntegerType(), True),
         T.StructField("height", T.IntegerType(), True),
@@ -51,35 +52,31 @@ def decode_stub(df: DataFrame, binary_col: str, id_col: str = "id",
     Real decoding requires libs absent from this environment; with
     ``fake=True`` a deterministic stand-in derives (width, height,
     n_frames) from the payload hash so the batch plumbing, schema, and
-    downstream rules are fully exercised.
+    downstream rules are fully exercised.  Null payloads are
+    ``ok=false`` rows either way.
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rid, buf in zip(pdf[id_col], pdf[binary_col]):
-                if buf is None:
-                    rows.append((rid, False, None, None, None, None))
-                    continue
-                if not fake:
-                    raise NotImplementedError(
-                        "image/video decoding requires codec libraries not "
-                        "present in this container; pass fake=True for the "
-                        "deterministic pipeline-shape stand-in"
-                    )
-                digest = hashlib.sha256(bytes(buf)).hexdigest()
-                h = int(digest[:8], 16)
-                rows.append(
-                    (rid, True, 64 + h % 1920, 64 + (h >> 8) % 1080,
-                     1 + (h >> 16) % 240, digest)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DECODE_STUB_SCHEMA.fields]
+    def decode(view):
+        if view is None:
+            raise ValueError("null payload")
+        if not fake:
+            raise NotImplementedError(
+                "image/video decoding requires codec libraries not "
+                "present in this container; pass fake=True for the "
+                "deterministic pipeline-shape stand-in"
             )
+        return "stub", hashlib.sha256(view).hexdigest()
 
-    return df.select(F.col(id_col).alias("id"), F.col(binary_col)).mapInPandas(
-        gen, DECODE_STUB_SCHEMA
-    )
+    def per_clip(row, digest):
+        h = int(digest[:8], 16)
+        return (64 + h % 1920, 64 + (h >> 8) % 1080, 1 + (h >> 16) % 240,
+                digest)
+
+    return _map_clips(
+        df.select(F.col(id_col).alias("clip_id"),
+                  F.col(binary_col).alias("bytes")),
+        per_clip, DECODE_STUB_SCHEMA, decode=decode,
+    ).withColumnRenamed("clip_id", "id")
 
 
 def extract_clip_features(df: DataFrame, binary_col: str = "bytes",
@@ -87,11 +84,11 @@ def extract_clip_features(df: DataFrame, binary_col: str = "bytes",
                           frame_ms: int = 100) -> DataFrame:
     """Audio feature extraction (REAL, not stubbed): per-frame RMS
     energy over decoded PCM — the audio analogue of frame-sampling a
-    video.  One pass of the audio clip kernel; output is (clip_id,
+    video.  One pass of the payload kernel; output is (clip_id,
     ok, array<float> frame_rms), ``clip_id`` holding ``id_col``."""
     import numpy as np
 
-    from ..audio import _map_clips
+    from ..audio import decode_bytes
 
     schema = T.StructType(
         [
@@ -114,4 +111,4 @@ def extract_clip_features(df: DataFrame, binary_col: str = "bytes",
     return _map_clips(
         df.select(F.col(id_col).alias("clip_id"),
                   F.col(binary_col).alias("bytes")),
-        per_clip, schema)
+        per_clip, schema, decode=decode_bytes)

@@ -6,7 +6,9 @@ format (used by ffmpeg/x264 test corpora): a plain-text stream header
 ``FRAME\\n`` + raw YUV planes per frame.  Entirely parseable with
 numpy — no codec library — so the video column gets the same REAL
 treatment as audio (WAV) and images (PPM/BMP): decode where the data
-lives, ship only small fixed-width features.
+lives, in one pass of the Arrow payload kernel
+(:mod:`datatest_spark.payload`, ``mapInArrow``), ship only small
+fixed-width features.
 
 Supported chroma: C444 (full planes) and C420/C420jpeg/C420mpeg2
 (quarter U/V planes).  Compressed containers (mp4/webm) still need
@@ -20,13 +22,14 @@ equivalent of keyframe extraction for a training-data pipeline.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Tuple
+from typing import Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..payload import _map_clips, _map_id_payloads
 
 __all__ = [
     "encode_y4m",
@@ -132,49 +135,36 @@ def iter_y4m_frames(buf: bytes, every_nth: int = 1):
         idx += 1
 
 
-def _video_feature_schema(df: DataFrame, id_col: str) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("id", df.schema[id_col].dataType, True),
-            T.StructField("ok", T.BooleanType(), False),
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("height", T.IntegerType(), True),
-            T.StructField("n_frames_sampled", T.IntegerType(), True),
-            T.StructField("frame_mean_luma", T.ArrayType(T.DoubleType()), True),
-        ]
-    )
+def _decode_y4m(buf):
+    """Payload-kernel decode for Y4M streams → ``("y4m", header,
+    buf)``: the parsed :func:`decode_y4m_header` tuple and the payload
+    as ``bytes``.  Raises ValueError for null or malformed payloads."""
+    if buf is None:
+        raise ValueError("null payload")
+    buf = bytes(buf)
+    return "y4m", decode_y4m_header(buf), buf
 
 
 def video_frame_features(df: DataFrame, binary_col: str,
                          id_col: str = "id",
                          every_nth: int = 1) -> DataFrame:
     """Frame-sampled per-frame mean luma over Y4M payloads — the
-    decode/sample/extract pipeline shape for video columns, one Arrow
-    pass, no shuffle."""
-    schema = _video_feature_schema(df, id_col)
+    decode/sample/extract pipeline shape for video columns, one pass of
+    the payload kernel, no shuffle."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: List[tuple] = []
-            for rid, buf in zip(pdf["id"], pdf[binary_col]):
-                try:
-                    if buf is None:
-                        raise ValueError("null payload")
-                    w, h, _fps, _chroma, _ = decode_y4m_header(bytes(buf))
-                    lumas = [
-                        float(frame[:, :, 0].mean())
-                        for _i, frame in iter_y4m_frames(buf, every_nth)
-                    ]
-                    rows.append((rid, True, w, h, len(lumas), lumas))
-                except ValueError:
-                    rows.append((rid, False, None, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields]
-            )
+    def per_clip(row, header, buf):
+        lumas = [float(frame[:, :, 0].mean())
+                 for _i, frame in iter_y4m_frames(buf, every_nth)]
+        return header[0], header[1], len(lumas), lumas
 
-    return df.select(F.col(id_col).alias("id"), F.col(binary_col)).mapInPandas(
-        gen, schema
-    )
+    return _map_id_payloads(
+        df, binary_col, id_col, per_clip,
+        [T.StructField("width", T.IntegerType(), True),
+         T.StructField("height", T.IntegerType(), True),
+         T.StructField("n_frames_sampled", T.IntegerType(), True),
+         T.StructField("frame_mean_luma", T.ArrayType(T.DoubleType()),
+                       True)],
+        decode=_decode_y4m)
 
 
 def count_y4m_frames(buf: bytes) -> Tuple[int, int, int]:
@@ -223,49 +213,25 @@ class VideoConsistencyRule(_Rule):
 
     def plan(self, ctx) -> DataFrame:
         from ..requirements import finalize_cols
-        from ..schema import DEVIATION, INVALID
+        from ..schema import DEVIATION, INVALID, explode_violations
 
         df = ctx.df
-        part_src = (
-            F.col(ctx.partition_col).cast("string")
-            if ctx.partition_col and ctx.partition_col in df.columns
-            else F.lit(None).cast("string")
-        )
-        pruned = df.select(
-            F.col(self.id_col).alias("id"),
-            F.col(self.binary_col),
-            F.col(self.decl_frames_col).alias("_df"),
-            part_src.alias("_part"),
-        )
-        info_schema = T.StructType(
-            [
-                T.StructField("id", df.schema[self.id_col].dataType, True),
+        # a partition column the table lacks is left out of the select,
+        # and the kernel reads the missing "_part" as a NULL partition_id
+        info = _map_clips(
+            df.select(
+                F.col(self.id_col).alias("clip_id"),
+                F.col(self.binary_col).alias("bytes"),
+                F.col(self.decl_frames_col).alias("_df"),
+                *[F.col(c).alias("_part") for c in [ctx.partition_col]
+                  if c in df.columns]),
+            lambda row, header, buf: (count_y4m_frames(buf)[2],),
+            T.StructType([
+                T.StructField("clip_id", df.schema[self.id_col].dataType),
                 T.StructField("ok", T.BooleanType(), False),
                 T.StructField("n_frames", T.IntegerType(), True),
-                T.StructField("_df", T.IntegerType(), True),
-                T.StructField("_part", T.StringType(), True),
-            ]
-        )
-        bcol = self.binary_col
-
-        def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for rid, buf, decl, part in zip(
-                    pdf["id"], pdf[bcol], pdf["_df"], pdf["_part"]
-                ):
-                    try:
-                        if buf is None:
-                            raise ValueError("null payload")
-                        _w, _h, n = count_y4m_frames(buf)
-                        rows.append((rid, True, n, decl, part))
-                    except ValueError:
-                        rows.append((rid, False, None, decl, part))
-                yield pd.DataFrame(
-                    rows, columns=[f.name for f in info_schema.fields]
-                )
-
-        info = pruned.mapInPandas(gen, info_schema)
+                T.StructField("_df", T.IntegerType(), True)]),
+            decode=_decode_y4m, carry=["_df"], partition_col="_part")
         rid = self.rule_id
 
         def v(rule, diff_type, column, invalid, expected,
@@ -273,10 +239,10 @@ class VideoConsistencyRule(_Rule):
             return F.struct(
                 *finalize_cols(
                     rule, diff_type,
-                    key=F.col("id"), column=column,
+                    key=F.col("clip_id"), column=column,
                     invalid=invalid, expected=expected,
                     deviation=deviation, expected_num=expected_num,
-                    partition_id=F.col("_part"),
+                    partition_id=F.col("partition_id"),
                 )
             )
 
@@ -295,6 +261,4 @@ class VideoConsistencyRule(_Rule):
                   expected_num=F.col("n_frames").cast("double")),
             ),
         ]
-        arr = F.array(*checks)
-        return (info.select(F.explode(arr).alias("_v"))
-                .where(F.col("_v").isNotNull()).select("_v.*"))
+        return explode_violations(info, checks)

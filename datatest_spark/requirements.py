@@ -40,6 +40,7 @@ from .schema import (
     INVALID,
     MISSING,
     VIOLATION_SCHEMA,
+    explode_violations,
     finalize_violations,
     local_frame,
     py_repr,
@@ -102,10 +103,12 @@ class ValidationContext:
         # drop them, collapsing distinct keys like (x, NULL)/(NULL, x))
         return _render_tuple([F.col(c) for c in self.key_cols])
 
-    def partition_expr(self) -> Optional[Column]:
+    def partition_expr(self) -> Column:
+        """The partition column as a string; a NULL string when the
+        context has no partition column."""
         if self.partition_col:
             return F.col(self.partition_col).cast("string")
-        return None
+        return F.lit(None).cast("string")
 
     def dtype(self, column: str) -> Optional[T.DataType]:
         for field in self.df.schema.fields:
@@ -1277,15 +1280,10 @@ class RefMatchRule(Rule):
     def plan(self, ctx: ValidationContext) -> DataFrame:
         # violations are 1:1 with data rows, so the source partition is
         # attributable — carry it through for checkpoint verdicts
-        part_sel = (
-            [F.col(ctx.partition_col).cast("string").alias("_part")]
-            if ctx.partition_col
-            else []
-        )
         df = ctx.df.select(
             F.col(self.on).alias("_on"),
             F.col(self.column).alias("_actual"),
-            *part_sel,
+            ctx.partition_expr().alias("_part"),
         )
         ref = self.ref.select(
             F.col(self.on).alias("_on"),
@@ -1335,7 +1333,7 @@ class RefMatchRule(Rule):
                 column=self.column,
                 invalid=repr_col(F.col("_actual")),
                 expected=repr_col(F.col("_expected")),
-                partition_id=F.col("_part") if ctx.partition_col else None,
+                partition_id=F.col("_part"),
             )
         )
 
@@ -1372,15 +1370,10 @@ class RefApproxRule(Rule):
         self.round_to = round_to
 
     def plan(self, ctx: ValidationContext) -> DataFrame:
-        part_sel = (
-            [F.col(ctx.partition_col).cast("string").alias("_part")]
-            if ctx.partition_col
-            else []
-        )
         df = ctx.df.select(
             F.col(self.on).alias("_on"),
             F.col(self.column).try_cast("double").alias("_actual"),
-            *part_sel,
+            ctx.partition_expr().alias("_part"),
         )
         ref = self.ref.select(
             F.col(self.on).alias("_on"),
@@ -1409,7 +1402,7 @@ class RefApproxRule(Rule):
                 expected=repr_col(exp),
                 deviation=F.when(F.col("_actual").isNotNull(), dev),
                 expected_num=F.when(F.col("_actual").isNotNull(), exp),
-                partition_id=F.col("_part") if ctx.partition_col else None,
+                partition_id=F.col("_part"),
             )
         )
 
@@ -1467,15 +1460,11 @@ class ReconcileRule(Rule):
 
     def plan(self, ctx: ValidationContext) -> DataFrame:
         cols = list(self._columns(ctx))
-        part_sel = (
-            [F.col(ctx.partition_col).cast("string").alias("_part")]
-            if ctx.partition_col else []
-        )
         left = ctx.df.select(
             *[F.col(k).alias(f"_k{i}") for i, k in enumerate(self.on)],
             F.lit(True).alias("_in_data"),
             *[F.col(c).alias(f"_a{j}") for j, c in enumerate(cols)],
-            *part_sel,
+            ctx.partition_expr().alias("_part"),
         )
         ref = self.ref.select(
             *[F.col(k).alias(f"_k{i}") for i, k in enumerate(self.on)],
@@ -1491,7 +1480,7 @@ class ReconcileRule(Rule):
             key_out = repr_col(F.col("_k0"))
         else:
             key_out = _render_tuple([F.col(k) for k in knames])
-        part_out = F.col("_part") if ctx.partition_col else F.lit(None).cast("string")
+        part_out = F.col("_part")
 
         structs = []
         if self.check_missing:
@@ -1558,11 +1547,7 @@ class ReconcileRule(Rule):
                     )
                 )
 
-        # explode + WHERE instead of the interpreted F.filter HOF
-        # (lambda HOFs block whole-stage codegen — see Engine fused path)
-        arr = F.array(*structs)
-        return (j.select(F.explode(arr).alias("_v"))
-                .where(F.col("_v").isNotNull()).select("_v.*"))
+        return explode_violations(j, structs)
 
 
 def reconcile(ref, on, columns=None, abs_tol=0.0, check_missing=True,

@@ -44,6 +44,7 @@ __all__ = [
     "local_frame",
     "empty_violations",
     "finalize_violations",
+    "explode_violations",
 ]
 
 MISSING = "MISSING"
@@ -134,6 +135,22 @@ def violation_struct(
         _d(expected_num).alias("expected_num"),
         _s(partition_id).alias("partition_id"),
     )
+
+
+def explode_violations(frame: DataFrame,
+                       checks: Sequence[Column]) -> DataFrame:
+    """The violation rows of *frame*: one per non-NULL struct among
+    *checks* (``F.when(condition, violation struct)`` columns), read in
+    one projection.
+
+    Explodes the raw array and drops the NULLs with a relational WHERE
+    instead of the ``F.filter`` higher-order function: lambda HOFs run
+    interpreted (no whole-stage codegen), and on wide tables the
+    interpreted per-row evaluation of the violation-struct array is ~2x
+    the codegen'd form.
+    """
+    return (frame.select(F.explode(F.array(*checks)).alias("_v"))
+            .where(F.col("_v").isNotNull()).select("_v.*"))
 
 
 def local_frame(

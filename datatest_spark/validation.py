@@ -43,6 +43,7 @@ from .schema import (
     MISSING,
     VIOLATION_SCHEMA,
     empty_violations,
+    explode_violations,
     finalize_violations,
     local_frame,
 )
@@ -289,20 +290,9 @@ class Engine:
         fragments = []
         row_exprs = [r.row_expr(ctx) for r in rules if r.kind == "row"]
         if row_exprs:
-            # ONE scan for all row rules: array of nullable structs,
-            # nulls filtered JVM-side, then exploded to violation rows
-            # explode the raw array and drop nulls with a relational
-            # WHERE instead of the F.filter higher-order function:
-            # lambda HOFs run interpreted (no whole-stage codegen), and
-            # on wide tables the interpreted per-row evaluation of the
-            # violation-struct array is ~2x the codegen'd form
-            arr = F.array(*row_exprs)
-            fused = (
-                ctx.df.select(F.explode(arr).alias("_v"))
-                .where(F.col("_v").isNotNull())
-                .select("_v.*")
-            )
-            fragments.append(finalize_violations(fused))
+            # ONE scan for all row rules
+            fragments.append(finalize_violations(
+                explode_violations(ctx.df, row_exprs)))
 
         for r in rules:
             if r.kind == "plan":

@@ -1,7 +1,11 @@
 """Registry-wide physical-plan audit: every queries() entry's plan is
 checked for row-at-a-time Python (`BatchEvalPython` must be 0
 everywhere — Arrow-vectorized stages only), and scan / exchange /
-Arrow-stage counts are recorded per entry.
+Arrow-stage counts are recorded per entry.  `MapInPandas` stages are
+also counted on their own (`map_in_pandas`), so a payload operator
+that leaves the Arrow payload kernel shows up in the record; this is
+recorded only, never a failure, because the fixture generators are
+legitimately `MapInPandas` table sources.
 
 Writes BENCH/PLANAUDIT_r{N}.json (pass --out) and exits non-zero if
 any entry compiles a BatchEvalPython stage.  Entries that execute work
@@ -63,6 +67,7 @@ def main():
                       "MapInPandas", "MapInArrow",
                       "FlatMapGroupsInPandasWithState")
                 for o in ops),
+            "map_in_pandas": sum(o == "MapInPandas" for o in ops),
             "scans": sum(o == "Scan" for o in ops),
             "exchanges": sum(o == "Exchange" for o in ops),
         }
@@ -70,13 +75,16 @@ def main():
         if entry["batch_eval_python"]:
             violations.append(name)
         print(f"{name}: py={entry['batch_eval_python']} "
-              f"arrow={entry['arrow_stages']} scans={entry['scans']} "
+              f"arrow={entry['arrow_stages']} "
+              f"pandas={entry['map_in_pandas']} scans={entry['scans']} "
               f"exch={entry['exchanges']}")
 
     summary = {
         "entries": len(results),
         "batch_eval_python_total": sum(
             r.get("batch_eval_python", 0) for r in results.values()),
+        "map_in_pandas_total": sum(
+            r.get("map_in_pandas", 0) for r in results.values()),
         "violations": violations,
         "errors": errors,
         "per_entry": results,

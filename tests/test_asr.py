@@ -12,6 +12,7 @@ from datatest_spark.operators.asr import (
     transcript_wer,
     word_edit_distance,
 )
+from datatest_spark.suite import validate_audio_table
 from datatest_spark.validation import Engine
 
 N = 2100  # covers the 1%/0.5% transcript injections and a dup row
@@ -198,6 +199,29 @@ class TestFidelityRule:
         assert len(rows) == 50
         assert all(r["rule_id"] == "transcript_cer:noref" for r in rows)
         assert all(r["diff_type"] == "INVALID" for r in rows)
+
+    def test_partition_col_is_honoured(self, spark, clips, manifest):
+        # the suite with the fidelity rule, partitioned by a column not
+        # named part_id: the same violations land in the same partitions
+        def counts(df, part):
+            res = validate_audio_table(
+                df, manifest=manifest, partition_col=part,
+                extra_rules=[transcript_fidelity(manifest, max_cer=0.0)])
+            return {(r["rule_id"], r["partition_id"]): r["count"]
+                    for r in res.violations.groupBy(
+                        "rule_id", "partition_id").count().collect()}
+
+        by_part_id = counts(clips, "part_id")
+        assert any(rule == "transcript_cer:cer" and part is not None
+                   for rule, part in by_part_id)
+        assert counts(clips.withColumnRenamed("part_id", "shard"),
+                      "shard") == by_part_id
+        # with both columns present the rule reads the one asked for
+        shifted = counts(clips.withColumn("shard", F.col("part_id") + 10),
+                         "shard")
+        assert shifted == {
+            (rule, None if p is None else str(int(p) + 10)): n
+            for (rule, p), n in by_part_id.items()}
 
     def test_plan_is_jvm_only(self, spark, clips, manifest):
         from datatest_spark.plans.inspect import explain_str

@@ -72,6 +72,69 @@ def test_result_keeps_its_cache_while_violations_are_reachable(spark, clips):
     assert persisted(spark) == before
 
 
+def test_freeing_one_result_keeps_a_cache_another_result_shares(spark,
+                                                                  clips):
+    # Spark keeps ONE cache entry for equal plans: both results over the
+    # same table share the decode frame, so freeing the first must not
+    # evict it under the second
+    df, m = clips
+    before = persisted(spark)
+    r1 = validate_audio_table(df, manifest=m, check_snr=True)
+    r2 = validate_audio_table(df, manifest=m, check_snr=True)
+    assert persisted(spark) == before + 1
+    r1.unpersist()
+    assert persisted(spark) == before + 1
+    assert r2.violations.count() > 0
+    assert persisted(spark) == before + 1
+    r2.unpersist()
+    assert persisted(spark) == before
+
+
+def test_shared_plan_count_survives_concurrent_handles():
+    # more threads than cores registering and freeing one plan with a
+    # short switch interval: a lost update to the per-plan count would
+    # leave it non-zero (a cache never freed) or free it early
+    import sys
+    import threading
+
+    from datatest_spark import caching
+
+    class Frame:
+        freed = 0
+
+        def semanticHash(self):
+            return -7
+
+        def unpersist(self, blocking=False):
+            Frame.freed += 1
+
+    frame = Frame()
+    keeper = caching.CacheHandle([])
+    keeper.register(frame)
+
+    def churn():
+        for _ in range(500):
+            handle = caching.CacheHandle([])
+            handle.register(frame)
+            handle.unpersist()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=churn) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert Frame.freed == 0  # the keeper's registration held it
+    assert keeper.unpersist() == 1
+    assert Frame.freed == 1
+    assert -7 not in caching._LIVE
+
+
 def test_quarantine_unpersist_frees_violations_and_decode_frame(spark, clips):
     df, m = clips
     before = persisted(spark)

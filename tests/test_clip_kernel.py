@@ -1,6 +1,9 @@
-"""The Arrow clip kernel (``audio._map_clips``) behind every audio
-payload operator: its per-clip contract, and the plan shape of each
-operator built on it."""
+"""The Arrow payload kernel (``payload._map_clips``) behind every
+payload operator — audio, image, video and the decode stub: its
+per-clip contract, and the plan shape of each operator built on it."""
+
+import hashlib
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -8,9 +11,20 @@ from pyspark.sql import types as T
 
 from datatest_spark import audio as A
 from datatest_spark import fixtures as FX
-from datatest_spark.audio import _map_clips
-from datatest_spark.operators.multimodal import extract_clip_features
+from datatest_spark import payload
+from datatest_spark.operators.image import (
+    decode_image_bytes, decode_images, dhash64, encode_bmp, encode_ppm,
+    image_features)
+from datatest_spark.operators.multimodal import (
+    decode_stub, extract_clip_features)
+from datatest_spark.operators.video import (
+    decode_y4m_header, iter_y4m_frames, video_frame_features)
+from datatest_spark.suite import validate_image_table, validate_video_table
 from datatest_spark.validation import Engine
+
+# the kernel with the audio container decode, as every audio operator
+# calls it
+_map_clips = partial(payload._map_clips, decode=A.decode_bytes)
 
 
 def _wav(dur_ms):
@@ -123,6 +137,19 @@ class TestMapClips:
         assert _map_clips(clips, lambda row, sr, pcm: (), _schema()) \
             .columns == ["clip_id", "ok"]
 
+    def test_partition_id_in_schema_without_partition_column(self, spark,
+                                                             clips):
+        # the kernel owns partition_id: with no partition column it is a
+        # NULL string, never a per_clip field
+        schema = _schema(T.StructField("n", T.LongType()),
+                         T.StructField("partition_id", T.StringType()))
+        out = _map_clips(clips, lambda row, sr, pcm: (len(pcm),), schema)
+        assert out.columns == ["clip_id", "ok", "n", "partition_id"]
+        assert out.schema["partition_id"].dataType == T.StringType()
+        assert _rows(out) == [("a", True, 800, None), ("b", False, None, None),
+                              ("c", False, None, None),
+                              ("d", True, 2000, None)]
+
     def test_large_var_types(self, spark, clips):
         # with 64-bit Arrow offsets on the wire the payload views must
         # still slice each clip exactly
@@ -182,9 +209,170 @@ def parquet_clips(spark, tmp_path_factory):
     return spark.read.parquet(src)
 
 
-@pytest.mark.parametrize("name", sorted(OPERATORS))
-def test_operator_plans_one_arrow_stage(spark, parquet_clips, name):
-    plan = OPERATORS[name](parquet_clips) \
-        ._jdf.queryExecution().executedPlan().toString()
+def _plans_one_arrow_stage(frame):
+    plan = frame._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInArrow") == 1, plan
     assert "MapInPandas" not in plan, plan
+
+
+@pytest.mark.parametrize("name", sorted(OPERATORS))
+def test_operator_plans_one_arrow_stage(spark, parquet_clips, name):
+    _plans_one_arrow_stage(OPERATORS[name](parquet_clips))
+
+
+# the image, video and stub operators, as functions of parquet image
+# and video fixture tables
+IMAGE_OPERATORS = {
+    "decode_images": lambda df: decode_images(df, "bytes", "image_id"),
+    "image_features": lambda df: image_features(df, "bytes", "image_id"),
+    "validate_image_table": lambda df: validate_image_table(df).violations,
+    "decode_stub": lambda df: decode_stub(
+        df.select(F.xxhash64("image_id").alias("id"), "bytes"), "bytes",
+        fake=True),
+}
+VIDEO_OPERATORS = {
+    "video_frame_features": lambda df: video_frame_features(
+        df, "bytes", "video_id", every_nth=2),
+    "validate_video_table": lambda df: validate_video_table(df).violations,
+}
+
+
+def _parquet(tmp_path_factory, frame, name):
+    src = str(tmp_path_factory.mktemp("kernel") / name)
+    frame.write.parquet(src)
+    return frame.sparkSession.read.parquet(src)
+
+
+@pytest.fixture(scope="module")
+def parquet_images(spark, tmp_path_factory):
+    return _parquet(tmp_path_factory, FX.image_table_df(spark, 40, parts=2),
+                    "images")
+
+
+@pytest.fixture(scope="module")
+def parquet_videos(spark, tmp_path_factory):
+    return _parquet(tmp_path_factory, FX.video_table_df(spark, 20, parts=2),
+                    "videos")
+
+
+@pytest.mark.parametrize("name", sorted(IMAGE_OPERATORS))
+def test_image_operator_plans_one_arrow_stage(spark, parquet_images, name):
+    _plans_one_arrow_stage(IMAGE_OPERATORS[name](parquet_images))
+
+
+@pytest.mark.parametrize("name", sorted(VIDEO_OPERATORS))
+def test_video_operator_plans_one_arrow_stage(spark, parquet_videos, name):
+    _plans_one_arrow_stage(VIDEO_OPERATORS[name](parquet_videos))
+
+
+# ---------------------------------------------------------------------------
+# row equality of the image, video and stub operators over one mixed
+# table, against the codecs applied clip by clip in this process
+# ---------------------------------------------------------------------------
+
+_IMG = FX.synth_image_array(3)
+_MIXED_PAYLOADS = [
+    encode_ppm(_IMG), encode_bmp(_IMG), encode_ppm(FX.synth_image_array(8)),
+    FX.synth_video_bytes(2), FX.synth_video_bytes(5), None,
+    b"BM\x00trunc", b"YUV4MPEG2 W0", b"",
+]
+
+
+def _mixed_frame(spark, id_type):
+    # long ids beyond 2^53 and string ids, one of them null: all must
+    # come back unchanged (a pandas round trip turns a long column with
+    # a null into float64 and merges neighbouring ids)
+    ids = ([(1 << 62) + k for k in range(len(_MIXED_PAYLOADS))]
+           if id_type == "long"
+           else [f"item-{k}" for k in range(len(_MIXED_PAYLOADS))])
+    ids[-1] = None
+    return spark.createDataFrame(
+        list(zip(ids, _MIXED_PAYLOADS)),
+        f"item {id_type}, payload binary"), ids
+
+
+@pytest.fixture(scope="module", params=["long", "string"])
+def mixed(spark, request):
+    return _mixed_frame(spark, request.param)
+
+
+def _image_rows(ids, per_image, n_null):
+    rows = []
+    for rid, buf in zip(ids, _MIXED_PAYLOADS):
+        try:
+            codec, arr = decode_image_bytes(buf)
+            rows.append((rid, True, codec, arr.shape[1], arr.shape[0],
+                         *per_image(arr, buf)))
+        except ValueError:
+            rows.append((rid, False) + (None,) * (3 + n_null))
+    return rows
+
+
+def _sorted(rows):
+    return sorted(map(tuple, rows), key=repr)
+
+
+def test_decode_images_rows(spark, mixed):
+    df, ids = mixed
+    out = decode_images(df, "payload", "item")
+    assert out.columns == ["id", "ok", "codec", "width", "height",
+                           "payload_sha256"]
+    assert out.schema["id"].dataType == df.schema["item"].dataType
+    assert _sorted(out.collect()) == _sorted(_image_rows(
+        ids, lambda arr, buf: (hashlib.sha256(buf).hexdigest(),), 1))
+
+
+def test_image_features_rows(spark, mixed):
+    df, ids = mixed
+    out = image_features(df, "payload", "item")
+    assert out.columns == ["id", "ok", "codec", "width", "height", "mean_r",
+                           "mean_g", "mean_b", "dhash"]
+
+    def feats(arr, buf):
+        return (*map(float, arr.reshape(-1, 3).mean(axis=0)), dhash64(arr))
+
+    expected = _image_rows(ids, feats, 4)
+    # a 64-bit dhash beyond float precision must come back exact
+    assert any(r[-1] is not None and abs(r[-1]) > 1 << 53 for r in expected)
+    assert _sorted(out.collect()) == _sorted(expected)
+
+
+@pytest.mark.parametrize("every_nth", [0, 1, 2])
+def test_video_frame_features_rows(spark, mixed, every_nth):
+    df, ids = mixed
+    out = video_frame_features(df, "payload", "item", every_nth=every_nth)
+    assert out.columns == ["id", "ok", "width", "height",
+                           "n_frames_sampled", "frame_mean_luma"]
+    expected = []
+    for rid, buf in zip(ids, _MIXED_PAYLOADS):
+        try:
+            if buf is None:
+                raise ValueError("null payload")
+            w, h = decode_y4m_header(buf)[:2]
+            lumas = [float(f[:, :, 0].mean())
+                     for _i, f in iter_y4m_frames(buf, every_nth)]
+            expected.append((rid, True, w, h, len(lumas), lumas))
+        except ValueError:
+            expected.append((rid, False, None, None, None, None))
+    # every_nth=0 fails every clip, one ok=false row each
+    assert any(r[1] for r in expected) == (every_nth > 0)
+    assert _sorted(out.collect()) == _sorted(expected)
+
+
+def test_decode_stub_rows(spark):
+    # the stub's id field is a long
+    df, ids = _mixed_frame(spark, "long")
+    out = decode_stub(df.withColumnRenamed("item", "id"), "payload",
+                      fake=True)
+    assert out.columns == ["id", "ok", "width", "height", "n_frames",
+                           "payload_sha256"]
+    expected = []
+    for rid, buf in zip(ids, _MIXED_PAYLOADS):
+        if buf is None:
+            expected.append((rid, False, None, None, None, None))
+            continue
+        digest = hashlib.sha256(buf).hexdigest()
+        h = int(digest[:8], 16)
+        expected.append((rid, True, 64 + h % 1920, 64 + (h >> 8) % 1080,
+                         1 + (h >> 16) % 240, digest))
+    assert _sorted(out.collect()) == _sorted(expected)
