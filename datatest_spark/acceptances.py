@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .caching import CacheHandle, evict_all
 from .differences import BaseDifference, Deviation, Extra, Invalid, Missing
+from .predicates import sequence_ratio_at_least
 from .schema import DEVIATION, EXTRA, INVALID, MISSING, local_frame
 
 __all__ = ["accepted", "BaseAcceptance"]
@@ -744,28 +745,8 @@ class AcceptedFuzzy(BaseAcceptance):
 
     def mark_df(self, violations: DataFrame, out_col: str,
                 gate: Optional[Column] = None) -> DataFrame:
-        from pyspark.sql import types as T
-
-        cutoff = self.cutoff
-
-        @F.pandas_udf(T.BooleanType())
-        def ratio_ok(a: pd.Series, b: pd.Series) -> pd.Series:
-            out = []
-            for x, y in zip(a, b):
-                if x is None or y is None:
-                    out.append(False)
-                    continue
-                try:
-                    out.append(
-                        difflib.SequenceMatcher(a=x, b=y).ratio() >= cutoff
-                    )
-                except TypeError:
-                    out.append(False)
-            return pd.Series(out, dtype="boolean")
-
-        mask = (F.col("diff_type") == INVALID) & F.coalesce(
-            ratio_ok(F.col("invalid"), F.col("expected")), F.lit(False)
-        )
+        mask = (F.col("diff_type") == INVALID) & sequence_ratio_at_least(
+            F.col("invalid"), F.col("expected"), self.cutoff)
         return violations.withColumn(out_col, mask)
 
 

@@ -45,7 +45,8 @@ from pyspark.sql import types as T
 
 from .payload import _map_clips
 from .requirements import Rule, ValidationContext, finalize_cols
-from .schema import DEVIATION, INVALID, explode_violations
+from .schema import (DEVIATION, INVALID, explode_violations,
+                     partition_column, violation_struct)
 
 __all__ = ["decode_info", "AudioConsistencyRule",
            "audio_consistency", "pcm_snr_db", "audio_features",
@@ -208,6 +209,21 @@ DECODE_INFO_SCHEMA = T.StructType(
 )
 
 
+#: The audio table's partition column: audio-table rules attribute their
+#: rows to it when the caller names no partition column and the table
+#: has it.
+AUDIO_PARTITION_COL = "part_id"
+
+
+def audio_partition_col(ctx: ValidationContext) -> Optional[str]:
+    """The partition column of an audio-table rule compiled in *ctx*:
+    the context's, or :data:`AUDIO_PARTITION_COL` when the context
+    names none and the table has it."""
+    if ctx.partition_col is None and AUDIO_PARTITION_COL in ctx.df.columns:
+        return AUDIO_PARTITION_COL
+    return ctx.partition_col
+
+
 def decode_info(df: DataFrame, with_snr: bool = False,
                 with_rms: bool = True,
                 carry: Optional[list] = None,
@@ -226,10 +242,10 @@ def decode_info(df: DataFrame, with_snr: bool = False,
     conversion + reduction per clip; the column is emitted as NULL).
 
     The declared ``sr_hz``/``dur_ms``/``codec`` come through unchanged,
-    and ``partition_id`` is ``partition_col`` (default ``part_id``) as
-    a string.  ``carry`` passes extra input columns through the decode
-    stage ZERO-COPY (the output batch references the input batch's
-    Arrow arrays): consumers that need a small raw column alongside the
+    and ``partition_id`` is ``partition_col`` as a string (NULL when
+    None; ``ValueError`` when ``df`` lacks it).  ``carry`` passes extra
+    input columns through the decode stage ZERO-COPY (the output batch
+    references the input batch's Arrow arrays): consumers that need a small raw column alongside the
     decode output (e.g. the suite's transcript ref-match) can then read
     this one pass instead of re-scanning the payload table with its
     full split fan-out.  Names that are not input columns or that
@@ -257,10 +273,11 @@ def decode_info(df: DataFrame, with_snr: bool = False,
         return (sr, int(round(1000.0 * ns / sr)), ns, rms,
                 hashlib.sha256(pcm).hexdigest(), snr)
 
-    return _map_clips(df, per_clip, DECODE_INFO_SCHEMA,
-                      carry=["sr_hz", "dur_ms", "codec", *carried],
-                      partition_col=partition_col or "part_id",
-                      decode=decode_bytes)
+    return _map_clips(
+        df.withColumn("partition_id", partition_column(df, partition_col)),
+        per_clip, DECODE_INFO_SCHEMA,
+        carry=["sr_hz", "dur_ms", "codec", "partition_id", *carried],
+        decode=decode_bytes)
 
 
 def _fixture_expected_pcm_by_id(clip_id):
@@ -418,11 +435,9 @@ class TranscriptRateRule(Rule):
         self.use_decoded = use_decoded
 
     def plan(self, ctx: ValidationContext) -> DataFrame:
-        df = ctx.df
+        df = ctx.df.withColumn(
+            "partition_id", partition_column(ctx.df, audio_partition_col(ctx)))
         rid = self.rule_id
-        part = ctx.partition_col or "part_id"
-        part_col = (F.col(part) if part in df.columns
-                    else F.lit(None)).cast("string")
         n_words = F.when(
             F.col("transcript").isNull()
             | (F.trim(F.col("transcript")) == F.lit("")),
@@ -435,7 +450,7 @@ class TranscriptRateRule(Rule):
                 key=F.col("clip_id"), column="transcript",
                 invalid=F.col("transcript"),
                 expected=F.lit("non-empty transcript"),
-                partition_id=part_col,
+                partition_id=F.col("partition_id"),
             )
         )
 
@@ -447,40 +462,40 @@ class TranscriptRateRule(Rule):
 
             base = _map_clips(
                 df.filter(n_words > 0).withColumn("n_words", n_words),
-                per_clip, _RATE_SCHEMA, carry=["n_words"],
-                partition_col=part, decode=decode_bytes)
+                per_clip, _RATE_SCHEMA, carry=["n_words", "partition_id"],
+                decode=decode_bytes)
         else:
             base = df.filter(n_words > 0).select(
                 F.col("clip_id"), F.lit(True).alias("ok"),
                 n_words.cast("long").alias("n_words"),
                 F.round(n_words / (F.col("dur_ms") / F.lit(1000.0)), 6)
                 .alias("wps"),
-                part_col.alias("partition_id"),
+                F.col("partition_id"),
             )
 
         wps = F.col("wps")
         checks = [
             F.when(
                 F.col("ok") & wps.isNotNull() & (wps > self.max_wps),
-                F.struct(*finalize_cols(
+                violation_struct(
                     f"{rid}:wps", DEVIATION,
                     key=F.col("clip_id"), column="transcript",
                     invalid=wps, expected=F.lit(self.max_wps),
                     deviation=F.round(wps - self.max_wps, 6),
                     expected_num=F.lit(self.max_wps),
                     partition_id=F.col("partition_id"),
-                )),
+                ),
             ),
             F.when(
                 F.col("ok") & wps.isNotNull() & (wps < self.min_wps),
-                F.struct(*finalize_cols(
+                violation_struct(
                     f"{rid}:wps", DEVIATION,
                     key=F.col("clip_id"), column="transcript",
                     invalid=wps, expected=F.lit(self.min_wps),
                     deviation=F.round(wps - self.min_wps, 6),
                     expected_num=F.lit(self.min_wps),
                     partition_id=F.col("partition_id"),
-                )),
+                ),
             ),
         ]
         return empty.unionByName(explode_violations(base, checks))
@@ -775,7 +790,7 @@ class AudioConsistencyRule(Rule):
 
             info = decode_info(ctx.df, with_snr=False, with_rms=False,
                                carry=carry,
-                               partition_col=ctx.partition_col)
+                               partition_col=audio_partition_col(ctx))
             # Re-key the ~100 B/row decode output to session parallelism
             # before persisting: the decode stage keeps the payload
             # scan's full split fan-out (it runs as the map side of this
@@ -804,52 +819,43 @@ class AudioConsistencyRule(Rule):
         else:
             info = decode_info(ctx.df, with_snr=self.check_snr,
                                with_rms=False,
-                               partition_col=ctx.partition_col)
+                               partition_col=audio_partition_col(ctx))
         rid = self.rule_id
-        part = F.col("partition_id")
-
-        def v(rule, diff_type, invalid, expected, deviation=None, expected_num=None, column=None):
-            return F.struct(
-                *finalize_cols(
-                    rule,
-                    diff_type,
-                    key=F.col("clip_id"),
-                    column=column,
-                    invalid=invalid,
-                    expected=expected,
-                    deviation=deviation,
-                    expected_num=expected_num,
-                    partition_id=part,
-                )
-            )
-
+        clip, part = F.col("clip_id"), F.col("partition_id")
         checks = [
             F.when(
                 ~F.col("ok"),
-                v(f"{rid}:decodable", F.lit(INVALID), F.col("error"),
-                  F.lit("decodable audio payload"), column="bytes"),
+                violation_struct(
+                    f"{rid}:decodable", INVALID, key=clip, column="bytes",
+                    invalid=F.col("error"),
+                    expected=F.lit("decodable audio payload"),
+                    partition_id=part),
             ),
             F.when(
                 F.col("ok") & (F.col("dec_sr_hz") != F.col("sr_hz")),
-                v(f"{rid}:sr_hz", F.lit(DEVIATION), F.col("sr_hz"),
-                  F.col("dec_sr_hz"),
-                  deviation=(F.col("sr_hz") - F.col("dec_sr_hz")).cast("double"),
-                  expected_num=F.col("dec_sr_hz").cast("double"),
-                  column="sr_hz"),
+                violation_struct(
+                    f"{rid}:sr_hz", DEVIATION, key=clip, column="sr_hz",
+                    invalid=F.col("sr_hz"), expected=F.col("dec_sr_hz"),
+                    deviation=(F.col("sr_hz") - F.col("dec_sr_hz")).cast("double"),
+                    expected_num=F.col("dec_sr_hz").cast("double"),
+                    partition_id=part),
             ),
             F.when(
                 F.col("ok")
                 & (F.abs(F.col("dec_dur_ms") - F.col("dur_ms")) > self.dur_tol_ms),
-                v(f"{rid}:dur_ms", F.lit(DEVIATION), F.col("dur_ms"),
-                  F.col("dec_dur_ms"),
-                  deviation=(F.col("dur_ms") - F.col("dec_dur_ms")).cast("double"),
-                  expected_num=F.col("dec_dur_ms").cast("double"),
-                  column="dur_ms"),
+                violation_struct(
+                    f"{rid}:dur_ms", DEVIATION, key=clip, column="dur_ms",
+                    invalid=F.col("dur_ms"), expected=F.col("dec_dur_ms"),
+                    deviation=(F.col("dur_ms") - F.col("dec_dur_ms")).cast("double"),
+                    expected_num=F.col("dec_dur_ms").cast("double"),
+                    partition_id=part),
             ),
             F.when(
                 F.col("ok") & ~F.col("dec_codec").eqNullSafe(F.col("codec")),
-                v(f"{rid}:codec", F.lit(INVALID), F.col("codec"),
-                  F.col("dec_codec"), column="codec"),
+                violation_struct(
+                    f"{rid}:codec", INVALID, key=clip, column="codec",
+                    invalid=F.col("codec"), expected=F.col("dec_codec"),
+                    partition_id=part),
             ),
         ]
         if self.check_snr and not use_hash_path:
@@ -858,11 +864,13 @@ class AudioConsistencyRule(Rule):
                     F.col("ok")
                     & F.col("snr_db").isNotNull()
                     & (F.col("snr_db") < self.min_snr_db),
-                    v(f"{rid}:snr", F.lit(DEVIATION), F.col("snr_db"),
-                      F.lit(self.min_snr_db),
-                      deviation=F.col("snr_db") - self.min_snr_db,
-                      expected_num=F.lit(self.min_snr_db),
-                      column="bytes"),
+                    violation_struct(
+                        f"{rid}:snr", DEVIATION, key=clip, column="bytes",
+                        invalid=F.col("snr_db"),
+                        expected=F.lit(self.min_snr_db),
+                        deviation=F.col("snr_db") - self.min_snr_db,
+                        expected_num=F.lit(self.min_snr_db),
+                        partition_id=part),
                 )
             )
 
@@ -891,7 +899,7 @@ class AudioConsistencyRule(Rule):
             slow = decode_info(
                 ctx.df.join(F.broadcast(mismatched), "clip_id", "left_semi"),
                 with_snr=True, with_rms=False,
-                partition_col=ctx.partition_col,
+                partition_col=audio_partition_col(ctx),
             )
             snr_viol = slow.filter(
                 F.col("ok")
@@ -2207,20 +2215,22 @@ class SpeechRatioRule(Rule):
                                                     msp))
             return (float(np.round(sp / n, 6)) if n else None,)
 
-        base = _map_clips(ctx.df, per_clip, _SPEECH_RATIO_SCHEMA,
-                          partition_col=ctx.partition_col or "part_id",
-                          decode=decode_bytes)
+        base = _map_clips(
+            ctx.df.withColumn("partition_id", partition_column(
+                ctx.df, audio_partition_col(ctx))),
+            per_clip, _SPEECH_RATIO_SCHEMA, carry=["partition_id"],
+            decode=decode_bytes)
         r = F.col("speech_ratio")
         viol = F.when(
             F.col("ok") & r.isNotNull() & (r < self.min_ratio),
-            F.struct(*finalize_cols(
+            violation_struct(
                 f"{rid}:ratio", DEVIATION,
                 key=F.col("clip_id"), column="bytes",
                 invalid=r, expected=F.lit(self.min_ratio),
                 deviation=F.round(r - self.min_ratio, 6),
                 expected_num=F.lit(self.min_ratio),
                 partition_id=F.col("partition_id"),
-            )),
+            ),
         )
         return explode_violations(base, [viol])
 

@@ -47,8 +47,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..audio import audio_partition_col
 from ..requirements import Rule, ValidationContext, finalize_cols
-from ..schema import DEVIATION, INVALID
+from ..schema import DEVIATION, INVALID, partition_column
 
 __all__ = ["transcript_cer", "transcript_wer", "word_edit_distance",
            "normalize_transcript", "TranscriptFidelityRule",
@@ -222,12 +223,9 @@ class TranscriptFidelityRule(Rule):
     def plan(self, ctx: ValidationContext) -> DataFrame:
         df = ctx.df
         rid = self.rule_id
-        part = ctx.partition_col or "part_id"
-        part_col = (F.col(part) if part in df.columns
-                    else F.lit(None)).cast("string")
         h = df.select(
             F.col(self.id_col), F.col(self.hyp_col).alias("__hyp"),
-            part_col.alias("__part"),
+            partition_column(df, audio_partition_col(ctx)).alias("partition_id"),
         )
         r = self.ref.select(
             F.col(self.id_col), F.col(self.ref_col).alias("__ref"),
@@ -241,7 +239,7 @@ class TranscriptFidelityRule(Rule):
                 key=F.col(self.id_col), column=self.hyp_col,
                 invalid=F.col("__hyp"),
                 expected=F.lit("reference transcript present"),
-                partition_id=F.col("__part"),
+                partition_id=F.col("partition_id"),
             )
         )
 
@@ -264,7 +262,7 @@ class TranscriptFidelityRule(Rule):
                     expected=F.lit(self.max_cer),
                     deviation=F.round(F.col("__cer") - self.max_cer, 6),
                     expected_num=F.lit(self.max_cer),
-                    partition_id=F.col("__part"),
+                    partition_id=F.col("partition_id"),
                 )
             )
         )

@@ -285,62 +285,55 @@ class ImageConsistencyRule(_Rule):
         self.decl_height_col = decl_height_col
 
     def plan(self, ctx) -> DataFrame:
-        from ..requirements import finalize_cols
-        from ..schema import DEVIATION, INVALID, explode_violations
+        from ..schema import (DEVIATION, INVALID, explode_violations,
+                              violation_struct)
 
         df = ctx.df
-        # a partition column the table lacks is left out of the select,
-        # and the kernel reads the missing "_part" as a NULL partition_id
         info = _map_clips(
             df.select(
                 F.col(self.id_col).alias("clip_id"),
                 F.col(self.binary_col).alias("bytes"),
                 F.col(self.decl_width_col).alias("_dw"),
                 F.col(self.decl_height_col).alias("_dh"),
-                *[F.col(c).alias("_part") for c in [ctx.partition_col]
-                  if c in df.columns]),
+                ctx.partition_expr().alias("partition_id")),
             lambda row, arr: (arr.shape[1], arr.shape[0]),
             T.StructType([
                 T.StructField("clip_id", df.schema[self.id_col].dataType),
                 T.StructField("ok", T.BooleanType(), False),
                 *_fields(("width", _INT), ("height", _INT),
                          ("_dw", _INT), ("_dh", _INT))]),
-            decode=decode_image_bytes, carry=["_dw", "_dh"],
-            partition_col="_part")
+            decode=decode_image_bytes, carry=["_dw", "_dh", "partition_id"])
         rid = self.rule_id
-
-        def v(rule, diff_type, column, invalid, expected,
-              deviation=None, expected_num=None):
-            return F.struct(
-                *finalize_cols(
-                    rule, diff_type,
-                    key=F.col("clip_id"), column=column,
-                    invalid=invalid, expected=expected,
-                    deviation=deviation, expected_num=expected_num,
-                    partition_id=F.col("partition_id"),
-                )
-            )
-
+        clip, part = F.col("clip_id"), F.col("partition_id")
         checks = [
             F.when(
                 ~F.col("ok"),
-                v(f"{rid}:decodable", INVALID, self.binary_col,
-                  F.lit("undecodable image payload"),
-                  F.lit("decodable ppm/bmp payload")),
+                violation_struct(
+                    f"{rid}:decodable", INVALID, key=clip,
+                    column=self.binary_col,
+                    invalid=F.lit("undecodable image payload"),
+                    expected=F.lit("decodable ppm/bmp payload"),
+                    partition_id=part),
             ),
             F.when(
                 F.col("ok") & (F.col("_dw") != F.col("width")),
-                v(f"{rid}:width", DEVIATION, self.decl_width_col,
-                  F.col("_dw"), F.col("width"),
-                  deviation=(F.col("_dw") - F.col("width")).cast("double"),
-                  expected_num=F.col("width").cast("double")),
+                violation_struct(
+                    f"{rid}:width", DEVIATION, key=clip,
+                    column=self.decl_width_col,
+                    invalid=F.col("_dw"), expected=F.col("width"),
+                    deviation=(F.col("_dw") - F.col("width")).cast("double"),
+                    expected_num=F.col("width").cast("double"),
+                    partition_id=part),
             ),
             F.when(
                 F.col("ok") & (F.col("_dh") != F.col("height")),
-                v(f"{rid}:height", DEVIATION, self.decl_height_col,
-                  F.col("_dh"), F.col("height"),
-                  deviation=(F.col("_dh") - F.col("height")).cast("double"),
-                  expected_num=F.col("height").cast("double")),
+                violation_struct(
+                    f"{rid}:height", DEVIATION, key=clip,
+                    column=self.decl_height_col,
+                    invalid=F.col("_dh"), expected=F.col("height"),
+                    deviation=(F.col("_dh") - F.col("height")).cast("double"),
+                    expected_num=F.col("height").cast("double"),
+                    partition_id=part),
             ),
         ]
         return explode_violations(info, checks)

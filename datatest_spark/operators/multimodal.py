@@ -29,20 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..payload import _map_clips
+from ..payload import _map_clips, _map_id_payloads
 
 __all__ = ["decode_stub", "extract_clip_features"]
-
-DECODE_STUB_SCHEMA = T.StructType(
-    [
-        T.StructField("clip_id", T.LongType(), True),
-        T.StructField("ok", T.BooleanType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("n_frames", T.IntegerType(), True),
-        T.StructField("payload_sha256", T.StringType(), True),
-    ]
-)
 
 
 def decode_stub(df: DataFrame, binary_col: str, id_col: str = "id",
@@ -53,7 +42,9 @@ def decode_stub(df: DataFrame, binary_col: str, id_col: str = "id",
     ``fake=True`` a deterministic stand-in derives (width, height,
     n_frames) from the payload hash so the batch plumbing, schema, and
     downstream rules are fully exercised.  Null payloads are
-    ``ok=false`` rows either way.
+    ``ok=false`` rows either way.  The output is ``(id, ok, width,
+    height, n_frames, payload_sha256)``, ``id`` keeping the ``id_col``
+    type.
     """
 
     def decode(view):
@@ -72,11 +63,12 @@ def decode_stub(df: DataFrame, binary_col: str, id_col: str = "id",
         return (64 + h % 1920, 64 + (h >> 8) % 1080, 1 + (h >> 16) % 240,
                 digest)
 
-    return _map_clips(
-        df.select(F.col(id_col).alias("clip_id"),
-                  F.col(binary_col).alias("bytes")),
-        per_clip, DECODE_STUB_SCHEMA, decode=decode,
-    ).withColumnRenamed("clip_id", "id")
+    return _map_id_payloads(
+        df, binary_col, id_col, per_clip,
+        [T.StructField(c, T.IntegerType(), True)
+         for c in ("width", "height", "n_frames")]
+        + [T.StructField("payload_sha256", T.StringType(), True)],
+        decode=decode)
 
 
 def extract_clip_features(df: DataFrame, binary_col: str = "bytes",

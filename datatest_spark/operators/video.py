@@ -212,53 +212,44 @@ class VideoConsistencyRule(_Rule):
         self.decl_frames_col = decl_frames_col
 
     def plan(self, ctx) -> DataFrame:
-        from ..requirements import finalize_cols
-        from ..schema import DEVIATION, INVALID, explode_violations
+        from ..schema import (DEVIATION, INVALID, explode_violations,
+                              violation_struct)
 
         df = ctx.df
-        # a partition column the table lacks is left out of the select,
-        # and the kernel reads the missing "_part" as a NULL partition_id
         info = _map_clips(
             df.select(
                 F.col(self.id_col).alias("clip_id"),
                 F.col(self.binary_col).alias("bytes"),
                 F.col(self.decl_frames_col).alias("_df"),
-                *[F.col(c).alias("_part") for c in [ctx.partition_col]
-                  if c in df.columns]),
+                ctx.partition_expr().alias("partition_id")),
             lambda row, header, buf: (count_y4m_frames(buf)[2],),
             T.StructType([
                 T.StructField("clip_id", df.schema[self.id_col].dataType),
                 T.StructField("ok", T.BooleanType(), False),
                 T.StructField("n_frames", T.IntegerType(), True),
                 T.StructField("_df", T.IntegerType(), True)]),
-            decode=_decode_y4m, carry=["_df"], partition_col="_part")
+            decode=_decode_y4m, carry=["_df", "partition_id"])
         rid = self.rule_id
-
-        def v(rule, diff_type, column, invalid, expected,
-              deviation=None, expected_num=None):
-            return F.struct(
-                *finalize_cols(
-                    rule, diff_type,
-                    key=F.col("clip_id"), column=column,
-                    invalid=invalid, expected=expected,
-                    deviation=deviation, expected_num=expected_num,
-                    partition_id=F.col("partition_id"),
-                )
-            )
-
+        clip, part = F.col("clip_id"), F.col("partition_id")
         checks = [
             F.when(
                 ~F.col("ok"),
-                v(f"{rid}:decodable", INVALID, self.binary_col,
-                  F.lit("undecodable video payload"),
-                  F.lit("decodable y4m payload")),
+                violation_struct(
+                    f"{rid}:decodable", INVALID, key=clip,
+                    column=self.binary_col,
+                    invalid=F.lit("undecodable video payload"),
+                    expected=F.lit("decodable y4m payload"),
+                    partition_id=part),
             ),
             F.when(
                 F.col("ok") & (F.col("_df") != F.col("n_frames")),
-                v(f"{rid}:frames", DEVIATION, self.decl_frames_col,
-                  F.col("_df"), F.col("n_frames"),
-                  deviation=(F.col("_df") - F.col("n_frames")).cast("double"),
-                  expected_num=F.col("n_frames").cast("double")),
+                violation_struct(
+                    f"{rid}:frames", DEVIATION, key=clip,
+                    column=self.decl_frames_col,
+                    invalid=F.col("_df"), expected=F.col("n_frames"),
+                    deviation=(F.col("_df") - F.col("n_frames")).cast("double"),
+                    expected_num=F.col("n_frames").cast("double"),
+                    partition_id=part),
             ),
         ]
         return explode_violations(info, checks)

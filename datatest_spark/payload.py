@@ -13,8 +13,6 @@ name their id and payload columns differently alias them to
 
 from __future__ import annotations
 
-from typing import Optional
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,15 +46,14 @@ def _binary_views(arr, n_rows):
 
 
 def _map_clips(df: DataFrame, per_clip, out_schema: T.StructType, *,
-               decode, carry=(),
-               partition_col: Optional[str] = None) -> DataFrame:
+               decode, carry=()) -> DataFrame:
     """The one Arrow payload kernel: decode every payload of ``df``
     once and map it through ``per_clip`` in a single ``mapInArrow``
     stage.
 
-    The stage reads only ``clip_id``, ``bytes``, the ``carry`` columns
-    and ``partition_col``, pruned before the Python stage so the Arrow
-    transfer ships no dead bytes.  Each payload is a zero-copy
+    The stage reads only ``clip_id``, ``bytes`` and the ``carry``
+    columns, pruned before the Python stage so the Arrow transfer ships
+    no dead bytes.  Each payload is a zero-copy
     ``memoryview`` of the Arrow data buffer (no per-row ``bytes``
     copies); a null payload reaches ``decode`` as ``None``.
 
@@ -79,9 +76,6 @@ def _map_clips(df: DataFrame, per_clip, out_schema: T.StructType, *,
     * ``error`` — the ``ValueError`` text, null on ``ok`` rows;
     * ``dec_codec`` — the codec ``decode`` returned, null on failure
       rows;
-    * ``partition_id`` — the string value of ``partition_col``; NULL
-      when ``partition_col`` is None or ``df`` lacks it.  Filled when
-      ``out_schema`` names it or ``partition_col`` is given;
     * ``clip_id`` and every carried name — the input values, cast to
       the ``out_schema`` type, so failure rows keep them too.  Those
       ``out_schema`` lacks (other than ``clip_id``) are appended with
@@ -95,17 +89,12 @@ def _map_clips(df: DataFrame, per_clip, out_schema: T.StructType, *,
     given = {f.name: f.dataType for f in out_schema.fields}
     row_names = [c for c in dict.fromkeys(["clip_id", *carry])
                  if c != "bytes"]
-    inputs = {c: F.col(c) for c in row_names}
-    if partition_col is not None or "partition_id" in given:
-        inputs["partition_id"] = (
-            F.col(partition_col) if partition_col in df.columns
-            else F.lit(None)).cast("string")
     pruned = df.select(F.col("bytes"), *[
-        (e.cast(given[c]) if c in given else e).alias(c)
-        for c, e in inputs.items()])
-    pos = {c: i + 1 for i, c in enumerate(inputs)}
+        (F.col(c).cast(given[c]) if c in given else F.col(c)).alias(c)
+        for c in row_names])
+    pos = {c: i + 1 for i, c in enumerate(row_names)}
     schema = T.StructType(list(out_schema.fields) + [
-        pruned.schema[c] for c in inputs
+        pruned.schema[c] for c in row_names
         if c not in given and c != "clip_id"])
     arrow_schema = to_arrow_schema(schema)
     computed = [c for c in given

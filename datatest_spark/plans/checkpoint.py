@@ -33,15 +33,11 @@ from pyspark.sql import functions as F
 
 from ..caching import unpersist_result
 from ..requirements import Rule
-from ..schema import local_frame
+from ..schema import (GLOBAL_PARTITION, bucket_global, local_frame,
+                      partition_column, verdict_counts)
 from ..validation import Engine
 
 __all__ = ["run_checkpointed", "CheckpointedRun", "GLOBAL_PARTITION"]
-
-# Bucket for violations that no single data partition can own
-# (aggregate/join rules: uniqueness across partitions, set membership,
-# drift).  It gets its own verdict row so these can never silent-pass.
-GLOBAL_PARTITION = "__global__"
 
 VERDICT_SCHEMA = (
     "partition_id string, passed boolean, failed_mandatory boolean, "
@@ -106,6 +102,7 @@ def run_checkpointed(
     and join rules are unaffected (they re-shuffle on their own keys,
     where AQE's skew handling applies — see :func:`..skew.enable_adaptive`).
     """
+    part = partition_column(df, partition_col)
     spark = df.sparkSession
     engine = Engine(spark)
     rhash = ruleset_hash(list(rules) + list(mandatory or []))
@@ -116,10 +113,7 @@ def run_checkpointed(
     os.makedirs(checkpoint_dir, exist_ok=True)
 
     committed = set(_committed_partitions(spark, verdict_path, rhash))
-    all_parts = [
-        str(r[0])
-        for r in df.select(F.col(partition_col).cast("string")).distinct().collect()
-    ]
+    all_parts = [str(r[0]) for r in df.select(part).distinct().collect()]
     todo = sorted(p for p in all_parts if p not in committed)
     skipped = sorted(committed & set(all_parts))
 
@@ -128,7 +122,7 @@ def run_checkpointed(
         return CheckpointedRun(checkpoint_dir, verdicts, skipped, [])
 
     start = time.time()
-    work = df.filter(F.col(partition_col).cast("string").isin(todo))
+    work = df.filter(part.isin(todo))
     if salt_buckets:
         from .skew import salted_repartition
 
@@ -146,16 +140,9 @@ def run_checkpointed(
                 work, list(mandatory), partition_col=partition_col
             )
             compiled.append(mand_viol)
-            mand_rows = (
-                mand_viol.withColumn(
-                    "partition_id",
-                    F.coalesce(F.col("partition_id"), F.lit(GLOBAL_PARTITION)),
-                )
-                .groupBy("partition_id")
-                .count()
-                .collect()
-            )
-            mand_counts = {r["partition_id"]: r["count"] for r in mand_rows}
+            mand_counts = {
+                r["partition_id"]: r["n_violations"]
+                for r in verdict_counts(mand_viol).collect()}
             mandatory_failed_parts = sorted(mand_counts)
             if GLOBAL_PARTITION in mand_counts:
                 # a global mandatory rule failed — fail-fast everything
@@ -163,9 +150,7 @@ def run_checkpointed(
                 gated = work.limit(0)
             elif mandatory_failed_parts:
                 # fail-fast: gated partitions skip the non-mandatory rules
-                gated = work.filter(
-                    ~F.col(partition_col).cast("string").isin(mandatory_failed_parts)
-                )
+                gated = work.filter(~part.isin(mandatory_failed_parts))
 
         violations = engine.compile(gated, list(rules),
                                     partition_col=partition_col)
@@ -174,13 +159,9 @@ def run_checkpointed(
             violations = violations.unionByName(mand_viol)
         # Aggregate-level violations (set/unique/subset extras, drift
         # rows) have no single source partition and arrive with NULL
-        # partition_id.  They MUST still fail the run: bucket them under
-        # '__global__' so they are counted in a verdict row instead of
-        # silently dropped.
-        violations = violations.withColumn(
-            "partition_id",
-            F.coalesce(F.col("partition_id"), F.lit(GLOBAL_PARTITION)),
-        )
+        # partition_id.  They MUST still fail the run: the global bucket
+        # counts them in a verdict row instead of silently dropping them.
+        violations = bucket_global(violations)
 
         # one job: write violations partitioned by partition_id
         (
@@ -208,24 +189,10 @@ def run_checkpointed(
         .withColumn("partition_id", F.col("partition_id").cast("string"))
         .filter((F.col("ruleset_hash") == rhash) & (F.col("run_id") == run_id))
     )
-    counts = (
-        written.groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_violations"),
-            F.sum((F.col("diff_type") == "MISSING").cast("long")).alias("n_missing"),
-            F.sum((F.col("diff_type") == "EXTRA").cast("long")).alias("n_extra"),
-            F.sum((F.col("diff_type") == "INVALID").cast("long")).alias("n_invalid"),
-            F.sum((F.col("diff_type") == "DEVIATION").cast("long")).alias(
-                "n_deviation"
-            ),
-        )
-        .collect()
-    )
-    count_map = {r["partition_id"]: r for r in counts}
-    row_counts = {
-        str(r[0]): r[1]
-        for r in work.groupBy(F.col(partition_col).cast("string")).count().collect()
-    }
+    count_map = {r["partition_id"]: r
+                 for r in verdict_counts(written).collect()}
+    row_counts = {str(r[0]): r[1]
+                  for r in work.groupBy(part).count().collect()}
 
     elapsed = time.time() - start
     now = time.strftime("%Y-%m-%dT%H:%M:%S")

@@ -154,11 +154,6 @@ def run_incremental(
     delta = read_iceberg_incremental(
         spark, table_path, from_snapshot_id=from_id,
         to_snapshot_id=current, allow_deletes=allow_deletes)
-    if partition_col not in delta.columns:
-        raise ValueError(
-            f"partition column {partition_col!r} not in the table "
-            f"(columns: {delta.columns})")
-
     range_dir = os.path.join(
         checkpoint_dir, "ranges",
         f"{from_id if from_id is not None else 'genesis'}-{current}")

@@ -319,3 +319,29 @@ def tuple_expr(pred: Predicate, cols: Sequence[Column], dtypes=None) -> Column:
     for p, c, d in zip(parts, cols, dtypes):
         expr = expr & F.coalesce(p.expr(c, d), F.lit(False))
     return expr
+
+
+def sequence_ratio_at_least(a: Column, b: Column, cutoff: float) -> Column:
+    """True where the Ratcliff–Obershelp similarity
+    ``difflib.SequenceMatcher(a=a, b=b).ratio()`` reaches ``cutoff``;
+    False where either side is NULL or not a sequence (``TypeError``).
+
+    The ratio is order-sensitive, so callers pass their sides in the
+    reference's order.  One Arrow-vectorized pandas UDF: Spark hoists
+    it into an ``ArrowEvalPython`` stage that sees every row of its
+    input, so callers filter to the rows that need the ratio first.
+    """
+
+    @F.pandas_udf(T.BooleanType())
+    def ratio_ok(x: pd.Series, y: pd.Series) -> pd.Series:
+        import difflib
+
+        out = []
+        for p, q in zip(x, y):
+            try:
+                out.append(difflib.SequenceMatcher(a=p, b=q).ratio() >= cutoff)
+            except TypeError:
+                out.append(False)
+        return pd.Series(out, dtype="boolean")
+
+    return F.coalesce(ratio_ok(a, b), F.lit(False))

@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .caching import CacheHandle
-from .predicates import Predicate, compile_predicate, tuple_expr
+from .predicates import (Predicate, compile_predicate,
+                         sequence_ratio_at_least, tuple_expr)
 from .schema import (
     DEVIATION,
     EXTRA,
@@ -41,8 +42,10 @@ from .schema import (
     MISSING,
     VIOLATION_SCHEMA,
     explode_violations,
+    finalize_cols,
     finalize_violations,
     local_frame,
+    partition_column,
     py_repr,
     repr_col,
     violation_struct,
@@ -73,7 +76,16 @@ _HANDLES: list = []
 
 
 class ValidationContext:
-    """Execution context shared by all rules in one validate() call."""
+    """Execution context shared by all rules in one validate() call.
+
+    The context decides the compile's partition column, and every rule
+    reads the ``partition_id`` of its violation rows from
+    :meth:`partition_expr` — the named ``partition_col`` as a string,
+    or a NULL string when none is named.  Naming a column the table
+    lacks raises ``ValueError`` here, before any rule compiles.  The
+    one exception is the audio-table rules' ``part_id`` fallback when
+    no column is named (``audio.audio_partition_col``).
+    """
 
     def __init__(
         self,
@@ -85,6 +97,7 @@ class ValidationContext:
         self.spark = df.sparkSession
         self.key_cols = list(key) if key else []
         self.partition_col = partition_col
+        self._partition = partition_column(df, partition_col)
         # frames rules persist for this compile; the compile's caller
         # attaches the handle to what it returns (caching.py)
         self.handle = CacheHandle(_HANDLES)
@@ -106,9 +119,7 @@ class ValidationContext:
     def partition_expr(self) -> Column:
         """The partition column as a string; a NULL string when the
         context has no partition column."""
-        if self.partition_col:
-            return F.col(self.partition_col).cast("string")
-        return F.lit(None).cast("string")
+        return self._partition
 
     def dtype(self, column: str) -> Optional[T.DataType]:
         for field in self.df.schema.fields:
@@ -374,21 +385,6 @@ class FuzzyRule(Rule):
         self.show_expected = show_expected
 
     def plan(self, ctx: ValidationContext) -> DataFrame:
-        cutoff = self.cutoff
-
-        @F.pandas_udf(T.BooleanType())
-        def fuzzy_ok(a: pd.Series, b: pd.Series) -> pd.Series:
-            import difflib
-
-            out = []
-            for x, y in zip(a, b):
-                try:
-                    m = difflib.SequenceMatcher(a=y, b=x)
-                    out.append(m.ratio() >= cutoff)
-                except TypeError:
-                    out.append(False)
-            return pd.Series(out, dtype="boolean")
-
         col = F.col(self.column)
         if self.expected_col is not None:
             exp = F.col(self.expected_col)
@@ -400,7 +396,8 @@ class FuzzyRule(Rule):
         # fragment 1 (JVM, codegen'd): drop exact matches
         mismatch = ctx.df.filter(~col.eqNullSafe(exp))
         # fragment 2 (Python): difflib only over the mismatches
-        viol = mismatch.filter(~F.coalesce(fuzzy_ok(col, exp), F.lit(False)))
+        viol = mismatch.filter(
+            ~sequence_ratio_at_least(exp, col, self.cutoff))
         return viol.select(
             finalize_cols(
                 self.rule_id,
@@ -645,38 +642,6 @@ class SetRule(Rule):
             )
         )
         return missing.unionByName(extra)
-
-
-def finalize_cols(
-    rule_id,
-    diff_type,
-    key=None,
-    column=None,
-    invalid=None,
-    expected=None,
-    deviation=None,
-    expected_num=None,
-    partition_id=None,
-):
-    """Column list matching VIOLATION_SCHEMA for plan-rule selects."""
-
-    def _s(c):
-        return c.cast("string") if c is not None else F.lit(None).cast("string")
-
-    def _d(c):
-        return c.cast("double") if c is not None else F.lit(None).cast("double")
-
-    return [
-        F.lit(rule_id).cast("string").alias("rule_id"),
-        _s(key).alias("key"),
-        F.lit(column).cast("string").alias("column"),
-        F.lit(diff_type).cast("string").alias("diff_type"),
-        _s(invalid).alias("invalid"),
-        _s(expected).alias("expected"),
-        _d(deviation).alias("deviation"),
-        _d(expected_num).alias("expected_num"),
-        _s(partition_id).alias("partition_id"),
-    ]
 
 
 class SubsetRule(Rule):
@@ -1283,7 +1248,7 @@ class RefMatchRule(Rule):
         df = ctx.df.select(
             F.col(self.on).alias("_on"),
             F.col(self.column).alias("_actual"),
-            ctx.partition_expr().alias("_part"),
+            ctx.partition_expr().alias("partition_id"),
         )
         ref = self.ref.select(
             F.col(self.on).alias("_on"),
@@ -1303,27 +1268,8 @@ class RefMatchRule(Rule):
         mismatch = j.filter(~F.coalesce(passed_jvm, F.lit(False)))
 
         if self.fuzzy_cutoff is not None:
-            cutoff = self.fuzzy_cutoff
-
-            @F.pandas_udf(T.BooleanType())
-            def fuzzy_ok(a: pd.Series, b: pd.Series) -> pd.Series:
-                import difflib
-
-                out = []
-                for x, y in zip(a, b):
-                    try:
-                        out.append(
-                            difflib.SequenceMatcher(a=y, b=x).ratio() >= cutoff
-                        )
-                    except TypeError:
-                        out.append(False)
-                return pd.Series(out, dtype="boolean")
-
-            mismatch = mismatch.filter(
-                ~F.coalesce(
-                    fuzzy_ok(F.col("_actual"), F.col("_expected")), F.lit(False)
-                )
-            )
+            mismatch = mismatch.filter(~sequence_ratio_at_least(
+                F.col("_expected"), F.col("_actual"), self.fuzzy_cutoff))
 
         return mismatch.select(
             finalize_cols(
@@ -1333,7 +1279,7 @@ class RefMatchRule(Rule):
                 column=self.column,
                 invalid=repr_col(F.col("_actual")),
                 expected=repr_col(F.col("_expected")),
-                partition_id=F.col("_part"),
+                partition_id=F.col("partition_id"),
             )
         )
 
@@ -1373,7 +1319,7 @@ class RefApproxRule(Rule):
         df = ctx.df.select(
             F.col(self.on).alias("_on"),
             F.col(self.column).try_cast("double").alias("_actual"),
-            ctx.partition_expr().alias("_part"),
+            ctx.partition_expr().alias("partition_id"),
         )
         ref = self.ref.select(
             F.col(self.on).alias("_on"),
@@ -1402,7 +1348,7 @@ class RefApproxRule(Rule):
                 expected=repr_col(exp),
                 deviation=F.when(F.col("_actual").isNotNull(), dev),
                 expected_num=F.when(F.col("_actual").isNotNull(), exp),
-                partition_id=F.col("_part"),
+                partition_id=F.col("partition_id"),
             )
         )
 
@@ -1464,7 +1410,7 @@ class ReconcileRule(Rule):
             *[F.col(k).alias(f"_k{i}") for i, k in enumerate(self.on)],
             F.lit(True).alias("_in_data"),
             *[F.col(c).alias(f"_a{j}") for j, c in enumerate(cols)],
-            ctx.partition_expr().alias("_part"),
+            ctx.partition_expr().alias("partition_id"),
         )
         ref = self.ref.select(
             *[F.col(k).alias(f"_k{i}") for i, k in enumerate(self.on)],
@@ -1480,7 +1426,7 @@ class ReconcileRule(Rule):
             key_out = repr_col(F.col("_k0"))
         else:
             key_out = _render_tuple([F.col(k) for k in knames])
-        part_out = F.col("_part")
+        part_out = F.col("partition_id")
 
         structs = []
         if self.check_missing:

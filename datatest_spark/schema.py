@@ -41,6 +41,11 @@ __all__ = [
     "DEVIATION",
     "repr_col",
     "violation_struct",
+    "finalize_cols",
+    "partition_column",
+    "GLOBAL_PARTITION",
+    "bucket_global",
+    "verdict_counts",
     "local_frame",
     "empty_violations",
     "finalize_violations",
@@ -99,10 +104,9 @@ def py_repr(value: Any) -> Optional[str]:
     return str(value)
 
 
-def violation_struct(
-    rule_id: str,
-    diff_type: Column,
-    *,
+def finalize_cols(
+    rule_id,
+    diff_type,
     key: Optional[Column] = None,
     column: Optional[str] = None,
     invalid: Optional[Column] = None,
@@ -110,13 +114,11 @@ def violation_struct(
     deviation: Optional[Column] = None,
     expected_num: Optional[Column] = None,
     partition_id: Optional[Column] = None,
-) -> Column:
-    """Build one violation struct as a Column expression.
-
-    All fields are computed JVM-side (whole-stage codegen) — the struct is
-    assembled inside the same projection as the rule predicate, so adding
-    rules does not add scans.
-    """
+) -> list:
+    """The nine violation fields as a Column list in
+    :data:`VIOLATION_SCHEMA` order, each cast to its schema type
+    (``diff_type`` a string or a Column) — the select list of a plan
+    rule's violation fragment."""
 
     def _s(c: Optional[Column]) -> Column:
         return c.cast("string") if c is not None else F.lit(None).cast("string")
@@ -124,17 +126,68 @@ def violation_struct(
     def _d(c: Optional[Column]) -> Column:
         return c.cast("double") if c is not None else F.lit(None).cast("double")
 
-    return F.struct(
-        F.lit(rule_id).alias("rule_id"),
+    return [
+        F.lit(rule_id).cast("string").alias("rule_id"),
         _s(key).alias("key"),
         F.lit(column).cast("string").alias("column"),
-        diff_type.cast("string").alias("diff_type"),
+        F.lit(diff_type).cast("string").alias("diff_type"),
         _s(invalid).alias("invalid"),
         _s(expected).alias("expected"),
         _d(deviation).alias("deviation"),
         _d(expected_num).alias("expected_num"),
         _s(partition_id).alias("partition_id"),
-    )
+    ]
+
+
+def violation_struct(rule_id, diff_type, **fields) -> Column:
+    """One violation as a struct Column over :func:`finalize_cols`.
+
+    All fields are computed JVM-side (whole-stage codegen) — the struct is
+    assembled inside the same projection as the rule predicate, so adding
+    rules does not add scans.
+    """
+    return F.struct(*finalize_cols(rule_id, diff_type, **fields))
+
+
+def partition_column(df: DataFrame, name: Optional[str]) -> Column:
+    """The one partition-column resolver: column ``name`` of ``df`` as
+    the string ``partition_id`` value; a NULL string when ``name`` is
+    None.  Raises ``ValueError`` when ``df`` has no column ``name``."""
+    if name is None:
+        return F.lit(None).cast("string")
+    if name not in df.columns:
+        raise ValueError(
+            f"partition column {name!r} not in the table "
+            f"(columns: {df.columns})")
+    return F.col(name).cast("string")
+
+
+#: verdict bucket of the violations no single data partition owns
+#: (aggregate and join rules: uniqueness across partitions, set
+#: membership, drift); it gets its own verdict row so they can never
+#: silently pass
+GLOBAL_PARTITION = "__global__"
+
+
+def bucket_global(violations: DataFrame) -> DataFrame:
+    """*violations* with each NULL ``partition_id`` set to
+    :data:`GLOBAL_PARTITION`."""
+    return violations.withColumn(
+        "partition_id",
+        F.coalesce(F.col("partition_id"), F.lit(GLOBAL_PARTITION)))
+
+
+def verdict_counts(violations: DataFrame, *aggs: Column) -> DataFrame:
+    """Per-partition verdict counts of *violations*: ``(partition_id,
+    n_violations, n_missing, n_extra, n_invalid, n_deviation, *aggs)``,
+    one row per partition that has a violation, NULL partitions in the
+    :data:`GLOBAL_PARTITION` bucket."""
+    return bucket_global(violations).groupBy("partition_id").agg(
+        F.count(F.lit(1)).alias("n_violations"),
+        *[F.sum((F.col("diff_type") == t).cast("long"))
+          .alias(f"n_{t.lower()}")
+          for t in (MISSING, EXTRA, INVALID, DEVIATION)],
+        *aggs)
 
 
 def explode_violations(frame: DataFrame,

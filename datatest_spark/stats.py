@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .requirements import Rule, ValidationContext, finalize_cols
-from .schema import DEVIATION, VIOLATION_SCHEMA, local_frame
+from .schema import DEVIATION, VIOLATION_SCHEMA, local_frame, partition_column
 
 __all__ = [
     "profile",
@@ -241,7 +241,7 @@ def partitioned_profile(df: DataFrame, columns: Sequence[str],
                 for i in range(len(bin_edges[c]) + 1)
             ]
     wide = df.groupBy(
-        F.col(partition_col).cast("string").alias("partition_id")
+        partition_column(df, partition_col).alias("partition_id")
     ).agg(*exprs)
 
     structs = []
@@ -1174,7 +1174,7 @@ class PartitionAnomalyRule(Rule):
                 expected=repr_col(F.col("median")),
                 deviation=F.col("metric") - F.col("median"),
                 expected_num=F.col("median"),
-                partition_id=F.col("partition").cast("string"),
+                partition_id=F.col("partition"),
             )
         )
 

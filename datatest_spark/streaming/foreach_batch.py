@@ -48,31 +48,11 @@ def validate_stream(
     which the batch engine's checkpointed runs cover instead).
     """
     engine = Engine(stream_df.sparkSession)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        violations = engine.compile(
-            batch_df, list(rules), partition_col=partition_col
-        )
-        try:
-            (
-                violations.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(violations_path)
-            )
-        finally:
-            unpersist_result(violations)
-
-    writer = (
-        stream_df.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return transform_stream(
+        stream_df,
+        lambda batch_df: engine.compile(batch_df, list(rules),
+                                        partition_col=partition_col),
+        violations_path, checkpoint_path, trigger_available_now)
 
 
 def transform_stream(
@@ -102,14 +82,19 @@ def transform_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        (
-            transform(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_path)
-        )
+        out = transform(batch_df)
+        try:
+            (
+                out.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(output_path)
+            )
+        finally:
+            # frees what the batch's operator persisted (a compiled
+            # rule set's decode frame); a no-op for other frames
+            unpersist_result(out)
 
     writer = (
         stream_df.writeStream.foreachBatch(process_batch)

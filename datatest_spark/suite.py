@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from . import requirements as R
 from .audio import AudioConsistencyRule
 from .requirements import Rule
+from .schema import verdict_counts
 from .validation import Engine, ValidationResult
 
 __all__ = ["audio_rules", "validate_audio_table", "image_rules",
@@ -205,21 +206,9 @@ def verdicts(violations: DataFrame) -> DataFrame:
     Aggregate-level violations (set membership, uniqueness Extras) have
     no single source partition; they land in the ``__global__`` bucket.
     """
-    violations = violations.withColumn(
-        "partition_id", F.coalesce(F.col("partition_id"), F.lit("__global__"))
-    )
-    return (
-        violations.groupBy("partition_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_violations"),
-            F.sum((F.col("diff_type") == "MISSING").cast("long")).alias("n_missing"),
-            F.sum((F.col("diff_type") == "EXTRA").cast("long")).alias("n_extra"),
-            F.sum((F.col("diff_type") == "INVALID").cast("long")).alias("n_invalid"),
-            F.sum((F.col("diff_type") == "DEVIATION").cast("long")).alias("n_deviation"),
-            F.countDistinct("rule_id").alias("n_rules_failed"),
-        )
-        .withColumn("passed", F.lit(False))
-    )
+    return verdict_counts(
+        violations, F.countDistinct("rule_id").alias("n_rules_failed")
+    ).withColumn("passed", F.lit(False))
 
 
 def image_rules() -> List[Rule]:

@@ -122,33 +122,41 @@ class TestMapClips:
                               ("c", False, 1, None), ("d", True, 2, "z")]
 
     def test_partition_column(self, spark, clips):
-        def parts(df, partition_col):
-            out = _map_clips(df, lambda row, sr, pcm: (), _schema(),
-                             partition_col=partition_col)
-            assert out.columns == ["clip_id", "ok", "partition_id"]
-            return {r["clip_id"]: r["partition_id"] for r in out.collect()}
-
+        # the kernel has no partition logic: a caller puts partition_id
+        # into the input and carries it like any other column, cast to
+        # the out_schema type when the schema names it
         shard = clips.withColumnRenamed("part_id", "shard")
-        assert parts(shard, "shard") == {"a": "0", "b": "1", "c": "1",
-                                         "d": "2"}
-        # a partition column the frame lacks reads as NULL
-        assert parts(clips, "shard") == dict.fromkeys("abcd")
-        # no partition column asked for: no partition_id field
+        out = _map_clips(
+            shard.withColumn("partition_id", F.col("shard").cast("string")),
+            lambda row, sr, pcm: (), _schema(), carry=["partition_id"])
+        assert out.columns == ["clip_id", "ok", "partition_id"]
+        assert {r["clip_id"]: r["partition_id"] for r in out.collect()} \
+            == {"a": "0", "b": "1", "c": "1", "d": "2"}
+        schema = _schema(T.StructField("n", T.LongType()),
+                         T.StructField("partition_id", T.StringType()))
+        out = _map_clips(clips.withColumn("partition_id", F.col("part_id")),
+                         lambda row, sr, pcm: (len(pcm),), schema,
+                         carry=["partition_id"])
+        assert out.columns == ["clip_id", "ok", "n", "partition_id"]
+        assert out.schema["partition_id"].dataType == T.StringType()
+        assert _rows(out) == [("a", True, 800, "0"), ("b", False, None, "1"),
+                              ("c", False, None, "1"),
+                              ("d", True, 2000, "2")]
+        # nothing carried: no partition_id field
         assert _map_clips(clips, lambda row, sr, pcm: (), _schema()) \
             .columns == ["clip_id", "ok"]
 
     def test_partition_id_in_schema_without_partition_column(self, spark,
                                                              clips):
-        # the kernel owns partition_id: with no partition column it is a
-        # NULL string, never a per_clip field
+        # a schema naming partition_id that no input carries gets no
+        # special case: per_clip computes it like any other field
         schema = _schema(T.StructField("n", T.LongType()),
                          T.StructField("partition_id", T.StringType()))
-        out = _map_clips(clips, lambda row, sr, pcm: (len(pcm),), schema)
+        out = _map_clips(clips, lambda row, sr, pcm: (len(pcm), "p"), schema)
         assert out.columns == ["clip_id", "ok", "n", "partition_id"]
-        assert out.schema["partition_id"].dataType == T.StringType()
-        assert _rows(out) == [("a", True, 800, None), ("b", False, None, None),
+        assert _rows(out) == [("a", True, 800, "p"), ("b", False, None, None),
                               ("c", False, None, None),
-                              ("d", True, 2000, None)]
+                              ("d", True, 2000, "p")]
 
     def test_large_var_types(self, spark, clips):
         # with 64-bit Arrow offsets on the wire the payload views must
@@ -168,8 +176,8 @@ class TestMapClips:
         schema = _schema(T.StructField("n", T.LongType()))
         out = _map_clips(clips.filter(F.lit(False)),
                          lambda row, sr, pcm: [(len(pcm),)], schema,
-                         carry=["tag"], partition_col="part_id")
-        assert out.columns == ["clip_id", "ok", "n", "tag", "partition_id"]
+                         carry=["tag", "part_id"])
+        assert out.columns == ["clip_id", "ok", "n", "tag", "part_id"]
         assert out.collect() == []
 
 
@@ -360,19 +368,30 @@ def test_video_frame_features_rows(spark, mixed, every_nth):
 
 
 def test_decode_stub_rows(spark):
-    # the stub's id field is a long
-    df, ids = _mixed_frame(spark, "long")
-    out = decode_stub(df.withColumnRenamed("item", "id"), "payload",
-                      fake=True)
-    assert out.columns == ["id", "ok", "width", "height", "n_frames",
-                           "payload_sha256"]
-    expected = []
-    for rid, buf in zip(ids, _MIXED_PAYLOADS):
-        if buf is None:
-            expected.append((rid, False, None, None, None, None))
-            continue
-        digest = hashlib.sha256(buf).hexdigest()
-        h = int(digest[:8], 16)
-        expected.append((rid, True, 64 + h % 1920, 64 + (h >> 8) % 1080,
-                         1 + (h >> 16) % 240, digest))
-    assert _sorted(out.collect()) == _sorted(expected)
+    # the stub keys its rows by the caller's id, in the id's own type
+    for id_type in ("long", "string"):
+        df, ids = _mixed_frame(spark, id_type)
+        out = decode_stub(df, "payload", "item", fake=True)
+        assert out.columns == ["id", "ok", "width", "height", "n_frames",
+                               "payload_sha256"]
+        assert out.schema["id"].dataType == df.schema["item"].dataType
+        expected = []
+        for rid, buf in zip(ids, _MIXED_PAYLOADS):
+            if buf is None:
+                expected.append((rid, False, None, None, None, None))
+                continue
+            digest = hashlib.sha256(buf).hexdigest()
+            h = int(digest[:8], 16)
+            expected.append((rid, True, 64 + h % 1920, 64 + (h >> 8) % 1080,
+                             1 + (h >> 16) % 240, digest))
+        assert _sorted(out.collect()) == _sorted(expected)
+
+
+def test_decode_stub_over_fixture_string_ids(spark):
+    # the image and video fixture tables key their rows by string ids
+    for df, id_col in ((FX.image_table_df(spark, 12, parts=2), "image_id"),
+                       (FX.video_table_df(spark, 6, parts=2), "video_id")):
+        out = decode_stub(df, "bytes", id_col, fake=True)
+        assert out.schema["id"].dataType == T.StringType()
+        got = sorted(r["id"] for r in out.collect())
+        assert got == sorted(r[id_col] for r in df.select(id_col).collect())
