@@ -74,7 +74,9 @@ def _build_parser() -> argparse.ArgumentParser:
                    help="decode bytes and emit DEVIATION rows for "
                         "clips whose VAD speech ratio falls below "
                         "RATIO (mostly-dead-air gate)")
-    v.add_argument("--partition-col", default="part_id")
+    v.add_argument("--partition-col", default=None,
+                   help="partition column of the verdicts (default: "
+                        "part_id when the table has it)")
     v.add_argument("--checkpoint", default=None, metavar="DIR",
                    help="checkpoint dir: commit verdicts per partition and "
                         "resume committed partitions on re-run")
@@ -147,7 +149,10 @@ def _extra_rules(args, manifest):
 def _cmd_validate(args) -> int:
     from pyspark.sql import SparkSession
 
-    from datatest_spark.suite import (audio_rules, validate_audio_table,
+    from datatest_spark.audio import AUDIO_PARTITION_COL
+    from datatest_spark.schema import partition_column
+    from datatest_spark.suite import (_partition_col, audio_rules,
+                                      validate_audio_table,
                                       verdicts as verdict_rows)
 
     spark = SparkSession.builder.appName("datatest_spark-validate").getOrCreate()
@@ -189,6 +194,18 @@ def _cmd_validate(args) -> int:
     if extra_rules is None:
         return 2
 
+    part = _partition_col(df, args.partition_col)
+    if args.checkpoint and part not in df.columns:
+        print(f"--checkpoint needs partition column "
+              f"{part or AUDIO_PARTITION_COL!r} in the table",
+              file=sys.stderr)
+        return 2
+    try:
+        partition_column(df, part)
+    except ValueError as e:
+        print(str(e), file=sys.stderr)
+        return 2
+
     if args.sample is not None:
         from datatest_spark.sampling import sampled_verdicts
 
@@ -215,12 +232,7 @@ def _cmd_validate(args) -> int:
                       "skipping full pass", file=sys.stderr)
                 return 1
 
-    part = args.partition_col if args.partition_col in df.columns else None
     if args.checkpoint:
-        if part is None:
-            print(f"--checkpoint needs partition column "
-                  f"{args.partition_col!r} in the table", file=sys.stderr)
-            return 2
         from datatest_spark.plans.checkpoint import run_checkpointed
 
         run = run_checkpointed(
@@ -262,6 +274,7 @@ def _cmd_validate_incremental(spark, args) -> int:
     """One watermark advance: validate the snapshot delta (or report
     up-to-date).  A workflow engine cron-ing this command gets
     exactly-once validation of every ingest batch."""
+    from datatest_spark.audio import AUDIO_PARTITION_COL
     from datatest_spark.plans import run_incremental
     from datatest_spark.suite import audio_rules
 
@@ -275,7 +288,8 @@ def _cmd_validate_incremental(spark, args) -> int:
                         extra_rules=extra_rules)
     try:
         run = run_incremental(
-            spark, args.table, rules, args.partition_col,
+            spark, args.table, rules,
+            args.partition_col or AUDIO_PARTITION_COL,
             args.checkpoint, salt_buckets=args.salt_buckets,
             allow_deletes=args.allow_deletes)
     except ValueError as e:

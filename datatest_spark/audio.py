@@ -226,7 +226,6 @@ def audio_partition_col(ctx: ValidationContext) -> Optional[str]:
 
 def decode_info(df: DataFrame, with_snr: bool = False,
                 with_rms: bool = True,
-                carry: Optional[list] = None,
                 partition_col: Optional[str] = None) -> DataFrame:
     """One Arrow-native decode pass over the audio table, on the clip
     kernel (:func:`_map_clips`: column-pruned, zero-copy payload views).
@@ -243,19 +242,9 @@ def decode_info(df: DataFrame, with_snr: bool = False,
 
     The declared ``sr_hz``/``dur_ms``/``codec`` come through unchanged,
     and ``partition_id`` is ``partition_col`` as a string (NULL when
-    None; ``ValueError`` when ``df`` lacks it).  ``carry`` passes extra
-    input columns through the decode stage ZERO-COPY (the output batch
-    references the input batch's Arrow arrays): consumers that need a small raw column alongside the
-    decode output (e.g. the suite's transcript ref-match) can then read
-    this one pass instead of re-scanning the payload table with its
-    full split fan-out.  Names that are not input columns or that
-    collide with a decode output are ignored.
+    None; ``ValueError`` when ``df`` lacks it).
     """
     import hashlib
-
-    base_names = set(DECODE_INFO_SCHEMA.fieldNames())
-    carried = [c for c in carry or []
-               if c in df.columns and c not in base_names]
 
     def per_clip(row, sr, pcm):
         ns = len(pcm)
@@ -276,7 +265,7 @@ def decode_info(df: DataFrame, with_snr: bool = False,
     return _map_clips(
         df.withColumn("partition_id", partition_column(df, partition_col)),
         per_clip, DECODE_INFO_SCHEMA,
-        carry=["sr_hz", "dur_ms", "codec", "partition_id", *carried],
+        carry=["sr_hz", "dur_ms", "codec", "partition_id"],
         decode=decode_bytes)
 
 
@@ -759,7 +748,11 @@ class AudioConsistencyRule(Rule):
     any threshold, so the expensive reference-PCM regeneration runs
     ONLY for the (rare) hash-mismatched rows via a semi-join-pruned
     second decode.  At 10^12 rows this turns the allclose check into a
-    join on 64-byte hashes plus a near-empty slow path.
+    join on 64-byte hashes plus a near-empty slow path.  The fast path
+    reads its decode frame twice (the violations and the compile-time
+    mismatch probe), so :meth:`plan` persists it on the compile's
+    ``ctx.handle``: the payload is decoded once per compile, and the
+    frame is freed with the returned violations.
     """
 
     kind = "plan"
@@ -773,53 +766,22 @@ class AudioConsistencyRule(Rule):
         self.min_snr_db = min_snr_db
         self.pcm_manifest = pcm_manifest
 
-    def decode_frame(self, ctx: ValidationContext,
-                     carry: Optional[list] = None) -> DataFrame:
-        """The rule's persisted decode-info frame (hash path only),
-        built once per compile (memoized on ``ctx``).  The suite reuses
-        it as the metadata source for every rule that never touches
-        ``bytes`` — one decode pass feeds the whole rule set instead of
-        N payload-table scans (it carries the declared
-        sr_hz/dur_ms/codec and clip_id through, ~100 B/row, far cheaper
-        to re-read than re-scanning the parquet with its 64 MB-split
-        task fan-out).
-        ``carry`` (first call only) threads extra small raw columns
-        through the pass — see :func:`decode_info`."""
-        if self not in ctx.memo:
-            from pyspark import StorageLevel
-
-            info = decode_info(ctx.df, with_snr=False, with_rms=False,
-                               carry=carry,
-                               partition_col=audio_partition_col(ctx))
-            # Re-key the ~100 B/row decode output to session parallelism
-            # before persisting: the decode stage keeps the payload
-            # scan's full split fan-out (it runs as the map side of this
-            # one narrow exchange), but the CACHED frame no longer
-            # inherits the 64 MB-split partition count of a multi-GB
-            # binary table — without this, every cached-frame consumer
-            # (six rule fragments + the mismatch probe) re-pays the full
-            # task-launch fan-out to scan a few MB of metadata (guide
-            # §2.2: fewer, larger partitions for downstream reads).
-            sc = ctx.df.sparkSession.sparkContext
-            info = info.repartition(sc.defaultParallelism)
-            ctx.memo[self] = ctx.handle.register(
-                info.persist(StorageLevel.MEMORY_AND_DISK))
-        return ctx.memo[self]
-
     def plan(self, ctx: ValidationContext) -> DataFrame:
         use_hash_path = self.check_snr and self.pcm_manifest is not None
         # with_rms=False: no consistency violation reads the RMS, so the
         # decode pass skips one float64 conversion + reduction per clip.
-        # The hash path consumes `info` in several subtrees (violations
-        # + mismatch discovery + the suite's shared metadata rules);
-        # decode_frame persisted it — the decode runs exactly once per
-        # table regardless of fan-out.
+        info = decode_info(ctx.df,
+                           with_snr=self.check_snr and not use_hash_path,
+                           with_rms=False,
+                           partition_col=audio_partition_col(ctx))
         if use_hash_path:
-            info = self.decode_frame(ctx)
-        else:
-            info = decode_info(ctx.df, with_snr=self.check_snr,
-                               with_rms=False,
-                               partition_col=audio_partition_col(ctx))
+            from pyspark import StorageLevel
+
+            # the hash path reads `info` twice (the violations below
+            # and the mismatch probe); persisted, the payload is
+            # decoded once
+            info = ctx.handle.register(
+                info.persist(StorageLevel.MEMORY_AND_DISK))
         rid = self.rule_id
         clip, part = F.col("clip_id"), F.col("partition_id")
         checks = [
@@ -897,7 +859,7 @@ class AudioConsistencyRule(Rule):
             # slow path only for hash-mismatched clips: semi-join prune,
             # then full decode + reference regeneration + exact SNR
             slow = decode_info(
-                ctx.df.join(F.broadcast(mismatched), "clip_id", "left_semi"),
+                ctx.df.join(mismatched, "clip_id", "left_semi"),
                 with_snr=True, with_rms=False,
                 partition_col=audio_partition_col(ctx),
             )

@@ -2,8 +2,8 @@
 
 Operator calls (LSH dedup, ANN, contamination, shard planning,
 whole-scope acceptance counting) and validation compiles (the audio
-suite's shared decode frame, quarantine's persisted violations,
-sampled plan-rule verdicts) persist intermediates that must stay alive
+consistency rule's hash-path decode frame, quarantine's persisted
+violations, sampled plan-rule verdicts) persist intermediates that must stay alive
 until the CALLER materializes the returned lazy result.  Each call
 gets its own :class:`CacheHandle`:
 

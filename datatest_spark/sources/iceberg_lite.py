@@ -109,6 +109,17 @@ def _load_metadata(table_path: str) -> dict:
         return json.load(f)
 
 
+def _write_metadata(table_path: str, meta: dict, version: int) -> int:
+    """Commit ``meta`` as ``metadata/v{version}.metadata.json`` and
+    point ``version-hint.text`` at it; returns ``version``."""
+    mdir = os.path.join(table_path, "metadata")
+    with open(os.path.join(mdir, f"v{version}.metadata.json"), "w") as f:
+        json.dump(meta, f, indent=2)
+    with open(os.path.join(mdir, "version-hint.text"), "w") as f:
+        f.write(str(version))
+    return version
+
+
 def _current_schema(meta: dict) -> dict:
     if "schemas" in meta:
         sid = meta.get("current-schema-id", 0)
@@ -634,15 +645,7 @@ def rollback_to_snapshot(table_path: str, snapshot_id: int) -> int:
     meta["last-updated-ms"] = now_ms
     meta.setdefault("snapshot-log", []).append(
         {"timestamp-ms": now_ms, "snapshot-id": snapshot_id})
-    new_version = version + 1
-    vpath = os.path.join(table_path, "metadata",
-                         f"v{new_version}.metadata.json")
-    with open(vpath, "w") as f:
-        json.dump(meta, f, indent=2)
-    with open(os.path.join(table_path, "metadata",
-                           "version-hint.text"), "w") as f:
-        f.write(str(new_version))
-    return new_version
+    return _write_metadata(table_path, meta, version + 1)
 
 
 # ---------------------------------------------------------------------------
@@ -741,14 +744,7 @@ def expire_snapshots(table_path: str, keep_last: int = 1,
     import time as _time
 
     meta["last-updated-ms"] = int(_time.time() * 1000)
-    new_version = version + 1
-    vpath = os.path.join(table_path, "metadata",
-                         f"v{new_version}.metadata.json")
-    with open(vpath, "w") as f:
-        json.dump(meta, f, indent=2)
-    with open(os.path.join(table_path, "metadata",
-                           "version-hint.text"), "w") as f:
-        f.write(str(new_version))
+    _write_metadata(table_path, meta, version + 1)
 
     for p in sorted(doomed_ml | doomed_mf | doomed_files):
         try:
@@ -1065,14 +1061,7 @@ def _commit_snapshot(table_path: str, meta: dict, existing_version: int,
     meta.setdefault("snapshot-log", []).append(
         {"timestamp-ms": now_ms, "snapshot-id": snap_id})
 
-    version = existing_version + 1
-    vpath = os.path.join(table_path, "metadata",
-                         f"v{version}.metadata.json")
-    with open(vpath, "w") as f:
-        json.dump(meta, f, indent=2)
-    with open(os.path.join(table_path, "metadata",
-                           "version-hint.text"), "w") as f:
-        f.write(str(version))
+    _write_metadata(table_path, meta, existing_version + 1)
     return snap_id
 
 

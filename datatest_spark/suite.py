@@ -1,20 +1,27 @@
 """The flagship constraint suite over the audio+transcript table.
 
 This is the "full constraint-suite pass" that BASELINE.json's metric
-(validated clips/sec) measures: every north_star rule family exercised
-over the input_hint shape in a minimal number of Spark jobs:
+(validated clips/sec) measures.  :func:`validate_audio_table` is
+``Engine.validate`` over :func:`audio_rules` — the one compile that
+``run_checkpointed``, ``quarantine``, ``validate_stream``,
+``sampled_verdicts`` and the CLI run over the same rule list.  The
+compiled plan, one fragment per line:
 
   1. one fused row-rule projection (interval checks on sr_hz/dur_ms,
-     codec regex)                                    — 1 scan
-  2. one decode pass (all audio consistency rules)   — 1 scan (Arrow)
-  3. uniqueness of clip_id                           — 1 shuffle (agg)
-  4. codec set membership                            — reuses the agg path
-  5. referential: clip_id ⊆ manifest                 — sort-merge anti-join
-  6. transcript equality vs reference (+fuzzy)       — sort-merge join
-  7. per-column profile + PSI drift                  — 1 agg pass
+     allowed sr_hz, clip_id regex)
+  2. the consistency rule's decode pass — the only fragment that reads
+     ``bytes``; with the manifest hash check its frame is persisted and
+     read twice (violations + mismatch probe), and only hash-mismatched
+     clips, if any, are decoded again for the exact SNR
+  3. uniqueness of clip_id                     — 1 shuffle (agg)
+  4. codec set membership                      — distinct + anti-join
+  5. referential: clip_id ⊆ manifest           — distinct + anti-join
+  6. transcript equality vs reference (+fuzzy) — join
 
-All fragments union into one violation DataFrame; per-partition
-verdicts aggregate from it.
+Every other fragment reads only metadata columns (column pruning), so
+the payload bytes are scanned once per compile.  All
+fragments union into one violation DataFrame; per-partition verdicts
+aggregate from it.
 """
 
 from __future__ import annotations
@@ -25,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import requirements as R
-from .audio import AudioConsistencyRule
+from .audio import AUDIO_PARTITION_COL, AudioConsistencyRule
 from .requirements import Rule
 from .schema import verdict_counts
 from .validation import Engine, ValidationResult
@@ -100,12 +107,23 @@ def audio_rules(
     return rules
 
 
+def _partition_col(df: DataFrame,
+                   partition_col: Optional[str]) -> Optional[str]:
+    """The suites' partition column: the named one, else ``part_id``
+    when the table has it, else none.  A named column the table lacks
+    is returned as named, so the compile raises ``ValueError`` for
+    it."""
+    if partition_col is None and AUDIO_PARTITION_COL in df.columns:
+        return AUDIO_PARTITION_COL
+    return partition_col
+
+
 def validate_audio_table(
     df: DataFrame,
     manifest: Optional[DataFrame] = None,
     check_snr: bool = False,
     fuzzy_cutoff: Optional[float] = None,
-    partition_col: Optional[str] = "part_id",
+    partition_col: Optional[str] = None,
     extra_rules: Optional[List[Rule]] = None,
 ) -> ValidationResult:
     """Run the full audio constraint suite, returning the lazy
@@ -118,86 +136,12 @@ def validate_audio_table(
                          key="clip_id")
         res.clean.write.parquet(...)   # validated training input
     """
-    part = partition_col if partition_col in df.columns else None
-    engine = Engine(df.sparkSession)
-    core = audio_rules(manifest=manifest, check_snr=check_snr,
-                       fuzzy_cutoff=fuzzy_cutoff)
-    extra = list(extra_rules or [])
-
-    acr = next((r for r in core if isinstance(r, AudioConsistencyRule)),
-               None)
-    hash_path = (acr is not None and acr.check_snr
-                 and acr.pcm_manifest is not None)
-    if not hash_path:
-        return engine.validate(df, core + extra, partition_col=part,
-                               description="audio constraint suite")
-
-    # Shared-decode compilation (hash path): the consistency rule's
-    # persisted decode output already carries every column the
-    # metadata rules read (clip_id + declared sr_hz/dur_ms/codec +
-    # partition id, ~100 B/row) — compiling those rules against it
-    # removes one payload-table scan per fragment (each a full
-    # 64 MB-split task fan-out over the binary parquet) for
-    # byte-identical violations.  Only rules that genuinely need raw
-    # columns — the decode itself, the transcript ref-match, and any
-    # caller-supplied extra rules (their column set is unknown) — still
-    # compile against the raw table.
-    from .requirements import RefMatchRule, ValidationContext
-
-    ref_rules = [r for r in core if isinstance(r, RefMatchRule)]
-    meta_rules = [r for r in core
-                  if r is not acr and not isinstance(r, RefMatchRule)]
-
-    ctx = ValidationContext(df, partition_col=part)
-    # thread the ref-match rules' raw columns (e.g. transcript) through
-    # the one decode pass zero-copy, so those rules also read the
-    # cached frame instead of re-scanning the payload table with its
-    # full split fan-out — the last extra payload-parquet FileScan in
-    # the hash-path plan
-    carry = []
-    for r in ref_rules:
-        for c in (r.on, r.column):
-            if c in df.columns and c not in carry:
-                carry.append(c)
-    info = acr.decode_frame(ctx, carry=carry)
-    from .audio import DECODE_INFO_SCHEMA
-
-    # columns of `info` whose values equal the RAW table's: the four
-    # declared pass-throughs plus whatever `carry` threaded through
-    # (decode-output names like ok/error/rms shadow any same-named raw
-    # column and MUST NOT satisfy a ref rule)
-    safe_cols = {"clip_id", "sr_hz", "dur_ms", "codec"} | (
-        set(info.columns) - {f.name for f in DECODE_INFO_SCHEMA.fields}
+    rules = audio_rules(manifest=manifest, check_snr=check_snr,
+                        fuzzy_cutoff=fuzzy_cutoff, extra_rules=extra_rules)
+    return Engine(df.sparkSession).validate(
+        df, rules, partition_col=_partition_col(df, partition_col),
+        description="audio constraint suite",
     )
-    ref_on_info = [r for r in ref_rules
-                   if r.on in safe_cols and r.column in safe_cols]
-    raw_rules = ([acr]
-                 + [r for r in ref_rules if r not in ref_on_info]
-                 + extra)
-    meta_cols = ["clip_id", "sr_hz", "dur_ms", "codec"]
-    if part:
-        meta = info.select(*meta_cols,
-                           F.col("partition_id").alias(part))
-    else:
-        meta = info.select(*meta_cols)
-    frags_meta = engine.compile(meta, meta_rules, partition_col=part)
-    frags_raw = engine._compile_ctx(ctx, raw_rules)
-    violations = frags_meta.unionByName(frags_raw)
-    if ref_on_info:
-        ref_sel = []
-        for r in ref_on_info:
-            for c in (r.on, r.column):
-                if c not in ref_sel:
-                    ref_sel.append(c)
-        if part:
-            refsrc = info.select(*ref_sel,
-                                 F.col("partition_id").alias(part))
-        else:
-            refsrc = info.select(*ref_sel)
-        frags_ref = engine.compile(refsrc, ref_on_info, partition_col=part)
-        violations = violations.unionByName(frags_ref)
-    return ValidationResult(ctx.handle.attach(violations),
-                            "audio constraint suite")
 
 
 def verdicts(violations: DataFrame) -> DataFrame:
@@ -226,12 +170,10 @@ def image_rules() -> List[Rule]:
 
 def validate_image_table(
     df: DataFrame,
-    partition_col: Optional[str] = "part_id",
+    partition_col: Optional[str] = None,
 ) -> ValidationResult:
-    part = partition_col if partition_col in df.columns else None
-    engine = Engine(df.sparkSession)
-    return engine.validate(
-        df, image_rules(), partition_col=part,
+    return Engine(df.sparkSession).validate(
+        df, image_rules(), partition_col=_partition_col(df, partition_col),
         description="image constraint suite",
     )
 
@@ -250,11 +192,9 @@ def video_rules() -> List[Rule]:
 
 def validate_video_table(
     df: DataFrame,
-    partition_col: Optional[str] = "part_id",
+    partition_col: Optional[str] = None,
 ) -> ValidationResult:
-    part = partition_col if partition_col in df.columns else None
-    engine = Engine(df.sparkSession)
-    return engine.validate(
-        df, video_rules(), partition_col=part,
+    return Engine(df.sparkSession).validate(
+        df, video_rules(), partition_col=_partition_col(df, partition_col),
         description="video constraint suite",
     )

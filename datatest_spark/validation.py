@@ -528,29 +528,35 @@ def _attach(name, fn):
     setattr(validate, name, fn)
 
 
+def _value_columns(df, *exclude):
+    """The columns of ``df`` not in ``exclude`` (the key, order_by):
+    the value columns a ``validate.<method>`` checks when none is
+    named.  ``ValueError`` when none is left."""
+    cols = [c for c in df.columns if c not in exclude]
+    if not cols:
+        raise ValueError(f"no value column left in {df.columns} "
+                         f"besides {[c for c in exclude if c]}")
+    return cols
+
+
 def _v_predicate(df, requirement, column=None, key=None, **kw):
-    column = column or [c for c in df.columns if c != key][0]
+    column = column or _value_columns(df, key)[0]
     return validate(df, rules=[R.predicate(column, requirement, show_expected=key is not None)],
                     key=key, **kw)
 
 
 def _v_regex(df, pattern, column=None, flags=0, key=None, **kw):
-    column = column or [c for c in df.columns if c != key][0]
+    column = column or _value_columns(df, key)[0]
     return validate(df, rules=[R.regex(column, pattern, flags)], key=key, **kw)
 
 
 def _v_approx(df, requirement, column=None, places=7, delta=None, key=None, **kw):
+    column = column or _value_columns(df, key)[0]
     if isinstance(requirement, Mapping):
-        rules = []
-        column = column or [c for c in df.columns if c != key][0]
         # per-key approx: filter per key (small dicts) — exact reference parity
-        frames = []
-        for k, v in requirement.items():
-            rules.append(
-                _KeyedApprox(column, key, k, v, places, delta)
-            )
+        rules = [_KeyedApprox(column, key, k, v, places, delta)
+                 for k, v in requirement.items()]
         return validate(df, rules=rules, key=key, **kw)
-    column = column or [c for c in df.columns if c != key][0]
     return validate(df, rules=[R.approx(column, requirement, places, delta)], key=key, **kw)
 
 
@@ -573,7 +579,7 @@ class _KeyedApprox(R.ApproxRule):
 
 
 def _v_fuzzy(df, requirement, column=None, cutoff=0.6, key=None, **kw):
-    column = column or [c for c in df.columns if c != key][0]
+    column = column or _value_columns(df, key)[0]
     if isinstance(requirement, Mapping):
         rules = [
             _KeyedFuzzy(column, key, k, v, cutoff) for k, v in requirement.items()
@@ -607,32 +613,32 @@ class _KeyedFuzzy(R.FuzzyRule):
 
 
 def _v_interval(df, min=None, max=None, column=None, key=None, **kw):
-    column = column or [c for c in df.columns if c != key][0]
+    column = column or _value_columns(df, key)[0]
     return validate(df, rules=[R.interval(column, min, max)], key=key, **kw)
 
 
 def _v_set(df, requirement, column=None, key=None, **kw):
-    column = column or [c for c in df.columns if c != key][0]
+    column = column or _value_columns(df, key)[0]
     return validate(df, rules=[R.set_equal(column, requirement)], key=key, **kw)
 
 
 def _v_subset(df, requirement, column=None, key=None, **kw):
-    column = column or [c for c in df.columns if c != key][0]
+    column = column or _value_columns(df, key)[0]
     return validate(df, rules=[R.subset(column, requirement)], key=key, **kw)
 
 
 def _v_superset(df, requirement, column=None, key=None, **kw):
-    column = column or [c for c in df.columns if c != key][0]
+    column = column or _value_columns(df, key)[0]
     return validate(df, rules=[R.superset(column, requirement)], key=key, **kw)
 
 
 def _v_unique(df, columns=None, key=None, **kw):
-    columns = columns or [c for c in df.columns if c != key]
+    columns = columns or _value_columns(df, key)
     return validate(df, rules=[R.unique(columns)], key=key, **kw)
 
 
 def _v_order(df, requirement, column=None, order_by=None, key=None, **kw):
-    column = column or [c for c in df.columns if c != key and c != order_by][0]
+    column = column or _value_columns(df, key, order_by)[0]
     if order_by is None:
         raise ValueError("validate.order requires order_by=")
     rule = R.order(column, requirement, order_by)

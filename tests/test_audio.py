@@ -86,30 +86,6 @@ class TestDecodeInfo:
         )
         assert mism == expected
 
-    def test_carry_threads_raw_columns_through(self, spark, audio_df):
-        # carry passes extra input columns through the Arrow decode
-        # stage zero-copy: values must equal the raw table's, decode
-        # outputs must be untouched, and unknown/shadowed names are
-        # ignored ("ok" collides with a decode output, "nope" does not
-        # exist — neither may alter the schema)
-        from pyspark.sql import functions as F
-
-        info = decode_info(audio_df, carry=["transcript", "ok", "nope"])
-        assert info.columns[-1] == "transcript"
-        assert info.columns.count("ok") == 1
-        joined = (
-            info.select("clip_id", F.col("transcript").alias("got"))
-            .join(audio_df.select("clip_id", "transcript"), "clip_id")
-        )
-        assert joined.filter(
-            ~F.col("got").eqNullSafe(F.col("transcript"))).count() == 0
-        base = decode_info(audio_df)
-        assert info.filter("not ok").count() == base.filter("not ok").count()
-        # a name carried twice is carried once, in first-seen order
-        dup = decode_info(audio_df, carry=["transcript", "transcript"])
-        assert dup.columns == base.columns + ["transcript"]
-        assert dup.filter("not ok").count() == base.filter("not ok").count()
-
 
 class TestAudioSuite:
     def test_full_suite_violation_counts(self, spark, audio_df, manifest_df):
@@ -180,7 +156,7 @@ class TestAudioSuite:
         base = counts(audio_df)
         assert base[("speech_ratio:ratio", "0")] > 0
         assert base[("transcript_rate:wps", "0")] > 0
-        assert base[("audio:sr_hz", "1")] > 0  # from the shared decode
+        assert base[("audio:sr_hz", "1")] > 0  # from the decode frame
         assert counts(audio_df.withColumnRenamed("part_id", "shard"),
                       partition_col="shard") == base
 

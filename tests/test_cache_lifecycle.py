@@ -2,7 +2,7 @@
 freed once its owner is freed or collected.
 
 Each test runs the audio suite's hash path (``audio_rules(manifest=m,
-check_snr=True)``), whose consistency rule persists the shared decode
+check_snr=True)``), whose consistency rule persists its decode
 frame at compile time, and checks that the session's persistent-RDD
 count returns to where it started.
 """

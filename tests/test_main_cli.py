@@ -90,6 +90,23 @@ def test_validate_missing_partition_col_for_checkpoint(spark, audio_table,
     assert "needs partition column" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("checkpoint", [False, True],
+                         ids=["plain", "checkpoint"])
+def test_validate_misspelled_partition_col_exits_2(spark, audio_table,
+                                                   tmp_path, capsys,
+                                                   checkpoint):
+    table, _ = audio_table
+    argv = ["validate", table, "--partition-col", "shrd"]
+    if checkpoint:
+        argv += ["--checkpoint", str(tmp_path / "c")]
+    assert main(argv) == 2
+    out = capsys.readouterr()
+    assert "'shrd'" in out.err and not out.out
+    if checkpoint:
+        assert "needs partition column" in out.err
+        assert not (tmp_path / "c").exists()
+
+
 def test_discover_registers_mandatory_plugin(tmp_path):
     # a failing @mandatory test stops the session before later tests run
     t = tmp_path / "test_gate.py"

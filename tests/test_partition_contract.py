@@ -7,8 +7,13 @@ rows to the ``partition_id`` its ``ValidationContext`` resolves.
 * no column named → NULL, except the audio-table rules, which fall back
   to the table's ``part_id`` when it has one;
 * a named column the table lacks → ``ValueError`` before any rule
-  compiles, from every rule alike.
+  compiles, from every rule alike;
+* the audio, image and video suites name ``part_id`` for the whole
+  compile when no column is named and the table has it, and raise like
+  the rules for a named column the table lacks.
 """
+
+from collections import Counter
 
 import pytest
 
@@ -22,6 +27,8 @@ from datatest_spark.operators.image import ImageConsistencyRule
 from datatest_spark.operators.video import VideoConsistencyRule
 from datatest_spark.plans.checkpoint import run_checkpointed
 from datatest_spark.stats import partitioned_profile
+from datatest_spark.suite import (validate_audio_table, validate_image_table,
+                                  validate_video_table)
 from datatest_spark.validation import Engine
 
 N = 600
@@ -151,3 +158,44 @@ def test_checkpoint_and_profile_raise_on_a_missing_column(tables, tmp_path):
     assert not (tmp_path / "ckpt").exists()
     with pytest.raises(ValueError, match="'shard'"):
         partitioned_profile(df, ["sr_hz"], partition_col="shard")
+
+
+SUITES = {
+    "audio": lambda df, m, **kw: validate_audio_table(df, manifest=m, **kw),
+    "image": lambda df, m, **kw: validate_image_table(df, **kw),
+    "video": lambda df, m, **kw: validate_video_table(df, **kw),
+}
+
+
+@pytest.mark.parametrize("table", sorted(SUITES))
+def test_suite_raises_on_a_missing_named_column(tables, manifest, table):
+    with pytest.raises(ValueError, match="'shrd'.*columns"):
+        SUITES[table](tables[table], manifest, partition_col="shrd")
+
+
+def test_suite_default_attributes_every_rule_to_part_id(tables, manifest):
+    # no column named: the suite names part_id for the whole compile,
+    # so the fused row rules attribute like the audio-table rules
+    df = tables["audio"]
+    res = validate_audio_table(df, manifest=manifest,
+                               extra_rules=[SpeechRatioRule(min_ratio=1.01)])
+    try:
+        rows = res.violations.select("rule_id", "key",
+                                     "partition_id").collect()
+    finally:
+        res.unpersist()
+    parts = _parts(df, "clip_id", "part_id")
+    aggregate = {"unique:clip_id", "subset:codec"}
+    assert {r["rule_id"] for r in rows} >= aggregate | {
+        "interval:dur_ms", "audio:decodable", "ref_match:transcript",
+        "speech_ratio:ratio"}
+    for rule_id, key, part in rows:
+        if rule_id in aggregate:
+            assert part is None, (rule_id, key)
+        elif key is not None:
+            assert part == parts[key], (rule_id, key, part)
+    out_of_range = df.filter("dur_ms < 1 or dur_ms > 120000")
+    assert Counter(part for rule_id, _, part in rows
+                   if rule_id == "interval:dur_ms") \
+        == Counter(str(r[0]) for r in out_of_range.select("part_id")
+                   .collect())

@@ -197,6 +197,33 @@ class TestRegex:
         assert validate.regex(df, "A", column="value", raise_on_failure=False).ok
 
 
+class TestValueColumnDefault:
+    """validate.<method> checks the first non-key column when no
+    column is named, and raises when the key is the only column."""
+
+    def test_first_non_key_column(self, spark):
+        df = df_from(spark, {"a": "Alpha", "b": "gamma"})
+        with pytest.raises(ValidationError) as exc:
+            validate.regex(df, "^[A-Z]", key="key")
+        assert get_differences(exc) == {"b": Invalid("gamma")}
+
+    @pytest.mark.parametrize("method, args", [
+        ("predicate", (str,)), ("regex", ("x",)), ("approx", (1.0,)),
+        ("approx", ({"a": 1.0},)), ("fuzzy", ("x",)), ("interval", (0, 1)),
+        ("set", ({1},)), ("subset", ({1},)), ("superset", ({1},)),
+        ("unique", ()),
+    ])
+    def test_key_only_frame_raises(self, spark, method, args):
+        df = df_from(spark, {"a": 1}).select("key")
+        with pytest.raises(ValueError, match=r"no value column.*'key'"):
+            getattr(validate, method)(df, *args, key="key")
+
+    def test_order_by_is_not_a_value_column(self, spark):
+        df = df_from(spark, {"a": 1}).select("key", "pos")
+        with pytest.raises(ValueError, match=r"no value column.*'pos'"):
+            validate.order(df, [1], order_by="pos", key="key")
+
+
 class TestFuzzy:
     """reference test_validation.py:594-605"""
 
