@@ -460,7 +460,8 @@ def ngram_jaccard_pairs(df: DataFrame, column: str, id_col: str = "doc_id",
 
     1. Per-doc DISTINCT shingle hashes (JVM ``transform``+``xxhash64``
        — shuffles carry 8-byte longs, never shingle text).
-    2. Inverted index: explode to ``(doc, shingle_hash)`` postings.
+    2. Inverted index: explode to ``(doc, shingle_hash)`` postings,
+       persisted RAW so the shingle split+hash runs once per document.
     3. ``max_df`` stop-shingle cap: shingles appearing in more than
        ``max_df`` documents (boilerplate — "the terms of", markup
        fragments) are removed from the similarity space BEFORE the
@@ -472,16 +473,24 @@ def ngram_jaccard_pairs(df: DataFrame, column: str, id_col: str = "doc_id",
        posting list (a window over the postings would: the exact skew
        this cap exists to remove).  The surviving stop-shingle list is
        tiny (by construction: only shingles with df > max_df) →
-       broadcast left-anti join back onto the postings.  Set sizes are
-       recomputed over the SAME filtered space, so the reported value
-       is the exact Jaccard of the filtered shingle sets —
+       persisted, and broadcast left-anti joined back onto the postings.
+    4. Each surviving posting carries its document's set size ``sz``,
+       counted over the SAME filtered space, so the reported value is
+       the exact Jaccard of the filtered shingle sets —
        self-consistent semantics, not a truncated intersection over an
-       unfiltered union.
-    4. Self-join on shingle hash → per-pair intersection counts
-       (map-side partial agg), then two narrow joins against the
-       per-doc size table for ``|A∪B| = |A|+|B|-|A∩B|``.
+       unfiltered union.  The sized postings are persisted too, so the
+       size aggregate is planned once and both self-join sides read
+       one materialization.
+    5. Self-join on shingle hash with a length filter in the join
+       condition, then per-pair intersection counts grouped by
+       ``(id_a, id_b, sz_a, sz_b)`` (map-side partial agg) — no join
+       follows the aggregation: ``|A∪B| = |A|+|B|-|A∩B|`` is a
+       projection.  The length filter drops pairs whose size ratio
+       ``min(sz)/max(sz)`` — an upper bound of their Jaccard — falls
+       below ``min_jaccard`` by more than the 4-dp rounding of the
+       score can make up, so no pair the final filter keeps is dropped.
 
-    Every shuffle row in the pipeline is ``(long, long)`` (or the
+    Every shuffle row in the pipeline is a few longs (or the
     partially-aggregated ``(long, count)``).  Reference analogue: the
     fuzzy/duplicate checks
     of datatest's requirements (requirements.py:303-360) generalized
@@ -498,38 +507,46 @@ def ngram_jaccard_pairs(df: DataFrame, column: str, id_col: str = "doc_id",
     shingled = fan_out(df).select(F.col(id_col).alias("id"), sh.alias("sh"))
     postings = shingled.select("id", F.explode("sh").alias("g"))
     handle = CacheHandle(_HANDLES)
-    # persist the RAW postings: the df-count pass, the size table and
-    # both self-join sides all read this one materialization (the
-    # shingle split+hash runs once per document, period)
+    # persist the RAW postings: the df-count pass and the sized
+    # postings both read them, and without the persist the shingle
+    # split+hash would run once per reader
     postings = handle.register(postings.persist())
     if max_df is not None:
         # doc-frequency cap: partial-agg count (only (g, count) rows
         # shuffle; a window over the postings would buffer each hot
         # shingle's ENTIRE posting list on one task before filtering —
         # the exact skew the cap exists to remove), then broadcast the
-        # tiny df>max_df stop list as a left-anti join.  The anti join
-        # is a cheap map-side filter re-applied per consumer of the
-        # cached raw postings — no extra shuffle anywhere.
+        # tiny df>max_df stop list as a left-anti join — a map-side
+        # filter, no extra shuffle.  The stop list is persisted: the
+        # size pass and the sized postings both filter by it, and Spark
+        # would otherwise plan its aggregate once per reader
         stop = (
             postings.groupBy("g")
             .count()
             .filter(F.col("count") > max_df)
             .select("g")
         )
+        stop = handle.register(stop.persist())
         postings = postings.join(F.broadcast(stop), ["g"], "left_anti")
     sizes = postings.groupBy("id").agg(F.count("*").alias("sz"))
-    a = postings.select(F.col("id").alias("id_a"), "g")
-    b = postings.select(F.col("id").alias("id_b"), "g")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    sz_a = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
+    # both self-join sides read ONE persisted (id, g, sz) frame, so the
+    # size aggregate is planned (and compiled) once instead of once per
+    # join side
+    sized = handle.register(postings.join(sizes, "id").persist())
+    a = sized.select(F.col("id").alias("id_a"), "g", F.col("sz").alias("sz_a"))
+    b = sized.select(F.col("id").alias("id_b"), "g", F.col("sz").alias("sz_b"))
+    cond = F.col("id_a") < F.col("id_b")
+    if min_jaccard is not None:
+        # J <= min(sz)/max(sz), and round(J, 4) >= t needs
+        # J >= t - 0.00005; the wider margin absorbs float error, so
+        # no pair the final filter keeps is dropped here
+        cond = cond & (F.least("sz_a", "sz_b")
+                       >= F.greatest("sz_a", "sz_b") * (min_jaccard - 1e-4))
     out = (
-        inter.join(sz_a, "id_a").join(sz_b, "id_b")
+        a.join(b, "g")
+        .filter(cond)
+        .groupBy("id_a", "id_b", "sz_a", "sz_b")
+        .agg(F.count("*").alias("inter"))
         .select(
             "id_a", "id_b",
             F.round(

@@ -57,13 +57,13 @@ MAX_ROUNDS = 50
 
 #: edge count below which the component labelling runs as driver-side
 #: union-find instead of the iterative shuffle loop.  Same philosophy
-#: as Spark's own broadcast-join threshold: the first fingerprint
-#: action tells us |E| for free, and below ~1M edges (≤ ~2M label
-#: rows, tens of MB on the driver — the same order as a broadcast
-#: side) five shuffle rounds of fixed scheduling cost dwarf a linear
-#: O(E α(E)) pass on the driver.  Above the threshold the
-#: large-star/small-star loop runs unchanged — the 10^12-edge path
-#: never collects anything.
+#: as Spark's own broadcast-join threshold: a collect bounded to one
+#: edge more than the threshold tells which side |E| is on, and below
+#: ~1M edges (≤ ~2M label rows, tens of MB on the driver — the same
+#: order as a broadcast side) five shuffle rounds of fixed scheduling
+#: cost dwarf a linear O(E α(E)) pass on the driver.  Above the
+#: threshold the large-star/small-star loop runs unchanged — the
+#: 10^12-edge path collects at most threshold + 1 edges.
 UNION_FIND_MAX_EDGES = 1_000_000
 
 
@@ -174,51 +174,48 @@ def connected_components(pairs: DataFrame, src: str = "id_a",
     path ran).
 
     Physical strategy is picked by measured size, like Spark's
-    broadcast threshold: the first fingerprint action (needed anyway
-    for convergence detection) yields |E|; at or below
-    ``small_graph_threshold`` edges the labelling runs as one
-    driver-side union-find pass over a single collect (≤ ~32 MB at
-    the default), above it the large-star/small-star shuffle loop
-    runs.  Pass ``small_graph_threshold=0`` to force the distributed
-    loop (the tests do, to exercise both paths).
+    broadcast threshold: one bounded collect of at most
+    ``small_graph_threshold + 1`` canonical edges is the only action
+    of the small-graph path.  When it returns at most
+    ``small_graph_threshold`` edges they are the whole graph and the
+    labelling runs as one driver-side union-find pass over them (≤ ~32
+    MB at the default); otherwise the large-star/small-star shuffle
+    loop runs.  Pass ``small_graph_threshold=0`` to force the
+    distributed loop (the tests do, to exercise both paths).
     """
+    # persisted, not checkpointed: the bounded collect materializes
+    # it, so the large path reads the canonical edges back instead of
+    # recomputing the caller's pair pipeline, and the small path only
+    # releases it
+    edges = _canonical(
+        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    ).persist()
+    # collect(), not toPandas(): the row collect takes from as few
+    # partitions as it needs, where the Arrow collect of a limit first
+    # shuffles up to limit rows of EVERY partition to one task — on
+    # the large path that is threshold rows per partition
+    rows = edges.limit(max(small_graph_threshold, 0) + 1).collect()
+
+    if len(rows) <= small_graph_threshold:
+        edges.unpersist()
+        # the labels go back as Arrow columns: a local relation the JVM
+        # holds, so the joins that read it start no Python worker
+        labels = _union_find_labels(rows)
+        if stats is not None:
+            stats["rounds"] = 0
+            stats["edges"] = len(rows)
+        out_schema = edges.select(
+            F.col("a").alias("node"), F.col("a").alias("component")
+        ).schema
+        return local_frame(pairs.sparkSession, labels, out_schema)
+
+    del rows  # up to threshold rows the large path does not read
     # lazy checkpoints: the _fingerprint action that immediately
     # follows each one materializes it, so every round costs ONE Spark
     # job instead of two (eager checkpoint job + fingerprint job) —
     # lineage truncation is identical
-    edges = _canonical(
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    ).localCheckpoint(eager=False)
     fp = _fingerprint(edges)
     n_input = fp[0]
-
-    if n_input <= small_graph_threshold:
-        # one Arrow-accelerated columnar collect (toPandas) instead of
-        # toLocalIterator: the iterator fetches partitions SEQUENTIALLY
-        # (one mini-job each — dozens of scheduling round-trips for a
-        # graph this small); the edge list is ≤ threshold rows by the
-        # measured gate, so a single collect is bounded and ~10x faster.
-        # The labels go back the same way, as Arrow columns: a local
-        # relation the JVM holds, so the joins that read it start no
-        # Python worker
-        pdf = edges.toPandas()
-        labels = _union_find_labels(
-            zip(pdf["a"].tolist(), pdf["b"].tolist())
-        )
-        if stats is not None:
-            stats["rounds"] = 0
-            stats["edges"] = n_input
-        spark = pairs.sparkSession
-        out_schema = edges.select(
-            F.col("a").alias("node"), F.col("a").alias("component")
-        ).schema
-        out = local_frame(spark, labels, out_schema)
-        # the labels are driver-materialized — nothing downstream
-        # reads the checkpointed edge cache; release it now instead of
-        # pinning up to threshold-many cached rows per call
-        edges.unpersist()
-        return out
-
     rounds = 0
     while True:
         rounds += 1
@@ -271,86 +268,59 @@ def dedup_clusters(corpus: DataFrame, pairs: DataFrame,
     ``is_canonical`` marks the one row per cluster a keep-one-per-
     cluster pipeline retains (``df.where("is_canonical")``).
 
-    By default the canonical member is the minimum id (deterministic,
-    join-free).  Pass ``scores`` — a ``(id_col, score_col)`` frame,
-    e.g. :func:`~datatest_spark.operators.text.unigram_logprob` or
+    By default the canonical member is the minimum id.  Pass
+    ``scores`` — a ``(id_col, score_col)`` frame, e.g.
+    :func:`~datatest_spark.operators.text.unigram_logprob` or
     ``text_quality`` output — to keep the HIGHEST-quality member
-    instead (ties broken by min id).  The argmax runs on the label
-    frame only (documents that occur in a pair — small next to the
-    corpus), via one ``max_by``-style struct aggregate, never a window
-    over the corpus; scores are pruned to the label frame before the
-    aggregate.
+    instead (ties broken by min id; NULL and NaN scores rank as -inf,
+    and an id with several score rows ranks by its best one).  The
+    scores are pruned to the label frame (documents that occur in a
+    pair — small next to the corpus) by a join, never a window over
+    the corpus.
 
-    Scale shape: the component label frame is tiny relative to the
-    corpus (only documents that occur in a near-dup pair), so the
-    join back is a **broadcast hash join** candidate — AQE converts
-    it automatically when the pair graph is under the broadcast
+    Scale shape: one label-side aggregate per component computes both
+    ``cluster_size`` (distinct members) and the canonical member — one
+    ``min_by``-style struct aggregate over ``(-score, id)`` — and its
+    result rides on the label frame into ONE left join back onto the
+    corpus.  The label frame is tiny relative to the corpus, so that
+    join is a **broadcast hash join** candidate — AQE converts it
+    automatically when the pair graph is under the broadcast
     threshold; corpora where *most* documents are duplicates shuffle
-    on the 8-byte id, which is the floor.  ``cluster_size`` comes
-    from a groupBy on the label frame (small) broadcast-joined back,
-    never a window over the corpus.
+    on the 8-byte id, which is the floor.
     """
     labels = connected_components(
         pairs, src=src, dst=dst, stats=stats,
         small_graph_threshold=small_graph_threshold)
-    sizes = labels.groupBy("component").agg(
-        F.count(F.lit(1)).alias("__csize")
+    if scores is None:
+        scored, q = labels, F.lit(float("-inf"))
+    else:
+        scored = labels.join(
+            scores.select(F.col(id_col).alias("node"),
+                          F.col(score_col).cast("double").alias("__s")),
+            "node", "left")
+        q = F.coalesce(F.nanvl("__s", F.lit(None).cast("double")),
+                       F.lit(float("-inf")))
+    # min over (-score, id): the best score, ties to the min id (any
+    # orderable id type); -0.0 and 0.0 compare equal as in SQL `=`.
+    # The distinct count keeps an id with several score rows one member
+    best = scored.groupBy("component").agg(
+        F.count_distinct("node").alias("__csize"),
+        F.min(F.struct((-q).alias("k"), F.col("node").alias("n")))["n"]
+        .alias("__keep"),
     )
-    labeled = labels.join(sizes, "component").select(
-        F.col("node"), F.col("component"), F.col("__csize")
-    )
-    base = (
+    labeled = labels.join(best, "component")
+    out = (
         corpus.select(id_col)
         .join(labeled, corpus[id_col] == labeled["node"], "left")
         .select(
             F.col(id_col),
             F.coalesce("component", id_col).alias("cluster_id"),
             F.coalesce("__csize", F.lit(1)).alias("cluster_size"),
+            F.coalesce(
+                F.col(id_col) == F.col("__keep"),
+                F.col(id_col) == F.coalesce("component", id_col),
+            ).alias("is_canonical"),
         )
     )
-    if scores is None:
-        out = base.withColumn(
-            "is_canonical", F.col(id_col) == F.col("cluster_id"))
-    else:
-        # argmax(score, tie → min id) per component, computed on the
-        # small label frame; nulls score as -inf (never canonical
-        # unless the whole cluster is unscored, then min id wins)
-        sc = scores.select(
-            F.col(id_col).alias("node"),
-            F.coalesce(
-                F.col(score_col).cast("double"),
-                F.lit(float("-inf"))).alias("__q"),
-        )
-        scored = labels.join(sc, "node", "left").na.fill(
-            {"__q": float("-inf")})
-        best = scored.groupBy("component").agg(F.max("__q").alias("__bq"))
-        # min id among the max-score rows — exact float equality is
-        # safe (same value, same representation); works for string ids
-        # too, where a numeric negation tie-break would not
-        ranked = (
-            scored.join(best, "component")
-            .where(F.col("__q") == F.col("__bq"))
-            .groupBy("component")
-            .agg(F.min("node").alias("__keep"))
-            .select(
-                F.col("component").alias("cluster_id"), F.col("__keep"))
-        )
-        # no forced broadcast: `ranked` is one row per multi-member
-        # component — tiny on real graphs (AQE broadcasts it at runtime
-        # when it is), but unbounded at 10^12-clip scale where a forced
-        # hint would OOM the driver.  Strategy choice belongs to the
-        # measured-size machinery, same as the union-find gate.
-        out = (
-            base.join(ranked, "cluster_id", "left")
-            .select(
-                F.col(id_col),
-                F.col("cluster_id"),
-                F.col("cluster_size"),
-                F.coalesce(
-                    F.col(id_col) == F.col("__keep"),
-                    F.col(id_col) == F.col("cluster_id"),
-                ).alias("is_canonical"),
-            )
-        )
     out._cc_labels = labels  # keep checkpointed lineage reachable
     return out

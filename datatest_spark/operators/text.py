@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..schema import local_frame
@@ -168,16 +168,19 @@ def unigram_logprob(df: DataFrame, column: str, id_col: str = "doc_id",
     ``logprob_r`` (mean ln-prob, 4 dp), ``ppl_r`` (exp(-mean), 2 dp).
 
     Plan shape (scale notes): pass 1 is the word-count classic — one
-    ``groupBy(token)`` with map-side partial aggregation, persisted
-    just long enough to take (a) one tiny agg for the smoothing
-    scalars N and V and (b) the top-``vocab_size`` rows (TakeOrdered,
+    ``groupBy(token)`` with map-side partial aggregation, read by ONE
+    action: the top-``vocab_size`` collect (TakeOrdered,
     deterministic ``(count desc, token asc)`` tie-break) — a
-    driver-bounded collect of ≤ ``vocab_size`` pairs, a few MB.  Pass 2
-    re-scans the source (cheaper at corpus scale than materializing the
-    exploded token frame, which is strictly larger than its source),
-    broadcast-joins the vocabulary, and aggregates per document — one
-    shuffle keyed by ``id_col``.  Nothing anywhere is proportional to
-    corpus size except the two scans and the two shuffles.
+    driver-bounded collect of ≤ ``vocab_size`` pairs, a few MB.  The
+    smoothing scalars N and V ride on that collect as an observation
+    (``DataFrame.observe``) of every count row on its way into the
+    TakeOrdered, so the counts are neither persisted nor read twice.
+    Pass 2 re-scans the source (cheaper at corpus scale than
+    materializing the exploded token frame, which is strictly larger
+    than its source), broadcast-joins the vocabulary, and aggregates
+    per document — one shuffle keyed by ``id_col``.  Nothing anywhere
+    is proportional to corpus size except the two scans and the two
+    shuffles.
     """
     spark = df.sparkSession
     base = df.where(F.col(column).isNotNull())
@@ -186,18 +189,22 @@ def unigram_logprob(df: DataFrame, column: str, id_col: str = "doc_id",
         F.explode(_tokens(F.col(column))).alias("tok"),
     )
 
-    counts = tok.groupBy("tok").agg(F.count("*").alias("c")).persist()
-    try:
-        tot = counts.agg(F.sum("c").alias("n"),
-                         F.count("*").alias("v")).first()
-        n_total, v_full = int(tot["n"] or 0), int(tot["v"] or 0)
-        vocab_rows = [
-            (r["tok"], r["c"])
-            for r in counts.orderBy(F.desc("c"), F.asc("tok"))
-            .limit(int(vocab_size)).collect()
-        ]
-    finally:
-        counts.unpersist()
+    totals = Observation()
+    counts = tok.groupBy("tok").agg(F.count("*").alias("c")).observe(
+        totals, F.sum("c").alias("n"), F.count("*").alias("v"))
+    # at least one row, so the observation fires even for vocab_size=0
+    # (a limit(0) is optimized away with everything below it); a
+    # negative size fails in limit()
+    k = int(vocab_size)
+    vocab_rows = [
+        (r["tok"], r["c"])
+        for r in counts.orderBy(F.desc("c"), F.asc("tok"))
+        .limit(k or 1).collect()
+    ]
+    # no count rows ⇒ no tokens ⇒ nothing to score, and N = V = 0
+    tot = totals.get if vocab_rows else {}
+    n_total, v_full = int(tot.get("n") or 0), int(tot.get("v") or 0)
+    vocab_rows = vocab_rows[:k]
 
     denom = float(n_total + v_full + 1)
     vocab = local_frame(spark, vocab_rows, "tok string, c long")

@@ -32,12 +32,26 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     wide as the session's core count."""
     sc = df.sparkSession.sparkContext
     target = int(min_parts) if min_parts else sc.defaultParallelism
-    try:
-        # read the count on the JVM side: ``df.rdd`` would wrap the plan
-        # in a Python-row RDD only to ask it how many partitions it has
-        cur = df._jdf.rdd().getNumPartitions()
-    except Exception:  # pragma: no cover - defensive (unresolvable plan)
-        return df
-    if cur >= target:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the initial plan; nothing has run
+    if _num_partitions(plan) >= target:
         return df
     return df.repartition(target)
+
+
+def _num_partitions(plan) -> int:
+    """Partition count of a physical plan that has not run: the first
+    declared output partitioning down the plan, else the leaf's own RDD
+    (a file scan's splits).  ``df.rdd`` would instead build the whole
+    plan's RDD, compiling its generated code on the driver.  A union
+    sums its inputs; a broadcast input is not on the partition path."""
+    n = plan.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    kids = [plan.children().apply(i) for i in range(plan.children().size())]
+    kids = [k for k in kids
+            if k.getClass().getSimpleName() != "BroadcastExchangeExec"]
+    if not kids:
+        return plan.execute().getNumPartitions()
+    return sum(_num_partitions(k) for k in kids)

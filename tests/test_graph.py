@@ -1,5 +1,6 @@
 """connected_components / dedup_clusters vs a pure-Python union-find."""
 
+import math
 import random
 
 import pytest
@@ -156,3 +157,81 @@ class TestDedupClusters:
         rows = {r["doc_id"]: r for r in dedup_clusters(
             corpus, pairs, scores=scores).collect()}
         assert rows[1]["is_canonical"] and not rows[3]["is_canonical"]
+
+
+def reference_clusters(ids, edges, scores):
+    """Pure-Python dedup_clusters: doc id -> (cluster_id, size,
+    is_canonical), keeping the best score per cluster (NULL and NaN
+    rank as -inf, an id ranks by its best score row, ties to the min
+    id)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    best = {}
+    for d, s in scores:
+        s = float("-inf") if s is None or math.isnan(s) else s
+        best[d] = max(best.get(d, s), s)
+    members = {}
+    for x in parent:
+        members.setdefault(find(x), []).append(x)
+    out = {}
+    for d in ids:
+        if d not in parent:
+            out[d] = (d, 1, True)
+            continue
+        group = members[find(d)]
+        keep = min(group, key=lambda m: (-best.get(m, float("-inf")), m))
+        out[d] = (find(d), len(group), d == keep)
+    return out
+
+
+class TestDedupClustersScoredParity:
+    @pytest.mark.parametrize("threshold", [None, 0])
+    @pytest.mark.parametrize("case", ["long", "string", "random"])
+    def test_matches_reference(self, spark, case, threshold):
+        nan, inf = float("nan"), float("inf")
+        if case == "long":
+            ids = list(range(14))
+            edges = [(1, 4), (4, 6), (2, 7), (8, 9), (9, 10), (3, 11),
+                     (5, 5), (12, 13)]
+            # NaN beats nothing; -inf ties resolve to the min id; 10's
+            # best of two rows wins; -0.0 ties 0.0; NULL is -inf
+            scores = [(1, 0.1), (4, nan), (6, None), (2, 0.5), (7, 0.5),
+                      (0, 9.9), (8, -inf), (9, -inf), (10, -1.0),
+                      (10, 3.0), (3, 0.0), (11, -0.0), (11, -0.0),
+                      (13, inf)]
+            kind = "long"
+        elif case == "string":
+            ids = list("abcdxyz")
+            edges = [("b", "a"), ("c", "b"), ("x", "y")]
+            scores = [("a", 1.0), ("b", 2.0), ("c", 2.0), ("x", None),
+                      ("y", nan)]
+            kind = "string"
+        else:
+            rng = random.Random(5)
+            ids = list(range(60))
+            edges = [(rng.randrange(60), rng.randrange(60))
+                     for _ in range(50)]
+            scores = [(rng.randrange(60),
+                       rng.choice([None, nan, -inf, 1.0, 2.0, rng.random()]))
+                      for _ in range(90)]
+            kind = "long"
+        corpus = spark.createDataFrame([(d,) for d in ids], f"doc_id {kind}")
+        pairs = spark.createDataFrame(edges, f"id_a {kind}, id_b {kind}")
+        sc = spark.createDataFrame(scores, f"doc_id {kind}, score double")
+        kw = {} if threshold is None else {"small_graph_threshold": 0}
+        got = {r["doc_id"]: (r["cluster_id"], r["cluster_size"],
+                             r["is_canonical"])
+               for r in dedup_clusters(corpus, pairs, scores=sc,
+                                       **kw).collect()}
+        assert got == reference_clusters(
+            ids, [e for e in edges if e[0] != e[1]], scores)
